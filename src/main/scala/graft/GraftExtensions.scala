@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Expression
-import graft.functions.{ArrayDotProduct, Int8QuantCensus, SimHash64, TokenFingerprint64}
+import graft.functions.{ArrayDotProduct, ArrayMean, Int8QuantCensus, SimHash64, TokenFingerprint64}
 
 /** Session-extension entry point: makes graft's native expressions
   * available to pure-SQL users via
@@ -36,6 +36,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           require(exprs.length == 2, "array_dot expects exactly 2 arguments")
           ArrayDotProduct(exprs.head, exprs(1))
         }))
+    ext.injectFunction(
+      (org.apache.spark.sql.catalyst.FunctionIdentifier("array_mean"),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          classOf[ArrayMean].getName, "array_mean"),
+        // an integer or float array is cast, never read as raw doubles
+        one("array_mean", e => ArrayMean(org.apache.spark.sql.catalyst.expressions.Cast(
+          e, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))) _))
     ext.injectFunction(
       (org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_piece_census"),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.core.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors). Two tiers, mirroring how ANN actually deploys at scale:
@@ -24,8 +25,40 @@ object Similarity {
   private val NumQueries = 10 // query set: vec_id < 10
 
   private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    vectors(embeddings(spark, dir))
+
+  /** (vec_id, e) over a raw embeddings frame. */
+  private def vectors(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+
+  /** The raw `embeddings` table of `dir`. Its parquet schema is memoized
+    * per [[corpusKey]], so a repeat read of an unchanged corpus skips
+    * Spark's schema-inference job (one Spark job per read otherwise); a
+    * rewritten corpus lists differently and is inferred afresh. */
+  private[graft] def embeddings(spark: SparkSession, dir: String): DataFrame =
+    corpusKey(spark, dir) match {
+      case Some(key) if embSchemas.containsKey(key) =>
+        spark.read.schema(embSchemas.get(key)).parquet(key._1)
+      case key =>
+        val corpus = Tables(spark, dir, "embeddings")
+        key.foreach(embSchemas.putIfAbsent(_, corpus.schema))
+        corpus
+    }
+
+  /** A corpus's identity: its embeddings path and that path's file
+    * listing (name, length, modification time). None when the path
+    * cannot be listed — the read then fails with Spark's own error. */
+  private def corpusKey(spark: SparkSession,
+      dir: String): Option[(String, Seq[(String, Long, Long)])] = {
+    val path = s"$dir/embeddings.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p))
+      .toOption.map(fs => (path,
+        fs.toSeq.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted))
+  }
+
+  private val embSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, Long, Long)]), StructType]()
 
   /** s01: exact cosine top-k for each query vector. Deterministic
     * cross-engine ranking: order by round(cos, 6) then neighbor id. */
@@ -76,7 +109,7 @@ object Similarity {
     // events. Same corpus-relative cap + census as the Dedup band joins
     // (Dedup.capBandBuckets scaladoc has the full rationale).
     val capped = Dedup.capBandBuckets(all, Seq("bucket"),
-      Dedup.bandCap(Tables(spark, dir, "embeddings").count()))
+      Dedup.bandCap(embeddings(spark, dir).count()))
     // multi-probe: own bucket + every ≤2-bit flip (1 + n + n(n-1)/2 probes)
     val flips: Seq[Long] = 0L +:
       ((0 until NumPlanes).map(p => 1L << p) ++
@@ -102,7 +135,7 @@ object Similarity {
     * (same census aggregation, so the union can never misalign). */
   def s02BucketCensus(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).withColumn("bucket", bucketOf(col("e"), 64))
-    val cap = Dedup.bandCap(Tables(spark, dir, "embeddings").count())
+    val cap = Dedup.bandCap(embeddings(spark, dir).count())
     Dedup.bucketCensusOf(all, Seq("bucket"), cap, "s02_signlsh")
   }
 
@@ -138,7 +171,7 @@ object Similarity {
           col("n_hit").cast("double") / col("n_exact") >= RecallFloor).as("recall_ok"))
   }
 
-  private val IvfCentroids = 16
+  private[graft] val IvfCentroids = 16
   private val IvfProbes = 4
 
   /** s03: IVF-style ANN. Coarse quantizer = 16 deterministic seed
@@ -154,7 +187,7 @@ object Similarity {
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val n = Tables(spark, dir, "embeddings").count() // metadata count, cheap
+    val n = embeddings(spark, dir).count() // metadata count, cheap
     val stride = math.max(1L, n / IvfCentroids)
     val cents = all.filter(col("vec_id") % stride === 0 && col("vec_id") / stride < IvfCentroids)
       .select((col("vec_id") / stride).cast("int").as("cid"),
@@ -200,7 +233,7 @@ object Similarity {
 
   /** Argmax-cosine cell assignment via partial-aggregating max_by
     * (see s03) — shared by the seed and the refined IVF passes. */
-  private def assignCells(vecs: DataFrame, cents: DataFrame): DataFrame = {
+  private[graft] def assignCells(vecs: DataFrame, cents: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     vecs.crossJoin(broadcast(cents))
       .withColumn("cos_c", array_dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")))
@@ -217,63 +250,132 @@ object Similarity {
   private[graft] val LloydRounds = 3
 
   /** s04: IVF with a TRAINED quantizer — [[LloydRounds]] Lloyd rounds
-    * over the s03 seed centroids, expressed entirely as DataFrame
-    * aggregations so the whole pipeline (train + index + search) stays
-    * declarative and DuckDB-replayable:
+    * over the s03 seed centroids, then the declarative index + search:
     *
-    *   1. assign every vector to its argmax-cosine cell (max_by,
-    *      partial-aggregated — n-row shuffle);
+    *   1. assign every vector to its argmax-cosine cell — in-row, one
+    *      native `nearest_cosine` call per vector against the round's
+    *      centroids (no shuffle of the vectors);
     *   2. refine: each cell's new centroid is the element-wise MEAN of
-    *      its members — posexplode to (cid, dim, x), one hash agg, and
-    *      an array_sort(collect_list(struct(pos,v))) reassembly. The
-    *      mean components are rounded to 1e-6 IN BOTH ENGINES so
+    *      its members — one native `array_mean` aggregate keyed by
+    *      cell (K rows out), collected to the driver. The mean
+    *      components are rounded to 1e-6 IN BOTH ENGINES so
     *      float-summation order can't flip downstream comparisons;
     *   3. loop 1-2 per round, then re-assign the corpus to the final
-    *      centroids (the inverted file), probe nProbe=4 cells per
-    *      query, exact-rank.
+    *      centroids (the inverted file, [[assignCells]]), probe
+    *      nProbe=4 cells per query, exact-rank.
     *
     * At 100 TB this is the realistic IVF shape: training is a fixed
-    * number of map-reduce rounds over a sample (here: the corpus), the
-    * index is one shuffle by cell id, and search touches nProbe/K of
-    * the data. The oracle SQL is GENERATED per round ([[s04OracleSql]])
-    * — the CTE chain grows mechanically with the round count, so
-    * changing [[LloydRounds]] cannot desynchronize engine and oracle
-    * (round-3 judge item 6). Recall-vs-rounds on this corpus is
-    * measured by graft.tools.Measure and recorded in NOTES.md. */
+    * number of map-reduce rounds over a sample (here: the corpus), each
+    * one scan plus a K-row aggregate, the index is one shuffle by cell
+    * id, and search touches nProbe/K of the data. The oracle SQL is
+    * GENERATED per round ([[s04OracleSql]]) — the CTE chain grows
+    * mechanically with the round count, so changing [[LloydRounds]]
+    * cannot desynchronize engine and oracle (round-3 judge item 6).
+    * Recall-vs-rounds on this corpus is measured by graft.tools.Measure
+    * and recorded in NOTES.md. */
   def s04AnnIvfKmeans(spark: SparkSession, dir: String): DataFrame =
     s04WithRounds(spark, dir, LloydRounds)
 
   /** The trained coarse quantizer — stride seeds refined by `rounds`
     * Lloyd rounds (mean member vector per cell, element-wise, rounded
     * 1e-6 in both engines) — shared by s04 (k = [[IvfCentroids]]) and
-    * d11 (corpus-relative k, see [[d11CellCount]]). */
+    * d11 (corpus-relative k, see [[d11CellCount]]). A K-row local
+    * relation (cid, ce, cnrm), memoized per corpus ([[withModel]]). */
   private[graft] def trainedCentroids(
       spark: SparkSession, dir: String, rounds: Int,
-      k: Int = IvfCentroids): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val n = Tables(spark, dir, "embeddings").count() // metadata count, cheap
-    val stride = math.max(1L, n / k)
+      k: Int = IvfCentroids): DataFrame =
+    withModel(spark, dir, "flat", rounds, k)(c => Seq(trainFlat(c, rounds, k)))._2.head
+
+  /** The flat quantizer's rounds over a raw embeddings frame. */
+  private def trainFlat(corpus: DataFrame, rounds: Int, k: Int): ModelRows = {
+    import graft.functions.VectorFunctions.{array_dot, nearest_cosine}
+    val all = vectors(corpus)
+    val stride = math.max(1L, corpus.count() / k)
     val seeds = all.filter(col("vec_id") % stride === 0 && col("vec_id") / stride < k)
       .select((col("vec_id") / stride).cast("int").as("cid"),
-        col("e").as("ce"), col("nrm").as("cnrm"))
-    // Lloyd rounds: mean member vector per cell, element-wise
-    var cents = seeds
-    for (_ <- 1 to rounds)
-      cents = assignCells(all, cents)
-        .select(col("cid"), posexplode(col("e")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(round(avg(col("col")), 6).as("v"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-          x => x("v")).as("ce"))
-        .withColumn("cnrm", sqrt(array_dot(col("ce"), col("ce"))))
-    // the trained model is a K-row artifact referenced by every
-    // downstream tier (assignment, probe, oracle twins) — cache it so
-    // the Lloyd chain materializes ONCE per query instead of once per
-    // reference (plans re-evaluate an uncached subtree per reference);
-    // K rows, session-lifetime, deliberately never unpersisted
-    cents.cache()
+        col("e").as("ce"), sqrt(array_dot(col("e"), col("e"))).as("cnrm"))
+    lloyd(seeds, rounds, keys = 1) { cents =>
+      val model = centroidsOf(cents, keyed = false)
+      withNorms(cellMeans(
+        all.select(nearest_cosine(col("e"), lit(0), model).as("cid"), col("e")),
+        Seq("cid"), "e", "ce"), "ce")
+    }
+  }
+
+  /** A trained model's tables as driver rows: (schema, rows) each. */
+  private type ModelRows = (StructType, Seq[Row])
+
+  /** Driver-side memo of trained models, keyed by the corpus
+    * ([[corpusKey]], so a rewritten corpus retrains) and the trainer's
+    * arguments. With [[embeddings]]' schema memo, a hit starts no Spark
+    * job at all. The models are K rows each — the "centroids fit in RAM"
+    * assumption their broadcasts already make — and nothing is held in
+    * executor storage. */
+  private val trainedModels = new java.util.concurrent.ConcurrentHashMap[
+    ((String, Seq[(String, Long, Long)]), Seq[Any]), Seq[ModelRows]]()
+
+  /** Entries in [[trainedModels]] — the memo spec's seam. */
+  private[graft] def trainedModelCount: Int = trainedModels.size
+
+  /** Forget every trained model, so the next call retrains — the
+    * equivalence spec's seam for training under other session confs. */
+  private[graft] def clearTrainedModels(): Unit = trainedModels.clear()
+
+  /** The raw embeddings of `dir` and the model tables `train` builds
+    * from them, memoized per (corpus, `args`). Each table comes back as
+    * a one-partition local relation: no storage to release, and a
+    * persisted model table is one file. */
+  private def withModel(spark: SparkSession, dir: String, args: Any*)(
+      train: DataFrame => Seq[ModelRows]): (DataFrame, Seq[DataFrame]) = {
+    import scala.jdk.CollectionConverters._
+    val corpus = embeddings(spark, dir)
+    val tables = corpusKey(spark, dir).map(k => (k, args.toSeq)) match {
+      case Some(key) => Option(trainedModels.get(key)).getOrElse {
+        val trained = train(corpus)
+        trainedModels.putIfAbsent(key, trained)
+        trained
+      }
+      case None => train(corpus)
+    }
+    (corpus, tables.map { case (s, rows) => spark.createDataFrame(rows.asJava, s).coalesce(1) })
+  }
+
+  /** `rounds` Lloyd rounds from `seeds`: each round maps the current
+    * centroids (driver rows) to the next round's frame, whose rows are
+    * collected in turn. Rows are ordered by their `keys` leading int
+    * columns, and a row whose cell is NULL (members that met no
+    * centroid) is dropped. */
+  private def lloyd(seeds: DataFrame, rounds: Int, keys: Int)(
+      round: Seq[Row] => DataFrame): ModelRows = {
+    def rows(df: DataFrame): ModelRows = (df.schema, df.collect().toSeq
+      .filter(r => (0 until keys).forall(!r.isNullAt(_)))
+      .sortBy(r => (r.getInt(0), if (keys > 1) r.getInt(1) else 0)))
+    (1 to rounds).foldLeft(rows(seeds)) { case ((_, cents), _) => rows(round(cents)) }
+  }
+
+  /** The [[graft.functions.Centroids]] of model rows: (cid, vec, …) for
+    * a flat model, (key, cid, vec, …) for a keyed one. */
+  private def centroidsOf(rows: Seq[Row], keyed: Boolean): graft.functions.Centroids =
+    graft.functions.Centroids(rows.map(r =>
+      if (keyed) (r.getInt(0), r.getInt(1), r.getSeq[Double](2))
+      else (0, r.getInt(0), r.getSeq[Double](1))))
+
+  /** One refinement: each cell's centroid `out` is the element-wise mean
+    * of its members' vectors `v` (native `array_mean`, one K-row
+    * aggregate), rounded 1e-6 per component by Spark's `round` — the
+    * oracle's `round(avg(emb[i]), 6)`. `keys` are the cell columns. */
+  private def cellMeans(assigned: DataFrame, keys: Seq[String], v: String,
+      out: String): DataFrame = {
+    import graft.functions.VectorFunctions.array_mean
+    assigned.groupBy(keys.map(col): _*)
+      .agg(array_mean(col(v)).as("m"))
+      .select(keys.map(col) :+ transform(col("m"), x => round(x, 6)).as(out): _*)
+  }
+
+  /** Appends `cnrm` = ‖`c`‖ to a centroid frame. */
+  private def withNorms(cents: DataFrame, c: String): DataFrame = {
+    import graft.functions.VectorFunctions.array_dot
+    cents.withColumn("cnrm", sqrt(array_dot(col(c), col(c))))
   }
 
   private[graft] def s04WithRounds(
@@ -424,7 +526,7 @@ object Similarity {
   def d11SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val k = d11CellCount(Tables(spark, dir, "embeddings").count())
+    val k = d11CellCount(embeddings(spark, dir).count())
     // within-cell pairs only: the equi-join on cid IS the blocking;
     // shuffle_hash because K cells ⇒ K hot build sides, never a sort
     // (see semdedupCensus)
@@ -439,7 +541,7 @@ object Similarity {
   private[graft] def d11DroppedIds(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val k = d11CellCount(Tables(spark, dir, "embeddings").count())
+    val k = d11CellCount(embeddings(spark, dir).count())
     val assigned = assignCells(all, trainedCentroids(spark, dir, LloydRounds, k))
     val a = assigned.select(col("cid"), col("vec_id").as("ida"), col("e").as("ea"))
     val b = assigned.select(col("cid"), col("vec_id").as("idb"), col("e").as("eb"))
@@ -478,7 +580,7 @@ object Similarity {
   private[graft] def d12CensusAt(spark: SparkSession, dir: String,
       cellTarget: Long, rounds: Int): DataFrame = {
     val (k1, k2) = d12FactorsAt(
-      Tables(spark, dir, "embeddings").count(), cellTarget)
+      embeddings(spark, dir).count(), cellTarget)
     semdedupCensus(twoLevelAssign(spark, dir, k1, k2, rounds))
   }
 
@@ -489,7 +591,7 @@ object Similarity {
     * doubles, the standard "centroids fit in RAM" IVF assumption; the
     * max_by partial-aggregates so the shuffle carries n rows, not n·k2
     * (same rationale as [[assignCells]]). */
-  private def assignFine(vecs: DataFrame, cents: DataFrame): DataFrame = {
+  private[graft] def assignFine(vecs: DataFrame, cents: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     vecs.join(broadcast(cents), Seq("ccid"))
       .withColumn("cos_c", array_dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")))
@@ -500,13 +602,14 @@ object Similarity {
   }
 
   /** Two-level (coarse-then-fine) trained quantizer: k1 coarse cells
-    * from [[trainedCentroids]], then an independent k2-means WITHIN each
-    * coarse cell — fine seeds are the cell's members at deterministic
-    * rank strides (rank by vec_id within cell, every ⌊m/k2⌋-th member,
-    * the [[trainedCentroids]] stride-seed rule applied per cell), Lloyd
-    * refinement is the same posexplode/mean/reassemble aggregation
-    * grouped by (ccid, fcid), and every stage stays declarative so the
-    * DuckDB oracle replays it CTE-for-CTE ([[d12OracleSql]]). Returns
+    * ([[trainFlat]], the [[trainedCentroids]] rounds), then an
+    * independent k2-means WITHIN each coarse cell — fine seeds are the
+    * cell's members at deterministic rank strides (rank by vec_id within
+    * cell, every ⌊m/k2⌋-th member, the [[trainedCentroids]] stride-seed
+    * rule applied per cell), and a fine Lloyd round assigns each vector
+    * in-row among its own coarse cell's centroids, then averages per
+    * (ccid, fcid) — the same one-scan-one-aggregate round. The DuckDB
+    * oracle replays it CTE-for-CTE ([[d12OracleSql]]). Returns
     * (vec_id, e, nrm, cid) with the composite cid = ccid·k2 + fcid. */
   private[graft] def twoLevelAssign(spark: SparkSession, dir: String,
       k1: Int, k2: Int, rounds: Int): DataFrame =
@@ -515,40 +618,47 @@ object Similarity {
   /** The full two-level model — (coarse centroids (cid, ce, cnrm),
     * fine centroids (ccid, fcid, ce, cnrm), assignment (vec_id, e,
     * nrm, cid)) — so the SEARCH path (s06) can probe the same
-    * centroids the dedup census (d12) assigns with. */
+    * centroids the dedup census (d12) assigns with. Both centroid
+    * tables are memoized local relations ([[withModel]]); the
+    * assignment is the lazy [[assignCells]]/[[assignFine]] plan. */
   private[graft] def twoLevelModel(spark: SparkSession, dir: String,
       k1: Int, k2: Int, rounds: Int): (DataFrame, DataFrame, DataFrame) = {
     import graft.functions.VectorFunctions.array_dot
-    val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val ccents = trainedCentroids(spark, dir, rounds, k1)
+    val (corpus, Seq(ccents, fcents)) = withModel(spark, dir, "two-level", k1, k2, rounds) { c =>
+      val coarse = trainFlat(c, rounds, k1)
+      Seq(coarse, trainFine(vectors(c), centroidsOf(coarse._2, keyed = false), k2, rounds))
+    }
+    val all = vectors(corpus).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
     val coarse = assignCells(all, ccents)
       .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("ccid"))
+    val assigned = assignFine(coarse, fcents)
+      .select(col("vec_id"), col("e"), col("nrm"),
+        (col("ccid").cast("long") * k2 + col("fcid")).as("cid"))
+    (ccents, fcents, assigned)
+  }
+
+  /** The fine level of [[twoLevelModel]]: stride seeds within each coarse
+    * cell of `coarseModel`, refined by `rounds` keyed Lloyd rounds. */
+  private def trainFine(all: DataFrame, coarseModel: graft.functions.Centroids,
+      k2: Int, rounds: Int): ModelRows = {
+    import graft.functions.VectorFunctions.{array_dot, nearest_cosine}
+    val coarse = all.select(col("vec_id"), col("e"),
+      nearest_cosine(col("e"), lit(0), coarseModel).as("ccid"))
     val wRank = Window.partitionBy(col("ccid")).orderBy(col("vec_id"))
-    val ranked = coarse
+    val seeds = coarse
       .withColumn("rk", row_number().over(wRank).cast("long") - 1)
       .withColumn("m", count(lit(1)).over(Window.partitionBy(col("ccid"))))
       .withColumn("stride", greatest(lit(1L), expr(s"m div $k2")))
-    val seeds = ranked
       .filter(col("rk") % col("stride") === 0 && expr("rk div stride") < k2)
       .select(col("ccid"), expr("rk div stride").cast("int").as("fcid"),
-        col("e").as("ce"), col("nrm").as("cnrm"))
-    var cents = seeds
-    for (_ <- 1 to rounds)
-      cents = assignFine(coarse, cents)
-        .select(col("ccid"), col("fcid"), posexplode(col("e")))
-        .groupBy(col("ccid"), col("fcid"), col("pos"))
-        .agg(round(avg(col("col")), 6).as("v"))
-        .groupBy(col("ccid"), col("fcid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-          x => x("v")).as("ce"))
-        .withColumn("cnrm", sqrt(array_dot(col("ce"), col("ce"))))
-    // fine centroids are a k1·k2-row artifact — cache like
-    // trainedCentroids so the fine Lloyd chain runs once per query
-    cents = cents.cache()
-    val assigned = assignFine(coarse, cents)
-      .select(col("vec_id"), col("e"), col("nrm"),
-        (col("ccid").cast("long") * k2 + col("fcid")).as("cid"))
-    (ccents, cents, assigned)
+        col("e").as("ce"), sqrt(array_dot(col("e"), col("e"))).as("cnrm"))
+    lloyd(seeds, rounds, keys = 2) { cents =>
+      val model = centroidsOf(cents, keyed = true)
+      withNorms(cellMeans(
+        coarse.select(col("ccid"),
+          nearest_cosine(col("e"), col("ccid"), model).as("fcid"), col("e")),
+        Seq("ccid", "fcid"), "e", "ce"), "ce")
+    }
   }
 
   /** The SemDeDup within-cell census over an assignment — shared by d11
@@ -583,7 +693,7 @@ object Similarity {
     * only the two-level form is viable — is measured by
     * graft.tools.TwoLevelSweep (NOTES.md datapoint). */
   def d12SemanticDedup2Level(spark: SparkSession, dir: String): DataFrame = {
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
     semdedupCensus(twoLevelAssign(spark, dir, k1, k2, LloydRounds))
   }
 
@@ -676,7 +786,7 @@ object Similarity {
     * graft.tools.S06AtScale (NOTES.md round 11). */
   def s06AnnIvf2Level(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val wRank = Window.partitionBy(col("qid"))
@@ -730,7 +840,7 @@ object Similarity {
   private[graft] def s15At(spark: SparkSession, dir: String,
       budgetCells: Double): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val n = Tables(spark, dir, "embeddings").count()
+    val n = embeddings(spark, dir).count()
     val (k1, k2) = d12Factors(n)
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val budget = math.ceil(budgetCells * n / (k1.toLong * k2)).toLong
@@ -958,7 +1068,7 @@ object Similarity {
   def s05QuantizeCensus(spark: SparkSession, dir: String): DataFrame = {
     val c = graft.functions.VectorFunctions.int8_qcensus(
       col("embedding").cast("array<double>"))
-    Tables(spark, dir, "embeddings").select(
+    embeddings(spark, dir).select(
         col("vec_id"),
         element_at(c, 1).as("scale_micro"),
         element_at(c, 2).as("sum_qerr_micro"),
@@ -1022,40 +1132,35 @@ object Similarity {
   /** Per-subspace PQ codebooks — [[S07Codes]] codewords per subspace,
     * stride seeds (the s03 data-independent rule, applied to each
     * subspace's slice of the same seed vectors) refined by `rounds`
-    * Lloyd rounds. A round = encode (argmin-L2, partial-aggregated) +
-    * per-(sub, cid, dim) member mean rounded 1e-6 in both engines —
-    * the [[trainedCentroids]] machinery with `sub` as one more
-    * grouping column, so all M subquantizers train in the SAME two
-    * aggregations per round (one corpus pass each), never M separate
-    * jobs. */
+    * Lloyd rounds. A round = encode in-row (native `nearest_l2`: the
+    * [[s07Encode]] argmin-L2 among the subvector's own subspace's
+    * codewords) + per-(sub, cid) element-wise member mean rounded 1e-6
+    * in both engines — the [[trainedCentroids]] round with `sub` as
+    * the key, so all M subquantizers train in the SAME scan and
+    * aggregate per round, never M separate jobs. A memoized M·nCodes-row
+    * local relation (sub, cid, cv). */
   private[graft] def s07Codebooks(
       spark: SparkSession, dir: String, rounds: Int): DataFrame =
     s07CodebooksAt(spark, dir, rounds, S07Subspaces, S07Codes)
 
   /** [[s07Codebooks]] at explicit (m, nCodes) — the PqSweep seam. */
   private[graft] def s07CodebooksAt(spark: SparkSession, dir: String,
-      rounds: Int, m: Int, nCodes: Int): DataFrame = {
-    val sv = subvecsAt(spark, dir, m)
-    val n = Tables(spark, dir, "embeddings").count() // metadata count, cheap
-    val stride = math.max(1L, n / nCodes)
-    var cb = sv
-      .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < nCodes)
-      .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
-        col("v").as("cv"))
-    for (_ <- 1 to rounds)
-      cb = s07Encode(sv, cb)
-        .select(col("sub"), col("cid"), posexplode(col("v")))
-        .groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(round(avg(col("col")), 6).as("x"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("x")))),
-          t => t("x")).as("cv"))
-    // M·nCodes rows (128 by default) referenced by encode AND the
-    // query-side distance tables — cache for the same reason as
-    // trainedCentroids (one materialization per query, not per plan
-    // reference); never unpersisted
-    cb.cache()
-  }
+      rounds: Int, m: Int, nCodes: Int): DataFrame =
+    withModel(spark, dir, "pq", rounds, m, nCodes) { corpus =>
+      import graft.functions.VectorFunctions.nearest_l2
+      val sv = subvecsOf(vectors(corpus), m)
+      val stride = math.max(1L, corpus.count() / nCodes)
+      val seeds = sv
+        .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < nCodes)
+        .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
+          col("v").as("cv"))
+      Seq(lloyd(seeds, rounds, keys = 2) { cents =>
+        val model = centroidsOf(cents, keyed = true)
+        cellMeans(sv.select(col("sub"),
+            nearest_l2(col("v"), col("sub"), model).as("cid"), col("v")),
+          Seq("sub", "cid"), "v", "cv")
+      })
+    }._2.head
 
   /** s07: PRODUCT-QUANTIZATION ADC search (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011) — the
@@ -1104,7 +1209,7 @@ object Similarity {
     * (probe cells ∩ class postings); the brute-per-class form here is
     * the exact baseline of that composition. */
   def s08FilteredKnn(spark: SparkSession, dir: String): DataFrame = {
-    val all = Tables(spark, dir, "embeddings")
+    val all = embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         col("embedding").cast("array<double>").as("e"))
     val queries = all.filter(col("vec_id") < NumQueries)
@@ -1205,7 +1310,7 @@ object Similarity {
     * scale argument of each stage). */
   private def s09ScoredAt(spark: SparkSession, dir: String,
       fineProbes: Int): DataFrame = {
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val sv = subvecs(spark, dir)
     val cb = s07Codebooks(spark, dir, S07Rounds)
@@ -1391,7 +1496,7 @@ object Similarity {
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (codesT, ccT, fcT, cbT) = (s"graft_s11_codes_$tag", s"graft_s11_cc_$tag",
       s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val cb = s07Codebooks(spark, dir, S07Rounds)
     val codesByCell = s07Encode(subvecs(spark, dir), cb)
@@ -1425,7 +1530,7 @@ object Similarity {
     * applied to models); the gate proves exactly that, row for row. */
   def s11PersistedIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, dir)
-    val (_, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (_, k2) = d12Factors(embeddings(spark, dir).count())
     s11Search(spark, dir, codesT, ccT, fcT, cbT, k2)
   }
 
@@ -1536,10 +1641,10 @@ object Similarity {
     * (nBase, k2) — the frozen geometry every later fold/search reuses. */
   private[graft] def s12BuildBase(spark: SparkSession,
       dir: String): (String, String, String, String, Long, Int) = {
-    val n = Tables(spark, dir, "embeddings").count()
+    val n = embeddings(spark, dir).count()
     val nBase = n * S12BaseNum / S12BaseDen
     val baseDir = graft.core.IO.scratchDir("graft-s12")
-    Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
+    embeddings(spark, dir).filter(col("vec_id") < nBase)
       .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, baseDir)
     val (_, k2) = d12Factors(nBase)
@@ -1691,7 +1796,7 @@ object Similarity {
     * excludes the deleted ids, nothing else. */
   def s16DeletedIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, dir)
-    val (_, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (_, k2) = d12Factors(embeddings(spark, dir).count())
     val tombT = s16PersistTombstones(spark, s16Tombstones(spark, dir))
     s11Search(spark, dir, codesT, ccT, fcT, cbT, k2,
       tomb = Some(spark.table(tombT)))
@@ -2130,7 +2235,7 @@ object Similarity {
     * candidates touched only in probed cells. */
   def s19RangeSearch(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val hits = fprobes.join(assigned, Seq("cid"))
@@ -2348,7 +2453,7 @@ object Similarity {
       cellTarget: Long, fineProbes: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val (k1, k2) = d12FactorsAt(
-      Tables(spark, dir, "embeddings").count(), cellTarget)
+      embeddings(spark, dir).count(), cellTarget)
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val sv = subvecs(spark, dir)
     val cb = s07Codebooks(spark, dir, S07Rounds)
@@ -2683,19 +2788,19 @@ object Similarity {
   /** The walk's entry frontier — the top-`beamWidth` exact-ranked
     * members of the query's probed IVF cells (s06's scan, the
     * "coarse quantizer picks the entry points" discipline), from the
-    * same cached two-level model the graph build trained. Shared by
+    * same memoized two-level model the graph build trained. Shared by
     * s23 (raw-graph serve) and s25 (pruned-graph serve) so the two
     * gates differ in exactly one input: the edge set. */
   private[graft] def s23SeedFrontier(spark: SparkSession, dir: String,
       beamWidth: Int): DataFrame = {
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     s23SeedOver(probeCells(spark, dir, ccents, fcents, k2), assigned, beamWidth)
   }
 
   /** The seed over explicit probe/assignment frames — the at-scale
     * tool seam (S25AtScale probes through ITS OWN cell-target's
-    * model, the gate through the cached corpus-relative one). */
+    * model, the gate through the memoized corpus-relative one). */
   private[graft] def s23SeedOver(fprobes: DataFrame, assigned: DataFrame,
       beamWidth: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
@@ -3090,12 +3195,12 @@ object Similarity {
 
   private def s26BuildBaseUncached(spark: SparkSession, dir: String,
       cellTarget: Long, fineProbes: Int): S26Artifacts = {
-    val n = Tables(spark, dir, "embeddings").count()
+    val n = embeddings(spark, dir).count()
     val nBase = n * S12BaseNum / S12BaseDen
     val baseDir = graft.core.IO.scratchDir("graft-s26")
-    Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
+    embeddings(spark, dir).filter(col("vec_id") < nBase)
       .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-    // base graph + FROZEN base model (cached by the graph build)
+    // base graph + FROZEN base model (memoized by the graph build)
     // materialized once: every st18 micro-batch back-link pass and the
     // s26/e07 faces re-reference the base edge set
     val gBase = s22GraphAt(spark, baseDir, cellTarget, fineProbes, S22Pool)
@@ -3387,7 +3492,7 @@ object Similarity {
     servedOverEdges(s22KnnGraph(spark, dir)
         .select(col("src_id"), col("dst_id"))) { graph =>
     val all = emb(spark, dir)
-    val lbl = Tables(spark, dir, "embeddings")
+    val lbl = embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"))
     val qlbl = broadcast(lbl.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("label").as("qlabel")))
@@ -3395,7 +3500,7 @@ object Similarity {
     // seeds: the unfiltered s23 entry frontier + the label-matching
     // members of the probed cells (Filtered-DiskANN's per-label entry
     // points, re-expressed on the shared probe budget)
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val seedU = s23SeedOver(fprobes, assigned, S23Beam)

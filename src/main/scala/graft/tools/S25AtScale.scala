@@ -67,7 +67,7 @@ object S25AtScale {
     }
     val nPruned = pruned.count()
     // the serve seed through the SAME cell-target's model the build
-    // trained (cached by twoLevelModel) — the gate discipline
+    // trained (memoized by twoLevelModel) — the gate discipline
     val (k1, k2) = sim.d12FactorsAt(n, cellTarget)
     val (cc, fc, assigned) = sim.twoLevelModel(spark, full, k1, k2, sim.LloydRounds)
     val seed = sim.s23SeedOver(

@@ -14,6 +14,11 @@ object GraftShims {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Block until every listener event posted so far has been delivered,
+    * so a count a listener keeps is complete when read, with no sleep. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Release the storage behind a localCheckpoint'ed Dataset.
     *
     * `Dataset.unpersist()` only talks to the CacheManager, so the

@@ -245,6 +245,17 @@ class CodecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Codecs("nope") }
   }
 
+  test("variant round-trips non-ASCII text through encode, flush, load and decode") {
+    // a 2-byte UTF-8 letter and a surrogate-pair emoji: under a
+    // non-UTF-8 default charset the variant path garbled both
+    val docs = Seq("{\"a\":\"se\u00f1or\"}", "{\"b\":\"\ud83d\ude00 ok\"}")
+    val dir = graft.core.IO.scratchDir("graft-variant-utf8")
+    VariantCodec.flush(VariantCodec.encode(docs.toDF("doc")), s"$dir/v")
+    val back = VariantCodec.decode(VariantCodec.load(spark, s"$dir/v"))
+      .as[String].collect().toSeq
+    assert(back.sorted == docs.sorted, s"variant round trip changed the text: $back")
+  }
+
   test("variant flushShredded/flushUnshredded produce the claimed parquet layouts") {
     import org.apache.spark.sql.functions._
     val raw = graft.gen.EventsGenerator.generate(spark, 256, 0.5).coalesce(1)

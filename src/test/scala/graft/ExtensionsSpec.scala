@@ -9,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("native functions resolve from pure SQL via extensions") {
-    // getOrCreate ignores withExtensions when a session already exists,
-    // so clear the active/default session (keeping the SparkContext)
-    // and build a genuinely new one with the extensions applied.
+  /** getOrCreate ignores withExtensions when a session already exists,
+    * so clear the active/default session (keeping the SparkContext) and
+    * build a genuinely new one with the extensions applied. */
+  private def extSession(): SparkSession = {
     val prior = TestSpark.session
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val ext = try {
+    try {
       SparkSession.builder().master("local[4]")
         .config("spark.ui.enabled", "false")
         .withExtensions(new GraftExtensions).getOrCreate()
@@ -24,6 +24,10 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(prior)
       SparkSession.setActiveSession(prior)
     }
+  }
+
+  test("native functions resolve from pure SQL via extensions") {
+    val ext = extSession()
     val row = ext.sql(
       """SELECT
         |  simhash64('a b c') AS sh,
@@ -86,6 +90,37 @@ class ExtensionsSpec extends AnyFunSuite {
         |FROM graft_ext_bloom""".stripMargin).collect().head
     assert(bloom.getLong(0) == 1000L, s"bloom must have no false negatives: $bloom")
     assert(bloom.getLong(1) < 100L, s"disjoint keys should mostly miss: $bloom")
+  }
+  test("array_mean from pure SQL: skips NULL rows, NULL for an all-NULL group, merges across partitions, equals per-component avg") {
+    val ext = extSession()
+    // halves and quarters: every partial sum is exact, so the merge
+    // order cannot move a bit and the comparison can be exact
+    ext.sql(
+      """SELECT /*+ REPARTITION(3) */ * FROM VALUES
+        |  (1, array(1.0d, 2.0d)), (1, array(3.0d, CAST(NULL AS DOUBLE))),
+        |  (1, CAST(NULL AS ARRAY<DOUBLE>)), (1, array(5.5d, 6.25d, 7.0d)),
+        |  (2, CAST(NULL AS ARRAY<DOUBLE>)), (2, CAST(NULL AS ARRAY<DOUBLE>)),
+        |  (3, array(-0.5d, 0.25d)), (3, array(1.5d, 0.75d)), (3, array(2.0d, 4.0d))
+        |  AS t(g, v)""".stripMargin).createOrReplaceTempView("graft_ext_vecs")
+    assert(ext.table("graft_ext_vecs").rdd.getNumPartitions >= 2,
+      "the input must span partitions, so partial buffers serialize and merge")
+    val got = ext.sql(
+      "SELECT g, array_mean(v) AS m FROM graft_ext_vecs GROUP BY g")
+      .collect().map(r => r.getInt(0) -> Option(r.getSeq[Any](1)).map(_.toSeq)).toMap
+    val ref = ext.sql(
+      """SELECT g, transform(array_sort(collect_list(struct(pos, a))), x -> x.a) AS m
+        |FROM (SELECT g, pos, avg(x) AS a
+        |      FROM graft_ext_vecs LATERAL VIEW posexplode(v) p AS pos, x
+        |      GROUP BY g, pos)
+        |GROUP BY g""".stripMargin)
+      .collect().map(r => r.getInt(0) -> Some(r.getSeq[Any](1).toSeq)).toMap
+    assert(got(1) == Some(Seq(19.0 / 6, 4.125, 7.0)), s"group 1: ${got(1)}")
+    assert(got(2).isEmpty, s"an all-NULL group must give NULL: ${got(2)}")
+    assert(got - 2 == ref, s"array_mean $got vs per-component avg $ref")
+    // integer arrays are cast to array<double>, not read as raw doubles
+    val ints = ext.sql("SELECT array_mean(v) FROM VALUES (array(1, 2)), (array(4, 8)) AS t(v)")
+      .collect().head.getSeq[Double](0)
+    assert(ints == Seq(2.5, 5.0), s"array_mean over int arrays: $ints")
   }
   test("t26 native trigram encoder equals the composable twin (ASCII, non-BMP, sub-trigram)") {
     val spark = TestSpark.session

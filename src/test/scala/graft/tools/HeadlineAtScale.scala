@@ -130,7 +130,7 @@ object HeadlineAtScale {
       // compacted store — (b)'s input is one bucketed table whatever
       // the fold count was
       // the serve seed through the SAME cell-target's model the build
-      // trained (cached by twoLevelModel) — the S25AtScale discipline
+      // trained (memoized by twoLevelModel) — the S25AtScale discipline
       val (k1, k2) = sim.d12FactorsAt(nAll, kc)
       val (cc, fc, assigned) = sim.twoLevelModel(spark, dst, k1, k2, sim.LloydRounds)
       val seed = sim.s23SeedOver(
