@@ -2,6 +2,7 @@ package graft.codecs
 
 import graft.core.IO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Spark-native re-expression of the reference's codec surface.
   *
@@ -16,7 +17,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *  - `flush`   : encoded frame → ZSTD parquet (reference flush writes one
   *                Arrow RecordBatch; Spark writes one file per partition —
   *                same physical layout per partition, but scales out)
-  *  - `load`    : parquet → encoded frame
+  *  - `load`    : parquet → encoded frame, read with the codec's declared
+  *                `storedSchema` (no schema-inference job)
   *  - `get`     : dot-path point lookup against the *encoded* form, the
   *                reference's "query" benchmark (benches/query.rs) —
   *                result column is named "result" (string)
@@ -40,11 +42,19 @@ trait JsonCodec {
     */
   def get(encoded: DataFrame, path: Seq[String]): DataFrame
 
+  /** The parquet schema [[flush]] writes: the columns of [[encode]]'s
+    * output. CodecSpec pins it against Spark's own inference. */
+  def storedSchema: StructType
+
   def flush(encoded: DataFrame, path: String): Unit =
     IO.writeParquetZstd(encoded, path)
 
+  /** Reads ALL row groups (the reference's first-batch-only load, SURVEY
+    * §1.2, is a bug not replicated) with [[storedSchema]], so no
+    * schema-inference job runs. It trusts `path` to hold this codec's
+    * own flush: another codec's dir reads its missing columns as NULL. */
   def load(spark: SparkSession, path: String): DataFrame =
-    IO.readParquet(spark, path)
+    spark.read.schema(storedSchema).parquet(path)
 }
 
 /** Registry ≈ `Format::get_format` (/root/reference/src/format/formats.rs:16-24).

@@ -2,6 +2,7 @@ package graft.codecs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Tape codec on Spark: encode/decode/get over the 3-buffer tape struct.
   *
@@ -20,6 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object JsoncCodec extends JsonCodec {
   val name = "jsonc"
+  val storedSchema: StructType = JsoncEncodeExpr.schema
 
   def encode(raw: DataFrame): DataFrame =
     raw.select(JsoncFunctions.jsonc_encode(col("doc")).as("tape"))

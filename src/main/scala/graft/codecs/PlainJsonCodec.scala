@@ -2,6 +2,7 @@ package graft.codecs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Plain-text codec: store the raw JSON line as a single string column.
   *
@@ -17,6 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object PlainJsonCodec extends JsonCodec {
   val name = "plain_json"
+  val storedSchema: StructType = StructType.fromDDL("doc STRING")
 
   def encode(raw: DataFrame): DataFrame = raw.select(col("doc"))
 

@@ -16,12 +16,14 @@ import org.apache.spark.sql.types.StructType
   * whole shredder — Catalyst then gets real column pruning and predicate
   * pushdown on the shredded columns, which is exactly the capability the
   * reference's design is reaching toward (SURVEY §4). The reference's
-  * `load` is `unimplemented!()` (:130-132); ours is just a parquet read.
+  * `load` is `unimplemented!()` (:130-132); ours is a parquet read with
+  * the declared schema.
   *
   * @param schema  declared document schema (the reference hard-codes the
   *                events shape; we parameterize per dataset)
   */
 final class ShreddedCodec(val name: String, val schema: StructType) extends JsonCodec {
+  def storedSchema: StructType = schema
 
   /** FAILFAST ≈ the reference's panic on shred failure (variant.rs:95-97). */
   def encode(raw: DataFrame): DataFrame =

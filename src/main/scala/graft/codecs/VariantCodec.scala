@@ -2,6 +2,7 @@ package graft.codecs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Binary self-describing codec — Spark 4 `VariantType`.
   *
@@ -22,6 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object VariantCodec extends JsonCodec {
   val name = "variant"
+  /** VARIANT for either layout [[flush]] writes; PushVariantIntoScan
+    * still narrows `variant_get` to the shredded columns (PlanSpec). */
+  val storedSchema: StructType = StructType.fromDDL("v VARIANT")
 
   def encode(raw: DataFrame): DataFrame =
     raw.select(parse_json(col("doc")).as("v"))

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Central table readers for the driver testdata (TESTDATA.md).
   *
@@ -30,32 +30,43 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
+  /** `dir`'s `name` table, read through [[IO.readParquet]]'s schema memo. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else IO.readParquet(spark, s"$dir/$name.parquet")
 
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    storedEvents(spark, dir) match { case (raw, ts) => contractTs(raw, ts) }
+
+  /** `dir`'s events table as stored, and the type of its `ts` column,
+    * read from the memoized schema. */
+  private[graft] def storedEvents(spark: SparkSession, dir: String): (DataFrame, DataType) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = IO.readParquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
-      case LongType =>
-        // nanos layout. `ts div 1000`, NOT `ts / 1000`: Spark's `/` is
-        // double division and epoch nanos (~1.7e18) exceed double's
-        // 53-bit exact range, so the truncated quotient can land 1us
-        // below floor(ts/1000) — `div` stays in integer space.
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      // already the contract type — nothing to transform
-      case TimestampType => raw
+      case ts @ (LongType | TimestampNTZType | TimestampType) => (raw, ts)
       // any third driver-generation layout must fail HERE with the
       // observed type, not flow downstream untransformed and break 20
       // tests obscurely (the round-10 NANOS→MICROS drift lesson)
       case other => throw new IllegalStateException(
         s"events.parquet ts has unsupported type $other — " +
           "known layouts: INT64 nanos (LongType via nanosAsLong), " +
-          "TIMESTAMP(MICROS) NTZ, TimestampType. Update Tables.events " +
-          "(and StreamingOps.readEvents) for the new driver layout.")
+          "TIMESTAMP(MICROS) NTZ, TimestampType. Update Tables.storedEvents " +
+          "for the new layout.")
     }
+  }
+
+  /** `df` with its `ts` column, of stored type `ts`, rebuilt as the
+    * contract's TimestampType. */
+  private[graft] def contractTs(df: DataFrame, ts: DataType): DataFrame = ts match {
+    case LongType =>
+      // nanos layout. `ts div 1000`, NOT `ts / 1000`: Spark's `/` is
+      // double division and epoch nanos (~1.7e18) exceed double's
+      // 53-bit exact range, so the truncated quotient can land 1us
+      // below floor(ts/1000) — `div` stays in integer space.
+      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+    // already the contract type — nothing to transform
+    case _ => df
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{IO, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,40 +25,11 @@ object Similarity {
   private val NumQueries = 10 // query set: vec_id < 10
 
   private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
-    vectors(embeddings(spark, dir))
+    vectors(Tables(spark, dir, "embeddings"))
 
   /** (vec_id, e) over a raw embeddings frame. */
   private def vectors(corpus: DataFrame): DataFrame =
     corpus.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-
-  /** The raw `embeddings` table of `dir`. Its parquet schema is memoized
-    * per [[corpusKey]], so a repeat read of an unchanged corpus skips
-    * Spark's schema-inference job (one Spark job per read otherwise); a
-    * rewritten corpus lists differently and is inferred afresh. */
-  private[graft] def embeddings(spark: SparkSession, dir: String): DataFrame =
-    corpusKey(spark, dir) match {
-      case Some(key) if embSchemas.containsKey(key) =>
-        spark.read.schema(embSchemas.get(key)).parquet(key._1)
-      case key =>
-        val corpus = Tables(spark, dir, "embeddings")
-        key.foreach(embSchemas.putIfAbsent(_, corpus.schema))
-        corpus
-    }
-
-  /** A corpus's identity: its embeddings path and that path's file
-    * listing (name, length, modification time). None when the path
-    * cannot be listed — the read then fails with Spark's own error. */
-  private def corpusKey(spark: SparkSession,
-      dir: String): Option[(String, Seq[(String, Long, Long)])] = {
-    val path = s"$dir/embeddings.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
-    scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p))
-      .toOption.map(fs => (path,
-        fs.toSeq.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted))
-  }
-
-  private val embSchemas = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)]), StructType]()
 
   /** s01: exact cosine top-k for each query vector. Deterministic
     * cross-engine ranking: order by round(cos, 6) then neighbor id. */
@@ -109,7 +80,7 @@ object Similarity {
     // events. Same corpus-relative cap + census as the Dedup band joins
     // (Dedup.capBandBuckets scaladoc has the full rationale).
     val capped = Dedup.capBandBuckets(all, Seq("bucket"),
-      Dedup.bandCap(embeddings(spark, dir).count()))
+      Dedup.bandCap(Tables(spark, dir, "embeddings").count()))
     // multi-probe: own bucket + every ≤2-bit flip (1 + n + n(n-1)/2 probes)
     val flips: Seq[Long] = 0L +:
       ((0 until NumPlanes).map(p => 1L << p) ++
@@ -135,7 +106,7 @@ object Similarity {
     * (same census aggregation, so the union can never misalign). */
   def s02BucketCensus(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).withColumn("bucket", bucketOf(col("e"), 64))
-    val cap = Dedup.bandCap(embeddings(spark, dir).count())
+    val cap = Dedup.bandCap(Tables(spark, dir, "embeddings").count())
     Dedup.bucketCensusOf(all, Seq("bucket"), cap, "s02_signlsh")
   }
 
@@ -187,7 +158,7 @@ object Similarity {
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val n = embeddings(spark, dir).count() // metadata count, cheap
+    val n = Tables(spark, dir, "embeddings").count() // metadata count, cheap
     val stride = math.max(1L, n / IvfCentroids)
     val cents = all.filter(col("vec_id") % stride === 0 && col("vec_id") / stride < IvfCentroids)
       .select((col("vec_id") / stride).cast("int").as("cid"),
@@ -306,9 +277,9 @@ object Similarity {
   private type ModelRows = (StructType, Seq[Row])
 
   /** Driver-side memo of trained models, keyed by the corpus
-    * ([[corpusKey]], so a rewritten corpus retrains) and the trainer's
-    * arguments. With [[embeddings]]' schema memo, a hit starts no Spark
-    * job at all. The models are K rows each — the "centroids fit in RAM"
+    * ([[IO.listing]], so a rewritten corpus retrains) and the trainer's
+    * arguments. With [[IO.readParquet]]'s schema memo, a hit starts no
+    * Spark job at all. The models are K rows each — the "centroids fit in RAM"
     * assumption their broadcasts already make — and nothing is held in
     * executor storage. */
   private val trainedModels = new java.util.concurrent.ConcurrentHashMap[
@@ -328,8 +299,8 @@ object Similarity {
   private def withModel(spark: SparkSession, dir: String, args: Any*)(
       train: DataFrame => Seq[ModelRows]): (DataFrame, Seq[DataFrame]) = {
     import scala.jdk.CollectionConverters._
-    val corpus = embeddings(spark, dir)
-    val tables = corpusKey(spark, dir).map(k => (k, args.toSeq)) match {
+    val corpus = Tables(spark, dir, "embeddings")
+    val tables = IO.listing(spark, s"$dir/embeddings.parquet").map(k => (k, args.toSeq)) match {
       case Some(key) => Option(trainedModels.get(key)).getOrElse {
         val trained = train(corpus)
         trainedModels.putIfAbsent(key, trained)
@@ -526,7 +497,7 @@ object Similarity {
   def d11SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val k = d11CellCount(embeddings(spark, dir).count())
+    val k = d11CellCount(Tables(spark, dir, "embeddings").count())
     // within-cell pairs only: the equi-join on cid IS the blocking;
     // shuffle_hash because K cells ⇒ K hot build sides, never a sort
     // (see semdedupCensus)
@@ -541,7 +512,7 @@ object Similarity {
   private[graft] def d11DroppedIds(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val k = d11CellCount(embeddings(spark, dir).count())
+    val k = d11CellCount(Tables(spark, dir, "embeddings").count())
     val assigned = assignCells(all, trainedCentroids(spark, dir, LloydRounds, k))
     val a = assigned.select(col("cid"), col("vec_id").as("ida"), col("e").as("ea"))
     val b = assigned.select(col("cid"), col("vec_id").as("idb"), col("e").as("eb"))
@@ -580,7 +551,7 @@ object Similarity {
   private[graft] def d12CensusAt(spark: SparkSession, dir: String,
       cellTarget: Long, rounds: Int): DataFrame = {
     val (k1, k2) = d12FactorsAt(
-      embeddings(spark, dir).count(), cellTarget)
+      Tables(spark, dir, "embeddings").count(), cellTarget)
     semdedupCensus(twoLevelAssign(spark, dir, k1, k2, rounds))
   }
 
@@ -693,7 +664,7 @@ object Similarity {
     * only the two-level form is viable — is measured by
     * graft.tools.TwoLevelSweep (NOTES.md datapoint). */
   def d12SemanticDedup2Level(spark: SparkSession, dir: String): DataFrame = {
-    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
+    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     semdedupCensus(twoLevelAssign(spark, dir, k1, k2, LloydRounds))
   }
 
@@ -786,7 +757,7 @@ object Similarity {
     * graft.tools.S06AtScale (NOTES.md round 11). */
   def s06AnnIvf2Level(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
+    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val wRank = Window.partitionBy(col("qid"))
@@ -840,7 +811,7 @@ object Similarity {
   private[graft] def s15At(spark: SparkSession, dir: String,
       budgetCells: Double): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val n = embeddings(spark, dir).count()
+    val n = Tables(spark, dir, "embeddings").count()
     val (k1, k2) = d12Factors(n)
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val budget = math.ceil(budgetCells * n / (k1.toLong * k2)).toLong
@@ -1068,7 +1039,7 @@ object Similarity {
   def s05QuantizeCensus(spark: SparkSession, dir: String): DataFrame = {
     val c = graft.functions.VectorFunctions.int8_qcensus(
       col("embedding").cast("array<double>"))
-    embeddings(spark, dir).select(
+    Tables(spark, dir, "embeddings").select(
         col("vec_id"),
         element_at(c, 1).as("scale_micro"),
         element_at(c, 2).as("sum_qerr_micro"),
@@ -1209,7 +1180,7 @@ object Similarity {
     * (probe cells ∩ class postings); the brute-per-class form here is
     * the exact baseline of that composition. */
   def s08FilteredKnn(spark: SparkSession, dir: String): DataFrame = {
-    val all = embeddings(spark, dir)
+    val all = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label").cast("long").as("label"),
         col("embedding").cast("array<double>").as("e"))
     val queries = all.filter(col("vec_id") < NumQueries)
@@ -1310,7 +1281,7 @@ object Similarity {
     * scale argument of each stage). */
   private def s09ScoredAt(spark: SparkSession, dir: String,
       fineProbes: Int): DataFrame = {
-    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
+    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val sv = subvecs(spark, dir)
     val cb = s07Codebooks(spark, dir, S07Rounds)
@@ -1496,7 +1467,7 @@ object Similarity {
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (codesT, ccT, fcT, cbT) = (s"graft_s11_codes_$tag", s"graft_s11_cc_$tag",
       s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
-    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
+    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val cb = s07Codebooks(spark, dir, S07Rounds)
     val codesByCell = s07Encode(subvecs(spark, dir), cb)
@@ -1530,7 +1501,7 @@ object Similarity {
     * applied to models); the gate proves exactly that, row for row. */
   def s11PersistedIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, dir)
-    val (_, k2) = d12Factors(embeddings(spark, dir).count())
+    val (_, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     s11Search(spark, dir, codesT, ccT, fcT, cbT, k2)
   }
 
@@ -1641,10 +1612,10 @@ object Similarity {
     * (nBase, k2) — the frozen geometry every later fold/search reuses. */
   private[graft] def s12BuildBase(spark: SparkSession,
       dir: String): (String, String, String, String, Long, Int) = {
-    val n = embeddings(spark, dir).count()
+    val n = Tables(spark, dir, "embeddings").count()
     val nBase = n * S12BaseNum / S12BaseDen
     val baseDir = graft.core.IO.scratchDir("graft-s12")
-    embeddings(spark, dir).filter(col("vec_id") < nBase)
+    Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
       .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, baseDir)
     val (_, k2) = d12Factors(nBase)
@@ -1796,7 +1767,7 @@ object Similarity {
     * excludes the deleted ids, nothing else. */
   def s16DeletedIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, dir)
-    val (_, k2) = d12Factors(embeddings(spark, dir).count())
+    val (_, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val tombT = s16PersistTombstones(spark, s16Tombstones(spark, dir))
     s11Search(spark, dir, codesT, ccT, fcT, cbT, k2,
       tomb = Some(spark.table(tombT)))
@@ -2235,7 +2206,7 @@ object Similarity {
     * candidates touched only in probed cells. */
   def s19RangeSearch(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
+    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val hits = fprobes.join(assigned, Seq("cid"))
@@ -2453,7 +2424,7 @@ object Similarity {
       cellTarget: Long, fineProbes: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val (k1, k2) = d12FactorsAt(
-      embeddings(spark, dir).count(), cellTarget)
+      Tables(spark, dir, "embeddings").count(), cellTarget)
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val sv = subvecs(spark, dir)
     val cb = s07Codebooks(spark, dir, S07Rounds)
@@ -2793,7 +2764,7 @@ object Similarity {
     * gates differ in exactly one input: the edge set. */
   private[graft] def s23SeedFrontier(spark: SparkSession, dir: String,
       beamWidth: Int): DataFrame = {
-    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
+    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     s23SeedOver(probeCells(spark, dir, ccents, fcents, k2), assigned, beamWidth)
   }
@@ -3195,10 +3166,10 @@ object Similarity {
 
   private def s26BuildBaseUncached(spark: SparkSession, dir: String,
       cellTarget: Long, fineProbes: Int): S26Artifacts = {
-    val n = embeddings(spark, dir).count()
+    val n = Tables(spark, dir, "embeddings").count()
     val nBase = n * S12BaseNum / S12BaseDen
     val baseDir = graft.core.IO.scratchDir("graft-s26")
-    embeddings(spark, dir).filter(col("vec_id") < nBase)
+    Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
       .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
     // base graph + FROZEN base model (memoized by the graph build)
     // materialized once: every st18 micro-batch back-link pass and the
@@ -3492,7 +3463,7 @@ object Similarity {
     servedOverEdges(s22KnnGraph(spark, dir)
         .select(col("src_id"), col("dst_id"))) { graph =>
     val all = emb(spark, dir)
-    val lbl = embeddings(spark, dir)
+    val lbl = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label").cast("long").as("label"))
     val qlbl = broadcast(lbl.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("label").as("qlabel")))
@@ -3500,7 +3471,7 @@ object Similarity {
     // seeds: the unfiltered s23 entry frontier + the label-matching
     // members of the probed cells (Filtered-DiskANN's per-label entry
     // points, re-expressed on the shared probe budget)
-    val (k1, k2) = d12Factors(embeddings(spark, dir).count())
+    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val seedU = s23SeedOver(fprobes, assigned, S23Beam)

@@ -19,48 +19,20 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamingOps {
 
-  /** Events schema as the streaming source sees it, parameterized on
-    * the on-disk `ts` layout (raw nanos long vs TIMESTAMP_NTZ — see
-    * graft.core.Tables for the two driver generations). */
-  private def eventsSchema(tsDdl: String): StructType = StructType.fromDDL(
-    s"event_id BIGINT, ts $tsDdl, user_id BIGINT, event_type STRING, " +
-      "value DOUBLE, props STRING")
-
   /** Streaming source over the events parquet with a proper timestamp.
     * The file-stream source requires a DIRECTORY; the testdata ships one
     * file per table, so glob-filter the sf dir down to events.parquet
     * (a production events feed would be a directory of files anyway).
-    * A one-file batch probe picks the on-disk `ts` layout; the contract
-    * out of this reader matches core.Tables.events: TimestampType at
-    * microsecond precision. */
+    * The stored schema, `ts` layout included, is core.Tables' memoized
+    * one; the contract out of this reader matches core.Tables.events:
+    * TimestampType at microsecond precision. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // explicit 3-way layout match, mirroring core.Tables.events: a
-    // third driver-generation layout must fail HERE with the observed
-    // type, not stream mis-declared schema downstream (round-10 drift
-    // lesson, ADVICE round 10)
-    val tsDdl = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType match {
-      case LongType         => "BIGINT"
-      case TimestampNTZType => "TIMESTAMP_NTZ"
-      case TimestampType    => "TIMESTAMP"
-      case other => throw new IllegalStateException(
-        s"events.parquet ts has unsupported type $other — " +
-          "known layouts: INT64 nanos, TIMESTAMP(MICROS) NTZ, " +
-          "TimestampType. Update StreamingOps.readEvents " +
-          "(and core.Tables.events) for the new driver layout.")
-    }
+    val (stored, ts) = graft.core.Tables.storedEvents(spark, dir)
     val src = spark.readStream
-      .schema(eventsSchema(tsDdl))
+      .schema(stored.schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
-    if (tsDdl == "BIGINT")
-      // integer `div`, same rationale as core.Tables.events
-      src.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else
-      src.withColumn("ts",
-        col("ts").cast(org.apache.spark.sql.types.TimestampType))
+    graft.core.Tables.contractTs(src, ts)
   }
 
   /** 5-minute tumbling window counts per event type with a 10-minute

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 
 /** Dev-only measurement harness (guide §1): run named SparkEntry queries
   * once (after a discarded warmup) with a listener that attributes wall
@@ -31,6 +31,7 @@ object ProfileQ {
         var nStages: Int = 0, var nTasks: Int = 0, var taskMs: Long = 0L,
         desc: String)
     val jobs = new scala.collection.concurrent.TrieMap[Int, JobRec]()
+    val stageJob = new scala.collection.concurrent.TrieMap[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val d = Option(e.properties)
@@ -38,15 +39,16 @@ object ProfileQ {
           .orElse(Option(e.properties)
             .flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("")
+        e.stageIds.foreach(stageJob.put(_, e.jobId))
         jobs.put(e.jobId, JobRec(e.jobId, e.time, desc = d))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.get(e.jobId).foreach(_.end = e.time)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
-        // attribute the stage to whichever job is still open (local mode
-        // runs gate queries sequentially, so the open-job heuristic holds)
-        jobs.values.toSeq.sortBy(-_.start).find(j => j.end < 0).foreach { j =>
+        // the job whose JobStart listed the stage, not a guess at
+        // whichever job is open (AQE and broadcasts overlap jobs)
+        stageJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
           j.nStages += 1
           j.nTasks += si.numTasks
           j.taskMs += si.taskMetrics.executorRunTime
@@ -65,13 +67,15 @@ object ProfileQ {
         case Some(fn) =>
           try once(fn) catch { case e: Throwable =>
             println(s"WARMUP FAIL $name: ${e.getMessage}") }
+          // the warmup's queued events must not reach the listener
+          GraftShims.drainListenerBus(spark)
           jobs.clear()
+          stageJob.clear()
           spark.sparkContext.addSparkListener(listener)
           val t0 = System.currentTimeMillis()
           val sec = try once(fn) catch { case e: Throwable =>
             println(s"RUN FAIL $name: ${e.getMessage}"); -1.0 }
-          // let straggling listener events drain
-          Thread.sleep(300)
+          GraftShims.drainListenerBus(spark)
           spark.sparkContext.removeSparkListener(listener)
           val rows = jobs.values.toSeq.sortBy(_.start)
           println(f"PROFILE $name total=$sec%.3f s  jobs=${rows.size}")

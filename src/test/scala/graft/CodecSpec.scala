@@ -4,6 +4,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.codecs._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-trip + path-lookup parity tests mirroring the reference's own
@@ -95,6 +96,40 @@ class CodecSpec extends AnyFunSuite {
       val out = codec.decode(loaded).as[String].collect()
       assert(out.length == 3, name)
       out.foreach(o => assert(flatDocs.exists(d => jsonEq(o, d)), s"$name: $o"))
+    }
+  }
+
+  /** `t` with every field, element and value nullable — the form a
+    * parquet read gives any schema. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  test("every codec's storedSchema is the schema Spark infers from its flush") {
+    // events docs plus aux docs with nulls, arrays and mixed types; the
+    // aux docs keep the shredded fields well-typed so FAILFAST accepts them
+    val aux = Seq(
+      """{"level":null,"msg":"disk full","tags":["io","disk"],"n":null}""",
+      """{"tags":[],"value":17,"nested":{"a":[1,2.5,"x",null,{"b":false}]}}""",
+      """{"value":"seventeen","name":"aux","attributes":{"event_attributes":-0.5}}""",
+      """{"value":[true,null],"timestamp":null,"attributes":null}""",
+      """{"value":{"k":"v"},"ids":[12345678901234567,1.0e-7],"empty":{}}""",
+      "{\"s\":\"se\u00f1or \ud83d\ude00\"}")
+    val raw = graft.gen.EventsGenerator.generate(spark, 256, 0.5).unionByName(aux.toDF("doc"))
+    val dir = graft.core.IO.scratchDir("graft-stored")
+    for ((name, codec) <- Codecs.all) {
+      codec.flush(codec.encode(raw), s"$dir/$name")
+      val inferred = spark.read.parquet(s"$dir/$name")
+      assert(nullable(codec.storedSchema) == inferred.schema,
+        s"$name declares ${codec.storedSchema.simpleString}, flush wrote ${inferred.schema.simpleString}")
+      val declared = codec.decode(codec.load(spark, s"$dir/$name")).as[String].collect().toSeq
+      assert(declared.length == 256 + aux.length, name)
+      assert(declared == codec.decode(inferred).as[String].collect().toSeq,
+        s"$name: the declared-schema load decodes differently from the inferred read")
     }
   }
 

@@ -182,6 +182,20 @@ class PlanSpec extends AnyFunSuite {
     assert(viaShred == direct)
   }
 
+  test("variant codec load: the declared VARIANT schema still scans the typed column") {
+    import org.apache.spark.sql.functions._
+    val raw = graft.core.Tables.events(spark, sf).select(col("props").as("doc"))
+    val dir = graft.core.IO.scratchDir("graft-shred-load")
+    graft.codecs.VariantCodec.flush(graft.codecs.VariantCodec.encode(raw), s"$dir/v")
+    val q = graft.codecs.VariantCodec.load(spark, s"$dir/v")
+      .select(variant_get(col("v"), "$.k", "string").as("k"))
+      .filter(col("k").isNotNull)
+    val p = formatted(q)
+    assert(p.contains("v:struct<") && !p.contains("v:variant"),
+      s"a load with the declared schema should read the shredded typed column:\n$p")
+    assert(p.contains("IsNotNull(v.`"), s"typed-field filter not pushed:\n$p")
+  }
+
   test("p03 bucketed join: no exchange feeds the join (bucket co-location)") {
     val df = operators.Sinks.p03BucketedJoin(spark, sf)
     val p = plan(df)
