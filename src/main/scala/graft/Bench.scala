@@ -368,7 +368,7 @@ object Bench {
     val phaseSplits: Seq[(String, Seq[(String, Double)])] = {
       val sim = graft.operators.Similarity
       val s11 = try {
-        val n = graft.core.Tables(spark, sfDir, "embeddings").count()
+        val n = graft.core.Tables.count(spark, sfDir, "embeddings")
         val (_, k2) = sim.d12Factors(n)
         var t: (String, String, String, String) = null
         val b = time { t = sim.s11BuildIndex(spark, sfDir) }
@@ -403,7 +403,7 @@ object Bench {
         val b = time {
           g = sim.s22KnnGraph(spark, sfDir)
             .select(col("src_id"), col("dst_id"))
-          val n = graft.core.Tables(spark, sfDir, "embeddings").count()
+          val n = graft.core.Tables.count(spark, sfDir, "embeddings")
           val (k1, k2) = sim.d12Factors(n)
           val (cc, fc, assigned) =
             sim.twoLevelModel(spark, sfDir, k1, k2, sim.LloydRounds)

@@ -35,6 +35,23 @@ object Tables {
     if (name == "events") events(spark, dir)
     else IO.readParquet(spark, s"$dir/$name.parquet")
 
+  /** `dir`'s `name` table's row count, memoized per path and
+    * [[IO.listing]] as [[IO.readParquet]]'s schema is: a repeat count
+    * of an unchanged table starts no job, and a rewritten one is
+    * counted afresh. */
+  def count(spark: SparkSession, dir: String, name: String): Long =
+    IO.listing(spark, s"$dir/$name.parquet") match {
+      case Some(key) => Option(counts.get(key)).map(_.longValue).getOrElse {
+        val n = apply(spark, dir, name).count()
+        counts.putIfAbsent(key, n)
+        n
+      }
+      case None => apply(spark, dir, name).count()
+    }
+
+  private val counts = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, Long, Long)]), java.lang.Long]()
+
   def events(spark: SparkSession, dir: String): DataFrame =
     storedEvents(spark, dir) match { case (raw, ts) => contractTs(raw, ts) }
 

@@ -176,7 +176,7 @@ object Centroids {
   }
 
   /** Spark's `round(x, 6)` on a double: HALF_UP on the decimal string. */
-  private def round6(x: Double): Double =
+  private[graft] def round6(x: Double): Double =
     if (x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
@@ -266,7 +266,9 @@ case class ArrayMean(child: Expression, mutableAggBufferOffset: Int = 0,
 }
 
 object ArrayMean {
-  final class Sums {
+  /** Per-component sums and counts. Serializable, so a Lloyd round can
+    * fold them per task and merge them through `RDD.treeAggregate`. */
+  final class Sums extends Serializable {
     var seen = false
     var sums: Array[Double] = Array.emptyDoubleArray
     var counts: Array[Long] = Array.emptyLongArray
@@ -312,10 +314,6 @@ object VectorFunctions {
   /** int8 quantization census of an array<double> column (native). */
   def int8_qcensus(a: Column): Column =
     GraftShims.column(Int8QuantCensus(GraftShims.expression(a)))
-
-  /** Element-wise mean of an array<double> column (native aggregate). */
-  def array_mean(a: Column): Column =
-    GraftShims.column(ArrayMean(GraftShims.expression(a)).toAggregateExpression())
 
   /** Id of the highest-cosine centroid among `key`'s (native, in-row). */
   def nearest_cosine(v: Column, key: Column, c: Centroids): Column =

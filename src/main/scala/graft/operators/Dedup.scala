@@ -934,7 +934,7 @@ object Dedup {
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     blockedCosinePairs(emb, CosineThreshold,
-      blocksFor(Tables(spark, dir, "embeddings").count()))
+      blocksFor(Tables.count(spark, dir, "embeddings")))
       .select(col("ida"), col("idb"), round(col("c"), 4).as("cos_sim"))
       .orderBy("ida", "idb")
   }
@@ -1082,7 +1082,7 @@ object Dedup {
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val truth = blockedCosinePairs(emb, D09Tau,
-      blocksFor(Tables(spark, dir, "embeddings").count())).select(col("ida"), col("idb"))
+      blocksFor(Tables.count(spark, dir, "embeddings"))).select(col("ida"), col("idb"))
     val found = lshCosineVerifiedPairsAuto(emb, D09Tau, D09Bits, D09Bands)
       .select(col("ida"), col("idb"))
     val caught = truth.join(found, Seq("ida", "idb"), "left_semi")

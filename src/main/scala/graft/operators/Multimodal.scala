@@ -1498,7 +1498,7 @@ object Multimodal {
     emb.write.mode("overwrite").parquet(s"$m09Dir/embeddings.parquet")
     val (codesT, ccT, fcT, cbT) = Similarity.s11BuildIndex(spark, m09Dir)
     val (_, k2) = Similarity.d12Factors(
-      graft.core.Tables(spark, m09Dir, "embeddings").count())
+      graft.core.Tables.count(spark, m09Dir, "embeddings"))
     Similarity.s11Search(spark, m09Dir, codesT, ccT, fcT, cbT, k2)
       .join(ids.select(col("vec_id").as("neighbor_id"),
         col("media_id").as("video_id"), col("frame_no")), "neighbor_id")

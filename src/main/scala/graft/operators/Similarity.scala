@@ -80,7 +80,7 @@ object Similarity {
     // events. Same corpus-relative cap + census as the Dedup band joins
     // (Dedup.capBandBuckets scaladoc has the full rationale).
     val capped = Dedup.capBandBuckets(all, Seq("bucket"),
-      Dedup.bandCap(Tables(spark, dir, "embeddings").count()))
+      Dedup.bandCap(Tables.count(spark, dir, "embeddings")))
     // multi-probe: own bucket + every ≤2-bit flip (1 + n + n(n-1)/2 probes)
     val flips: Seq[Long] = 0L +:
       ((0 until NumPlanes).map(p => 1L << p) ++
@@ -106,7 +106,7 @@ object Similarity {
     * (same census aggregation, so the union can never misalign). */
   def s02BucketCensus(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).withColumn("bucket", bucketOf(col("e"), 64))
-    val cap = Dedup.bandCap(Tables(spark, dir, "embeddings").count())
+    val cap = Dedup.bandCap(Tables.count(spark, dir, "embeddings"))
     Dedup.bucketCensusOf(all, Seq("bucket"), cap, "s02_signlsh")
   }
 
@@ -158,7 +158,7 @@ object Similarity {
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val n = Tables(spark, dir, "embeddings").count() // metadata count, cheap
+    val n = Tables.count(spark, dir, "embeddings") // memoized per file listing
     val stride = math.max(1L, n / IvfCentroids)
     val cents = all.filter(col("vec_id") % stride === 0 && col("vec_id") / stride < IvfCentroids)
       .select((col("vec_id") / stride).cast("int").as("cid"),
@@ -227,17 +227,18 @@ object Similarity {
     *      native `nearest_cosine` call per vector against the round's
     *      centroids (no shuffle of the vectors);
     *   2. refine: each cell's new centroid is the element-wise MEAN of
-    *      its members — one native `array_mean` aggregate keyed by
-    *      cell (K rows out), collected to the driver. The mean
-    *      components are rounded to 1e-6 IN BOTH ENGINES so
-    *      float-summation order can't flip downstream comparisons;
+    *      its members — every task sums its own members per cell, and
+    *      the K per-cell sums merge on the driver (one Spark job, no
+    *      shuffle: [[lloyd]]). The mean components are rounded to 1e-6
+    *      IN BOTH ENGINES so float-summation order can't flip
+    *      downstream comparisons;
     *   3. loop 1-2 per round, then re-assign the corpus to the final
     *      centroids (the inverted file, [[assignCells]]), probe
     *      nProbe=4 cells per query, exact-rank.
     *
     * At 100 TB this is the realistic IVF shape: training is a fixed
-    * number of map-reduce rounds over a sample (here: the corpus), each
-    * one scan plus a K-row aggregate, the index is one shuffle by cell
+    * number of rounds over a sample (here: the corpus), each one scan
+    * whose per-task sums merge into K rows, the index is one shuffle by cell
     * id, and search touches nProbe/K of the data. The oracle SQL is
     * GENERATED per round ([[s04OracleSql]]) — the CTE chain grows
     * mechanically with the round count, so changing [[LloydRounds]]
@@ -250,26 +251,25 @@ object Similarity {
   /** The trained coarse quantizer — stride seeds refined by `rounds`
     * Lloyd rounds (mean member vector per cell, element-wise, rounded
     * 1e-6 in both engines) — shared by s04 (k = [[IvfCentroids]]) and
-    * d11 (corpus-relative k, see [[d11CellCount]]). A K-row local
-    * relation (cid, ce, cnrm), memoized per corpus ([[withModel]]). */
+    * d11 (corpus-relative k, see [[d11CellCount]]). One Spark job per
+    * round ([[lloyd]]). A K-row local relation (cid, ce, cnrm),
+    * memoized per corpus ([[modelRows]]). */
   private[graft] def trainedCentroids(
       spark: SparkSession, dir: String, rounds: Int,
       k: Int = IvfCentroids): DataFrame =
-    withModel(spark, dir, "flat", rounds, k)(c => Seq(trainFlat(c, rounds, k)))._2.head
+    frameOf(spark, modelRows(spark, dir, "flat", rounds, k)(c =>
+      Seq(trainFlat(c, Tables.count(spark, dir, "embeddings"), rounds, k)))._2.head)
 
-  /** The flat quantizer's rounds over a raw embeddings frame. */
-  private def trainFlat(corpus: DataFrame, rounds: Int, k: Int): ModelRows = {
+  /** The flat quantizer's rounds over a raw embeddings frame of `n` rows. */
+  private def trainFlat(corpus: DataFrame, n: Long, rounds: Int, k: Int): ModelRows = {
     import graft.functions.VectorFunctions.{array_dot, nearest_cosine}
     val all = vectors(corpus)
-    val stride = math.max(1L, corpus.count() / k)
+    val stride = math.max(1L, n / k)
     val seeds = all.filter(col("vec_id") % stride === 0 && col("vec_id") / stride < k)
       .select((col("vec_id") / stride).cast("int").as("cid"),
         col("e").as("ce"), sqrt(array_dot(col("e"), col("e"))).as("cnrm"))
-    lloyd(seeds, rounds, keys = 1) { cents =>
-      val model = centroidsOf(cents, keyed = false)
-      withNorms(cellMeans(
-        all.select(nearest_cosine(col("e"), lit(0), model).as("cid"), col("e")),
-        Seq("cid"), "e", "ce"), "ce")
+    lloyd(seeds, rounds, keys = 1, "flat") { model =>
+      all.select(nearest_cosine(col("e"), lit(0), model).as("cid"), col("e"))
     }
   }
 
@@ -293,35 +293,90 @@ object Similarity {
   private[graft] def clearTrainedModels(): Unit = trainedModels.clear()
 
   /** The raw embeddings of `dir` and the model tables `train` builds
-    * from them, memoized per (corpus, `args`). Each table comes back as
-    * a one-partition local relation: no storage to release, and a
-    * persisted model table is one file. */
-  private def withModel(spark: SparkSession, dir: String, args: Any*)(
-      train: DataFrame => Seq[ModelRows]): (DataFrame, Seq[DataFrame]) = {
-    import scala.jdk.CollectionConverters._
+    * from them, as driver rows, memoized per (corpus, `args`). */
+  private def modelRows(spark: SparkSession, dir: String, args: Any*)(
+      train: DataFrame => Seq[ModelRows]): (DataFrame, Seq[ModelRows]) = {
     val corpus = Tables(spark, dir, "embeddings")
-    val tables = IO.listing(spark, s"$dir/embeddings.parquet").map(k => (k, args.toSeq)) match {
+    (corpus, IO.listing(spark, s"$dir/embeddings.parquet").map(k => (k, args.toSeq)) match {
       case Some(key) => Option(trainedModels.get(key)).getOrElse {
         val trained = train(corpus)
         trainedModels.putIfAbsent(key, trained)
         trained
       }
       case None => train(corpus)
-    }
-    (corpus, tables.map { case (s, rows) => spark.createDataFrame(rows.asJava, s).coalesce(1) })
+    })
   }
 
-  /** `rounds` Lloyd rounds from `seeds`: each round maps the current
-    * centroids (driver rows) to the next round's frame, whose rows are
-    * collected in turn. Rows are ordered by their `keys` leading int
-    * columns, and a row whose cell is NULL (members that met no
-    * centroid) is dropped. */
-  private def lloyd(seeds: DataFrame, rounds: Int, keys: Int)(
-      round: Seq[Row] => DataFrame): ModelRows = {
-    def rows(df: DataFrame): ModelRows = (df.schema, df.collect().toSeq
+  /** A model table as a one-partition local relation: no storage to
+    * release, and a persisted model table is one file. */
+  private def frameOf(spark: SparkSession, model: ModelRows): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(model._2.asJava, model._1).coalesce(1)
+  }
+
+  /** Runs `body` with `what` as the description of the Spark jobs it
+    * starts (so job lines attribute themselves to a pipeline phase),
+    * and restores the caller's description afterwards. */
+  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
+  /** `rounds` Lloyd rounds from `seeds`, as driver rows in the seeds'
+    * columns: (key ints…, vector[, cnrm]). A round is ONE Spark job with
+    * no shuffle: `assign` maps the round's centroids to a frame of
+    * (key ints…, member vector) rows, assigned in-row; each task folds
+    * its rows into per-key element-wise sums, and `treeAggregate`
+    * merges the tasks' sums — on the driver at a few partitions, with
+    * executor-side levels at many, so the driver only ever holds
+    * K × dim sums. The driver then builds each key's centroid: the
+    * member mean rounded 1e-6 per component as Spark's `round(…, 6)`
+    * rounds (the oracle's `round(avg(emb[i]), 6)`), and `cnrm` = ‖mean‖
+    * when the seeds carry it. Rows are ordered by their `keys` leading
+    * columns; a member whose cell is NULL (it met no centroid) is
+    * dropped, and a NULL member vector counts toward no component, as
+    * in `array_mean`. Jobs are described `ivfpq train <phase> round r`,
+    * the seeding job being round 0. */
+  private def lloyd(seeds: DataFrame, rounds: Int, keys: Int, phase: String)(
+      assign: graft.functions.Centroids => DataFrame): ModelRows = {
+    import graft.functions.ArrayMean.Sums
+    val spark = seeds.sparkSession
+    val norms = seeds.columns.contains("cnrm")
+    val seeded = described(spark, s"ivfpq train $phase round 0")(seeds.collect().toSeq)
       .filter(r => (0 until keys).forall(!r.isNullAt(_)))
-      .sortBy(r => (r.getInt(0), if (keys > 1) r.getInt(1) else 0)))
-    (1 to rounds).foldLeft(rows(seeds)) { case ((_, cents), _) => rows(round(cents)) }
+      .sortBy(r => (r.getInt(0), if (keys > 1) r.getInt(1) else 0))
+    val trained = (1 to rounds).foldLeft(seeded) { (cents, r) =>
+      val members = assign(centroidsOf(cents, keyed = keys > 1))
+      val sums = described(spark, s"ivfpq train $phase round $r") {
+        members.queryExecution.toRdd.treeAggregate(
+            scala.collection.mutable.HashMap.empty[(Int, Int), Sums])(
+          (m, row) => {
+            if (!row.isNullAt(0) && (keys == 1 || !row.isNullAt(1))) {
+              val s = m.getOrElseUpdate(
+                (row.getInt(0), if (keys > 1) row.getInt(1) else 0), new Sums)
+              if (!row.isNullAt(keys)) s.add(row.getArray(keys))
+            }
+            m
+          },
+          (a, b) => {
+            b.foreach { case (k, s) => a.get(k).fold(a(k) = s)(_.merge(s)) }
+            a
+          })
+      }
+      sums.toSeq.sortBy(_._1).map { case ((k0, k1), s) =>
+        val mean = Option.when(s.seen)(s.sums.indices.map(i =>
+          if (s.counts(i) == 0) null
+          else Double.box(graft.functions.Centroids.round6(s.sums(i) / s.counts(i)))))
+        // ‖mean‖ as array_dot folds it: in order, a NULL component as 0.0
+        val cnrm = mean.map(m => math.sqrt(m.foldLeft(0.0)((acc, x) =>
+          if (x == null) acc else acc + x * x)))
+        Row.fromSeq((if (keys > 1) Seq(k0, k1) else Seq(k0)) ++ Seq(mean.orNull) ++
+          (if (norms) Seq(cnrm.map(Double.box).orNull) else Nil))
+      }
+    }
+    (seeds.schema, trained)
   }
 
   /** The [[graft.functions.Centroids]] of model rows: (cid, vec, …) for
@@ -330,24 +385,6 @@ object Similarity {
     graft.functions.Centroids(rows.map(r =>
       if (keyed) (r.getInt(0), r.getInt(1), r.getSeq[Double](2))
       else (0, r.getInt(0), r.getSeq[Double](1))))
-
-  /** One refinement: each cell's centroid `out` is the element-wise mean
-    * of its members' vectors `v` (native `array_mean`, one K-row
-    * aggregate), rounded 1e-6 per component by Spark's `round` — the
-    * oracle's `round(avg(emb[i]), 6)`. `keys` are the cell columns. */
-  private def cellMeans(assigned: DataFrame, keys: Seq[String], v: String,
-      out: String): DataFrame = {
-    import graft.functions.VectorFunctions.array_mean
-    assigned.groupBy(keys.map(col): _*)
-      .agg(array_mean(col(v)).as("m"))
-      .select(keys.map(col) :+ transform(col("m"), x => round(x, 6)).as(out): _*)
-  }
-
-  /** Appends `cnrm` = ‖`c`‖ to a centroid frame. */
-  private def withNorms(cents: DataFrame, c: String): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    cents.withColumn("cnrm", sqrt(array_dot(col(c), col(c))))
-  }
 
   private[graft] def s04WithRounds(
       spark: SparkSession, dir: String, rounds: Int): DataFrame = {
@@ -497,7 +534,7 @@ object Similarity {
   def d11SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val k = d11CellCount(Tables(spark, dir, "embeddings").count())
+    val k = d11CellCount(Tables.count(spark, dir, "embeddings"))
     // within-cell pairs only: the equi-join on cid IS the blocking;
     // shuffle_hash because K cells ⇒ K hot build sides, never a sort
     // (see semdedupCensus)
@@ -512,7 +549,7 @@ object Similarity {
   private[graft] def d11DroppedIds(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val k = d11CellCount(Tables(spark, dir, "embeddings").count())
+    val k = d11CellCount(Tables.count(spark, dir, "embeddings"))
     val assigned = assignCells(all, trainedCentroids(spark, dir, LloydRounds, k))
     val a = assigned.select(col("cid"), col("vec_id").as("ida"), col("e").as("ea"))
     val b = assigned.select(col("cid"), col("vec_id").as("idb"), col("e").as("eb"))
@@ -551,7 +588,7 @@ object Similarity {
   private[graft] def d12CensusAt(spark: SparkSession, dir: String,
       cellTarget: Long, rounds: Int): DataFrame = {
     val (k1, k2) = d12FactorsAt(
-      Tables(spark, dir, "embeddings").count(), cellTarget)
+      Tables.count(spark, dir, "embeddings"), cellTarget)
     semdedupCensus(twoLevelAssign(spark, dir, k1, k2, rounds))
   }
 
@@ -579,7 +616,7 @@ object Similarity {
     * cell, every ⌊m/k2⌋-th member, the [[trainedCentroids]] stride-seed
     * rule applied per cell), and a fine Lloyd round assigns each vector
     * in-row among its own coarse cell's centroids, then averages per
-    * (ccid, fcid) — the same one-scan-one-aggregate round. The DuckDB
+    * (ccid, fcid) — the same one-job [[lloyd]] round. The DuckDB
     * oracle replays it CTE-for-CTE ([[d12OracleSql]]). Returns
     * (vec_id, e, nrm, cid) with the composite cid = ccid·k2 + fcid. */
   private[graft] def twoLevelAssign(spark: SparkSession, dir: String,
@@ -590,15 +627,13 @@ object Similarity {
     * fine centroids (ccid, fcid, ce, cnrm), assignment (vec_id, e,
     * nrm, cid)) — so the SEARCH path (s06) can probe the same
     * centroids the dedup census (d12) assigns with. Both centroid
-    * tables are memoized local relations ([[withModel]]); the
+    * tables are memoized local relations ([[twoLevelRows]]); the
     * assignment is the lazy [[assignCells]]/[[assignFine]] plan. */
   private[graft] def twoLevelModel(spark: SparkSession, dir: String,
       k1: Int, k2: Int, rounds: Int): (DataFrame, DataFrame, DataFrame) = {
     import graft.functions.VectorFunctions.array_dot
-    val (corpus, Seq(ccents, fcents)) = withModel(spark, dir, "two-level", k1, k2, rounds) { c =>
-      val coarse = trainFlat(c, rounds, k1)
-      Seq(coarse, trainFine(vectors(c), centroidsOf(coarse._2, keyed = false), k2, rounds))
-    }
+    val (corpus, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, rounds)
+    val (ccents, fcents) = (frameOf(spark, cc), frameOf(spark, fc))
     val all = vectors(corpus).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
     val coarse = assignCells(all, ccents)
       .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("ccid"))
@@ -607,6 +642,16 @@ object Similarity {
         (col("ccid").cast("long") * k2 + col("fcid")).as("cid"))
     (ccents, fcents, assigned)
   }
+
+  /** The raw corpus and the two-level model's tables as driver rows —
+    * coarse (cid, ce, cnrm) and fine (ccid, fcid, ce, cnrm) — memoized
+    * per corpus ([[modelRows]]). */
+  private def twoLevelRows(spark: SparkSession, dir: String,
+      k1: Int, k2: Int, rounds: Int): (DataFrame, Seq[ModelRows]) =
+    modelRows(spark, dir, "two-level", k1, k2, rounds) { c =>
+      val coarse = trainFlat(c, Tables.count(spark, dir, "embeddings"), rounds, k1)
+      Seq(coarse, trainFine(vectors(c), centroidsOf(coarse._2, keyed = false), k2, rounds))
+    }
 
   /** The fine level of [[twoLevelModel]]: stride seeds within each coarse
     * cell of `coarseModel`, refined by `rounds` keyed Lloyd rounds. */
@@ -623,12 +668,9 @@ object Similarity {
       .filter(col("rk") % col("stride") === 0 && expr("rk div stride") < k2)
       .select(col("ccid"), expr("rk div stride").cast("int").as("fcid"),
         col("e").as("ce"), sqrt(array_dot(col("e"), col("e"))).as("cnrm"))
-    lloyd(seeds, rounds, keys = 2) { cents =>
-      val model = centroidsOf(cents, keyed = true)
-      withNorms(cellMeans(
-        coarse.select(col("ccid"),
-          nearest_cosine(col("e"), col("ccid"), model).as("fcid"), col("e")),
-        Seq("ccid", "fcid"), "e", "ce"), "ce")
+    lloyd(seeds, rounds, keys = 2, "fine") { model =>
+      coarse.select(col("ccid"),
+        nearest_cosine(col("e"), col("ccid"), model).as("fcid"), col("e"))
     }
   }
 
@@ -664,7 +706,7 @@ object Similarity {
     * only the two-level form is viable — is measured by
     * graft.tools.TwoLevelSweep (NOTES.md datapoint). */
   def d12SemanticDedup2Level(spark: SparkSession, dir: String): DataFrame = {
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     semdedupCensus(twoLevelAssign(spark, dir, k1, k2, LloydRounds))
   }
 
@@ -757,7 +799,7 @@ object Similarity {
     * graft.tools.S06AtScale (NOTES.md round 11). */
   def s06AnnIvf2Level(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val wRank = Window.partitionBy(col("qid"))
@@ -811,7 +853,7 @@ object Similarity {
   private[graft] def s15At(spark: SparkSession, dir: String,
       budgetCells: Double): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val n = Tables(spark, dir, "embeddings").count()
+    val n = Tables.count(spark, dir, "embeddings")
     val (k1, k2) = d12Factors(n)
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val budget = math.ceil(budgetCells * n / (k1.toLong * k2)).toLong
@@ -1107,8 +1149,8 @@ object Similarity {
     * [[s07Encode]] argmin-L2 among the subvector's own subspace's
     * codewords) + per-(sub, cid) element-wise member mean rounded 1e-6
     * in both engines — the [[trainedCentroids]] round with `sub` as
-    * the key, so all M subquantizers train in the SAME scan and
-    * aggregate per round, never M separate jobs. A memoized M·nCodes-row
+    * the key, so all M subquantizers train in the SAME one-job round
+    * ([[lloyd]]), never M separate jobs. A memoized M·nCodes-row
     * local relation (sub, cid, cv). */
   private[graft] def s07Codebooks(
       spark: SparkSession, dir: String, rounds: Int): DataFrame =
@@ -1117,21 +1159,56 @@ object Similarity {
   /** [[s07Codebooks]] at explicit (m, nCodes) — the PqSweep seam. */
   private[graft] def s07CodebooksAt(spark: SparkSession, dir: String,
       rounds: Int, m: Int, nCodes: Int): DataFrame =
-    withModel(spark, dir, "pq", rounds, m, nCodes) { corpus =>
+    frameOf(spark, codebookRows(spark, dir, rounds, m, nCodes))
+
+  /** [[s07CodebooksAt]]'s table as driver rows, memoized per corpus
+    * ([[modelRows]]). */
+  private def codebookRows(spark: SparkSession, dir: String,
+      rounds: Int, m: Int, nCodes: Int): ModelRows =
+    modelRows(spark, dir, "pq", rounds, m, nCodes) { corpus =>
       import graft.functions.VectorFunctions.nearest_l2
       val sv = subvecsOf(vectors(corpus), m)
-      val stride = math.max(1L, corpus.count() / nCodes)
+      val stride = math.max(1L, Tables.count(spark, dir, "embeddings") / nCodes)
       val seeds = sv
         .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < nCodes)
         .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
           col("v").as("cv"))
-      Seq(lloyd(seeds, rounds, keys = 2) { cents =>
-        val model = centroidsOf(cents, keyed = true)
-        cellMeans(sv.select(col("sub"),
-            nearest_l2(col("v"), col("sub"), model).as("cid"), col("v")),
-          Seq("sub", "cid"), "v", "cv")
+      Seq(lloyd(seeds, rounds, keys = 2, "pq") { model =>
+        sv.select(col("sub"), nearest_l2(col("v"), col("sub"), model).as("cid"), col("v"))
       })
     }._2.head
+
+  /** The IVF-PQ code rows (vec_id, sub, code, cell) of (vec_id, e) rows
+    * under a trained model's tables — coarse `cc` (cid, ce, …), fine
+    * `fc` (ccid, fcid, ce, …) and codebook `cb` (sub, cid, cv) — in the
+    * code store's layout, as ONE map-side projection: no join and no
+    * shuffle. `nearest_cosine` among the coarse centroids gives ccid,
+    * among ccid's own fine centroids fcid (cell = ccid·k2 + fcid), and
+    * each [[S07Subspaces]] slice's `nearest_l2` among its subspace's
+    * codewords gives the code. These are the rules and tie-breaks of
+    * the assignment aggregates ([[assignCells]], [[assignFine]],
+    * [[s07Encode]]), so for unique vec_ids the rows equal those
+    * aggregates joined on vec_id. A vector whose cell is NULL (a NULL
+    * vector, or a coarse cell with no fine centroids) gets no rows, nor
+    * does a subspace with no codewords, as the inner joins dropped them
+    * — both through the explode, so no Filter is pushed below the
+    * projections to evaluate the searches twice. */
+  private[graft] def codeRows(vecs: DataFrame, cc: Seq[Row], fc: Seq[Row],
+      cb: Seq[Row], k2: Int): DataFrame = {
+    import graft.functions.VectorFunctions.{nearest_cosine, nearest_l2}
+    val subDim = 64 / S07Subspaces
+    val subs = cb.map(_.getInt(0)).distinct.sorted.filter(_ < S07Subspaces)
+    vecs.select(col("vec_id"), col("e"),
+        nearest_cosine(col("e"), lit(0), centroidsOf(cc, keyed = false)).as("ccid"))
+      .select(col("vec_id"), col("e"), (col("ccid").cast("long") * k2 +
+        nearest_cosine(col("e"), col("ccid"), centroidsOf(fc, keyed = true))).as("cell"))
+      .select(col("vec_id"), col("e"), col("cell"),
+        explode(when(col("cell").isNotNull, typedLit(subs))).as("sub"))
+      .select(col("vec_id"), col("sub"),
+        nearest_l2(slice(col("e"), col("sub") * subDim + 1, lit(subDim)), col("sub"),
+          centroidsOf(cb, keyed = true)).as("code"),
+        col("cell"))
+  }
 
   /** s07: PRODUCT-QUANTIZATION ADC search (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011) — the
@@ -1281,7 +1358,7 @@ object Similarity {
     * scale argument of each stage). */
   private def s09ScoredAt(spark: SparkSession, dir: String,
       fineProbes: Int): DataFrame = {
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val sv = subvecs(spark, dir)
     val cb = s07Codebooks(spark, dir, S07Rounds)
@@ -1460,30 +1537,30 @@ object Similarity {
     * codebooks (M·16 rows), and the cell-keyed code store BUCKETED by
     * cell and sorted within buckets, so a query batch's probe join
     * reads the codes co-located with ZERO corpus-side exchange and the
-    * corpus is scanned/encoded EXACTLY once, at ingest. */
+    * corpus is scanned/encoded EXACTLY once, at ingest. The codes are
+    * [[codeRows]] of the corpus under the memoized model rows (no job
+    * to fetch them), hash-partitioned on cell into one partition per
+    * bucket, so each writing task writes exactly one bucket file. */
   private[graft] def s11BuildIndex(
-      spark: SparkSession, dir: String): (String, String, String, String) = {
-    val wh = graft.core.IO.scratchDir("graft-s11")
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val (codesT, ccT, fcT, cbT) = (s"graft_s11_codes_$tag", s"graft_s11_cc_$tag",
-      s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
-    val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
-    val cb = s07Codebooks(spark, dir, S07Rounds)
-    val codesByCell = s07Encode(subvecs(spark, dir), cb)
-      .select(col("vec_id"), col("sub"), col("cid").as("code"))
-      .join(assigned.select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
-    codesByCell.write.mode("overwrite").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
-      .option("path", s"$wh/codes_$tag").saveAsTable(codesT)
-    ccents.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/cc_$tag").saveAsTable(ccT)
-    fcents.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/fc_$tag").saveAsTable(fcT)
-    cb.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/cb_$tag").saveAsTable(cbT)
-    (codesT, ccT, fcT, cbT)
-  }
+      spark: SparkSession, dir: String): (String, String, String, String) =
+    described(spark, "ivfpq build codes") {
+      val wh = graft.core.IO.scratchDir("graft-s11")
+      val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+      val (codesT, ccT, fcT, cbT) = (s"graft_s11_codes_$tag", s"graft_s11_cc_$tag",
+        s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
+      val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
+      val (_, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, LloydRounds)
+      val cb = codebookRows(spark, dir, S07Rounds, S07Subspaces, S07Codes)
+      codeRows(emb(spark, dir), cc._2, fc._2, cb._2, k2)
+        .repartition(Dedup.D13Buckets, col("cell"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
+        .option("path", s"$wh/codes_$tag").saveAsTable(codesT)
+      for ((model, name, t) <- Seq((cc, "cc", ccT), (fc, "fc", fcT), (cb, "cb", cbT)))
+        frameOf(spark, model).write.mode("overwrite").format("parquet")
+          .option("path", s"$wh/${name}_$tag").saveAsTable(t)
+      (codesT, ccT, fcT, cbT)
+    }
 
   /** s11: IVF-PQ search against the PERSISTED index — the serving face
     * of s09. s09 certifies the composition's semantics but retrains
@@ -1501,7 +1578,7 @@ object Similarity {
     * applied to models); the gate proves exactly that, row for row. */
   def s11PersistedIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, dir)
-    val (_, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (_, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     s11Search(spark, dir, codesT, ccT, fcT, cbT, k2)
   }
 
@@ -1568,31 +1645,24 @@ object Similarity {
     * §IV; faiss IndexIVFPQ.add): NO retraining, the batch simply flows
     * through the stored quantizers (coarse argmax → fine argmax within
     * the coarse cell → per-subspace argmin-L2 codes). Returns code rows
-    * (vec_id, sub, code, cell) in the code store's exact layout. Every
-    * join is against a broadcast stored-artifact table; the only
-    * exchanges are the batch-sized partial-agg shuffles — the existing
-    * code store is NOT in this plan at all (PlanSpec pins it). */
+    * (vec_id, sub, code, cell) in the code store's exact layout. The
+    * three stored model tables (tiny) are collected to the driver and
+    * the batch is encoded in-row ([[codeRows]]): the plan has no join
+    * and no exchange, and the existing code store is NOT in it at all
+    * (PlanSpec pins both). */
   private[graft] def s12AssignEncode(spark: SparkSession, batch: DataFrame,
       ccT: String, fcT: String, cbT: String, k2: Int): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    val vecs = batch.withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val coarse = assignCells(vecs, spark.table(ccT))
-      .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("ccid"))
-    val cells = assignFine(coarse, spark.table(fcT))
-      .select(col("vec_id"),
-        (col("ccid").cast("long") * k2 + col("fcid")).as("cell"))
-    s07Encode(subvecsOf(batch, S07Subspaces), spark.table(cbT))
-      .select(col("vec_id"), col("sub"), col("cid").as("code"))
-      .join(cells, Seq("vec_id"))
-      .select(col("vec_id"), col("sub"), col("code"), col("cell"))
+    def rows(t: String) = spark.table(t).collect().toSeq
+    codeRows(batch, rows(ccT), rows(fcT), rows(cbT), k2)
   }
 
   /** Fold a delta batch INTO the persisted IVF-PQ index — the tail of
     * the retrieval-side ingest cycle and d13/m08's fold-in discipline
     * applied to the code store (round-12 verdict item 1): the delta's
     * cell-keyed codes append with the IDENTICAL cell bucketing (Spark
-    * validates the spec against the catalog), so the next query batch
-    * searches corpus ∪ delta with zero recompute of either and the
+    * validates the spec against the catalog), one partition per bucket
+    * so the append adds at most one file per bucket, and the next query
+    * batch searches corpus ∪ delta with zero recompute of either; the
     * bucketed serve path ([[s11Search]]) keeps its zero-exchange
     * property over the folded store. The stored centroids/codebooks
     * are frozen — no retraining, so search results over the folded
@@ -1600,10 +1670,13 @@ object Similarity {
     * base (what [[s12OracleSql]] states). */
   private[graft] def s12FoldIn(spark: SparkSession, delta: DataFrame,
       codesT: String, ccT: String, fcT: String, cbT: String, k2: Int): Unit =
-    s12AssignEncode(spark, delta, ccT, fcT, cbT, k2)
-      .write.mode("append").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
-      .saveAsTable(codesT)
+    described(spark, "ivfpq fold-in") {
+      s12AssignEncode(spark, delta, ccT, fcT, cbT, k2)
+        .repartition(Dedup.D13Buckets, col("cell"))
+        .write.mode("append").format("parquet")
+        .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
+        .saveAsTable(codesT)
+    }
 
   /** The BUILD half of the s12 gate: persist the IVF-PQ index over the
     * BASE slice (vec_id < n·[[S12BaseNum]]/[[S12BaseDen]]) — the base
@@ -1612,11 +1685,13 @@ object Similarity {
     * (nBase, k2) — the frozen geometry every later fold/search reuses. */
   private[graft] def s12BuildBase(spark: SparkSession,
       dir: String): (String, String, String, String, Long, Int) = {
-    val n = Tables(spark, dir, "embeddings").count()
+    val n = Tables.count(spark, dir, "embeddings")
     val nBase = n * S12BaseNum / S12BaseDen
     val baseDir = graft.core.IO.scratchDir("graft-s12")
-    Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
-      .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
+    described(spark, "ivfpq build base slice") {
+      Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
+        .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
+    }
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, baseDir)
     val (_, k2) = d12Factors(nBase)
     (codesT, ccT, fcT, cbT, nBase, k2)
@@ -1767,7 +1842,7 @@ object Similarity {
     * excludes the deleted ids, nothing else. */
   def s16DeletedIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, dir)
-    val (_, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (_, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val tombT = s16PersistTombstones(spark, s16Tombstones(spark, dir))
     s11Search(spark, dir, codesT, ccT, fcT, cbT, k2,
       tomb = Some(spark.table(tombT)))
@@ -2206,7 +2281,7 @@ object Similarity {
     * candidates touched only in probed cells. */
   def s19RangeSearch(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val hits = fprobes.join(assigned, Seq("cid"))
@@ -2424,7 +2499,7 @@ object Similarity {
       cellTarget: Long, fineProbes: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val (k1, k2) = d12FactorsAt(
-      Tables(spark, dir, "embeddings").count(), cellTarget)
+      Tables.count(spark, dir, "embeddings"), cellTarget)
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val sv = subvecs(spark, dir)
     val cb = s07Codebooks(spark, dir, S07Rounds)
@@ -2764,7 +2839,7 @@ object Similarity {
     * gates differ in exactly one input: the edge set. */
   private[graft] def s23SeedFrontier(spark: SparkSession, dir: String,
       beamWidth: Int): DataFrame = {
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     s23SeedOver(probeCells(spark, dir, ccents, fcents, k2), assigned, beamWidth)
   }
@@ -3166,7 +3241,7 @@ object Similarity {
 
   private def s26BuildBaseUncached(spark: SparkSession, dir: String,
       cellTarget: Long, fineProbes: Int): S26Artifacts = {
-    val n = Tables(spark, dir, "embeddings").count()
+    val n = Tables.count(spark, dir, "embeddings")
     val nBase = n * S12BaseNum / S12BaseDen
     val baseDir = graft.core.IO.scratchDir("graft-s26")
     Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
@@ -3177,13 +3252,12 @@ object Similarity {
     val gBase = s22GraphAt(spark, baseDir, cellTarget, fineProbes, S22Pool)
       .select(col("src_id"), col("dst_id")).localCheckpoint()
     val (k1, k2) = d12FactorsAt(nBase, cellTarget)
-    val (cc, fc, assigned) = twoLevelModel(spark, baseDir, k1, k2, LloydRounds)
+    val (_, Seq(cc, fc)) = twoLevelRows(spark, baseDir, k1, k2, LloydRounds)
+    val cb = codebookRows(spark, baseDir, S07Rounds, S07Subspaces, S07Codes)
     // the stored base index: cell-keyed codes (s22ScoredAllAt's layout)
-    val cb = s07Codebooks(spark, baseDir, S07Rounds)
-    val codesByCell = s07Encode(subvecs(spark, baseDir), cb)
-      .select(col("vec_id"), col("sub"), col("cid").as("code"))
-      .join(assigned.select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
-    S26Artifacts(baseDir, nBase, gBase, cc, fc, k2, cb, codesByCell, fineProbes)
+    val codesByCell = codeRows(emb(spark, baseDir), cc._2, fc._2, cb._2, k2)
+    S26Artifacts(baseDir, nBase, gBase, frameOf(spark, cc), frameOf(spark, fc), k2,
+      frameOf(spark, cb), codesByCell, fineProbes)
   }
 
   /** FORWARD edges for one delta slice against the frozen artifacts —
@@ -3471,7 +3545,7 @@ object Similarity {
     // seeds: the unfiltered s23 entry frontier + the label-matching
     // members of the probed cells (Filtered-DiskANN's per-label entry
     // points, re-expressed on the shared probe budget)
-    val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
+    val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2)
     val seedU = s23SeedOver(fprobes, assigned, S23Beam)

@@ -435,7 +435,7 @@ object StreamingOps {
     * under `maxFilesPerTrigger=1`, so the fold runs as three separate
     * micro-batch appends — each micro-batch flows through the FROZEN
     * stored model inside foreachBatch ([[graft.operators.Similarity
-    * .s12FoldIn]]: assignment joins against broadcast stored
+    * .s12FoldIn]]: in-row assign+encode against the collected stored
     * centroids/codebooks, bucket-compatible append, the existing code
     * store never read). The gate then searches the stream-folded store
     * through the unchanged serve path and the ORACLE IS s12's
@@ -448,7 +448,7 @@ object StreamingOps {
     * 100 TB: per-micro-batch cost is O(batch) assignment work + a
     * batch-sized bucketed append — the streaming state is EMPTY (no
     * watermark, no keyed state; foreachBatch is a stateless sink), so
-    * ingest rate is bounded by the assignment joins, not by state
+    * ingest rate is bounded by the assign+encode work, not by state
     * growth. */
   def st10StreamingVectorIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
@@ -468,11 +468,11 @@ object StreamingOps {
     // and MEASURED SLOWER, 12.0 → 15.4 s fresh-JVM min-of-3 at sf0.1):
     // the stream is stateless (foreachBatch sink, no keyed state), so
     // there is no per-shard state-store cost to amortize, and each
-    // fold's assign+encode work joins the delta against the
-    // corpus-trained model tables — narrowing shuffle.partitions to the
-    // delta's byte-derived shard count just cuts that work's real
-    // parallelism (the same measured regression the withStreamShards
-    // scaladoc records for st07).
+    // fold's assign+encode work (then joins of the delta against the
+    // corpus-trained model tables) ran behind shuffles — narrowing
+    // shuffle.partitions to the delta's byte-derived shard count just
+    // cut that work's real parallelism (the same measured regression
+    // the withStreamShards scaladoc records for st07).
     val q = deltaStream.writeStream
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>

@@ -1,0 +1,142 @@
+package graft
+
+import graft.core.{IO, Tables}
+import graft.operators.{Dedup, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The IVF-PQ code store — built by [[Similarity.codeRows]]'s in-row
+  * assign+encode — against the join-based form it replaced, and the
+  * job and file counts of the build, the fold-in and a Lloyd round.
+  *
+  * Precondition of the equivalence: `vec_id` is unique in the batch.
+  * The reference assigns and encodes through `groupBy(vec_id)` /
+  * `groupBy(vec_id, sub)` and joins on vec_id, which would collapse or
+  * multiply duplicate ids; the in-row form encodes every row once.
+  */
+class CodeStoreSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = TestSpark.session
+  val sf = "/root/testdata/sf0.001"
+
+  /** The replaced code-store build, kept only as the reference: coarse
+    * and fine argmax through the partial-aggregated `max_by` joins, PQ
+    * codes through the `min_by` join, and the two joined on vec_id. */
+  private def referenceCodes(vecs: DataFrame, cc: DataFrame, fc: DataFrame,
+      cb: DataFrame, k2: Int): DataFrame = {
+    import graft.functions.VectorFunctions.array_dot
+    val all = vecs.withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
+    val coarse = Similarity.assignCells(all, cc)
+      .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("ccid"))
+    val cells = Similarity.assignFine(coarse, fc)
+      .select(col("vec_id"), (col("ccid").cast("long") * k2 + col("fcid")).as("cell"))
+    Similarity.s07Encode(Similarity.subvecsOf(vecs, Similarity.S07Subspaces), cb)
+      .select(col("vec_id"), col("sub"), col("cid").as("code"))
+      .join(cells, Seq("vec_id"))
+      .select(col("vec_id"), col("sub"), col("code"), col("cell"))
+  }
+
+  /** (vec_id, sub, code, cell) rows in a total order. */
+  private def rows(df: DataFrame): Seq[(Long, Int, Int, Long)] =
+    df.select("vec_id", "sub", "code", "cell").collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).sorted
+
+  /** Asserts `got` and `ref` hold the same rows, naming the first
+    * difference rather than printing both sides; returns the row count. */
+  private def assertSameRows(got: DataFrame, ref: DataFrame, what: String): Int = {
+    val (g, r) = (rows(got), rows(ref))
+    val firstDiff = g.zipAll(r, null, null).find { case (a, b) => a != b }
+    assert(firstDiff.isEmpty,
+      s"$what: ${g.size} vs ${r.size} rows, first difference (got, reference) ${firstDiff.orNull}")
+    g.size
+  }
+
+  private def withConfs[T](partitions: String, aqe: String)(body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set(keys(0), partitions)
+      spark.conf.set(keys(1), aqe)
+      body
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def dataFiles(table: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location
+    java.nio.file.Files.list(java.nio.file.Paths.get(loc)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+  }
+
+  private def drop(tables: String*): Unit =
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
+  test("in-row codes equal the join-based code store row for row: build, fold-in, s26, across partitions and AQE") {
+    val all = Similarity.emb(spark, sf)
+    val n = Tables.count(spark, sf, "embeddings")
+    for (partitions <- Seq("1", "4"); aqe <- Seq("true", "false")) withConfs(partitions, aqe) {
+      val at = s"shuffle.partitions=$partitions, AQE=$aqe"
+      val (codesT, ccT, fcT, cbT, nBase, k2) = Similarity.s12BuildBase(spark, sf)
+      try {
+        val (cc, fc, cb) = (spark.table(ccT), spark.table(fcT), spark.table(cbT))
+        val base = assertSameRows(spark.table(codesT),
+          referenceCodes(all.filter(col("vec_id") < nBase), cc, fc, cb, k2), s"base build ($at)")
+        assert(base == nBase * Similarity.S07Subspaces, s"base store size ($at)")
+        val delta = all.filter(col("vec_id") >= nBase)
+        val folded = assertSameRows(Similarity.s12AssignEncode(spark, delta, ccT, fcT, cbT, k2),
+          referenceCodes(delta, cc, fc, cb, k2), s"fold-in batch ($at)")
+        assert(folded == (n - nBase) * Similarity.S07Subspaces, s"fold-in batch size ($at)")
+      } finally drop(codesT, ccT, fcT, cbT)
+      val a = Similarity.s26BuildBase(spark, sf)
+      assertSameRows(a.codesByCell,
+        referenceCodes(Similarity.emb(spark, a.baseDir), a.cc, a.fc, a.cb, a.k2),
+        s"s26 codesByCell ($at)")
+    }
+  }
+
+  test("a Lloyd round is one Spark job") {
+    // two fresh copies of one corpus: each pays its own schema
+    // inference, row count and seeding job, so the rounds alone differ
+    def fresh(): String = {
+      val dir = IO.scratchDir("graft-lloydjobs")
+      Tables(spark, sf, "embeddings").write.parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    val (one, two) = (fresh(), fresh())
+    val (_, jobs1) = TestSpark.jobs(Similarity.trainedCentroids(spark, one, rounds = 1))
+    val (_, jobs2) = TestSpark.jobs(Similarity.trainedCentroids(spark, two, rounds = 2))
+    assert(jobs2.size == jobs1.size + 1, s"rounds = 1: $jobs1; rounds = 2: $jobs2")
+    assert(jobs2.count(_ == "ivfpq train flat round 2") == 1, s"round 2's job: $jobs2")
+  }
+
+  test("the code store gets one file per bucket from the build and from each fold-in; every job names its phase") {
+    // a four-file corpus: four scan tasks, each of which would write its
+    // own file into every bucket it holds without the partitioning on cell
+    val dir = IO.scratchDir("graft-codefiles")
+    Tables(spark, sf, "embeddings").repartition(4).write.parquet(s"$dir/embeddings.parquet")
+    val all = Similarity.emb(spark, dir)
+    assert(all.rdd.getNumPartitions > 1, "the corpus must scan as several tasks")
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    val ((codesT, ccT, fcT, cbT), build) = TestSpark.jobs(Similarity.s11BuildIndex(spark, dir))
+    try {
+      assert(dataFiles(codesT) <= Dedup.D13Buckets, s"${dataFiles(codesT)} files after the build")
+      val k2 = Similarity.d12Factors(Tables.count(spark, dir, "embeddings"))._2
+      val n = spark.table(codesT).count()
+      val (_, fold) = TestSpark.jobs(Similarity.s12FoldIn(spark,
+        all.withColumn("vec_id", col("vec_id") + 1000000L), codesT, ccT, fcT, cbT, k2))
+      assert(spark.table(codesT).count() == 2 * n, "the fold-in appends a code row per delta row")
+      assert(dataFiles(codesT) <= 2 * Dedup.D13Buckets, s"${dataFiles(codesT)} files after one fold-in")
+      assert(sc.getLocalProperty("spark.job.description") == "caller",
+        "the caller's job description must be restored")
+      val unnamed = (build ++ fold).filterNot(_.startsWith("ivfpq "))
+      assert(unnamed.isEmpty, s"jobs without an ivfpq phase: $unnamed")
+      assert(fold.nonEmpty && fold.forall(_ == "ivfpq fold-in"), s"fold-in jobs: $fold")
+    } finally {
+      sc.setJobDescription(null)
+      drop(codesT, ccT, fcT, cbT)
+    }
+  }
+}

@@ -734,8 +734,11 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains(codesT),
       s"fold-in must not read the existing code store:\n$p")
     assert(!p.contains("CartesianProduct"), s"fold-in join degraded to a product:\n$p")
-    // centroid/codebook attaches broadcast the stored artifacts
-    assert(p.contains("BroadcastHashJoin"), s"stored-artifact joins must broadcast:\n$p")
+    // the stored model rides in-row (nearest_cosine/nearest_l2 over the
+    // collected centroid and codebook tables): a batch-local map stage
+    // with no exchange and no join of any kind
+    assert(!p.contains("Exchange"), s"fold-in assign+encode must not shuffle:\n$p")
+    assert("\\w*Join\\b".r.findFirstIn(p).isEmpty, s"fold-in assign+encode must not join:\n$p")
   }
 
   test("s12 search over the FOLDED store: probes broadcast in, store never shuffles") {

@@ -2,32 +2,21 @@ package graft
 
 import graft.codecs.Codecs
 import graft.core.{IO, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{GraftShims, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parquet reads start no schema-inference job: a codec `load` declares
   * its stored schema, and a `Tables` read passes the schema Spark
-  * inferred the first time it read the unchanged file listing. */
+  * inferred the first time it read the unchanged file listing. A
+  * `Tables.count` of an unchanged listing is memoized the same way. */
 class ReadJobsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSpark.session
   import spark.implicits._
 
-  /** `body`'s result and the Spark jobs it started, counted once the
-    * listener bus drains. */
-  private def jobs[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    GraftShims.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      GraftShims.drainListenerBus(spark)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobs[T](body: => T): (T, Int) = TestSpark.jobs(body) match {
+    case (out, started) => (out, started.size)
   }
 
   test("decode(load) of every codec through the noop sink is exactly one Spark job") {
@@ -65,5 +54,17 @@ class ReadJobsSpec extends AnyFunSuite {
     val again = Tables(spark, dir, "t")
     assert(again.schema.fieldNames.toSeq == Seq("x", "flag", "s"))
     assert(again.collect().toSeq == Seq(Row(2.5, true, "b")))
+  }
+
+  test("a repeat Tables.count of an unchanged dir starts no job; a rewritten one recounts") {
+    val dir = IO.scratchDir("graft-countmemo")
+    Seq(1L, 2L, 3L).toDF("id").write.parquet(s"$dir/t.parquet")
+    val (n, first) = jobs(Tables.count(spark, dir, "t"))
+    assert(n == 3L && first > 0, s"a first count reads the table: $n rows, $first jobs")
+    assert(jobs(Tables.count(spark, dir, "t")) == (3L, 0),
+      "a repeat count of an unchanged dir must hit the memo")
+    Seq(4L, 5L).toDF("id").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val (again, recount) = jobs(Tables.count(spark, dir, "t"))
+    assert(again == 2L && recount > 0, s"a rewritten dir must be counted afresh: $again rows, $recount jobs")
   }
 }
