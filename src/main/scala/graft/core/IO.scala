@@ -44,15 +44,17 @@ object IO {
     }
   }
 
-  /** A path's identity: the path and its file listing (name, length,
-    * modification time). None when the path cannot be listed — the
-    * read then fails with Spark's own error. */
+  /** A path's identity: the path and its one-level file listing (name,
+    * length, modification time; a subdirectory's name ends in `/`).
+    * None when the path cannot be listed — the read then fails with
+    * Spark's own error. */
   private[graft] def listing(spark: SparkSession,
       path: String): Option[(String, Seq[(String, Long, Long)])] = {
     val p = new org.apache.hadoop.fs.Path(path)
     scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p))
       .toOption.map(fs => (path,
-        fs.toSeq.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted))
+        fs.toSeq.map(f => (f.getPath.getName + (if (f.isDirectory) "/" else ""),
+          f.getLen, f.getModificationTime)).sorted))
   }
 
   private val inferred = new java.util.concurrent.ConcurrentHashMap[

@@ -38,9 +38,11 @@ object Tables {
   /** `dir`'s `name` table's row count, memoized per path and
     * [[IO.listing]] as [[IO.readParquet]]'s schema is: a repeat count
     * of an unchanged table starts no job, and a rewritten one is
-    * counted afresh. */
+    * counted afresh. Only a flat table is memoized: the listing is one
+    * level deep, so a rewrite inside a partition directory need not
+    * change it, and a partitioned table is counted on every call. */
   def count(spark: SparkSession, dir: String, name: String): Long =
-    IO.listing(spark, s"$dir/$name.parquet") match {
+    IO.listing(spark, s"$dir/$name.parquet").filterNot(_._2.exists(_._1.endsWith("/"))) match {
       case Some(key) => Option(counts.get(key)).map(_.longValue).getOrElse {
         val n = apply(spark, dir, name).count()
         counts.putIfAbsent(key, n)

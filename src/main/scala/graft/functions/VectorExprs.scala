@@ -299,7 +299,9 @@ object ArrayMean {
       this
     }
 
-    def mean: Any =
+    /** The element-wise mean, NULL where no row had the component, or
+      * NULL when no row was added. */
+    def mean: GenericArrayData =
       if (!seen) null
       else new GenericArrayData(Array.tabulate[Any](sums.length)(i =>
         if (counts(i) == 0) null else sums(i) / counts(i)))

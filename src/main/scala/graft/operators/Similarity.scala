@@ -228,10 +228,11 @@ object Similarity {
     *      centroids (no shuffle of the vectors);
     *   2. refine: each cell's new centroid is the element-wise MEAN of
     *      its members — every task sums its own members per cell, and
-    *      the K per-cell sums merge on the driver (one Spark job, no
-    *      shuffle: [[lloyd]]). The mean components are rounded to 1e-6
-    *      IN BOTH ENGINES so float-summation order can't flip
-    *      downstream comparisons;
+    *      the K per-cell sums merge by `treeAggregate` (one Spark job;
+    *      no shuffle up to 5 input partitions, one shuffle stage of
+    *      per-cell sums beyond: [[lloyd]]). The mean components are
+    *      rounded to 1e-6 IN BOTH ENGINES so float-summation order
+    *      can't flip downstream comparisons;
     *   3. loop 1-2 per round, then re-assign the corpus to the final
     *      centroids (the inverted file, [[assignCells]]), probe
     *      nProbe=4 cells per query, exact-rank.
@@ -325,23 +326,27 @@ object Similarity {
   }
 
   /** `rounds` Lloyd rounds from `seeds`, as driver rows in the seeds'
-    * columns: (key ints…, vector[, cnrm]). A round is ONE Spark job with
-    * no shuffle: `assign` maps the round's centroids to a frame of
-    * (key ints…, member vector) rows, assigned in-row; each task folds
-    * its rows into per-key element-wise sums, and `treeAggregate`
-    * merges the tasks' sums — on the driver at a few partitions, with
-    * executor-side levels at many, so the driver only ever holds
-    * K × dim sums. The driver then builds each key's centroid: the
-    * member mean rounded 1e-6 per component as Spark's `round(…, 6)`
-    * rounds (the oracle's `round(avg(emb[i]), 6)`), and `cnrm` = ‖mean‖
-    * when the seeds carry it. Rows are ordered by their `keys` leading
-    * columns; a member whose cell is NULL (it met no centroid) is
-    * dropped, and a NULL member vector counts toward no component, as
-    * in `array_mean`. Jobs are described `ivfpq train <phase> round r`,
+    * columns: (key ints…, vector[, cnrm]). A round is ONE Spark job:
+    * `assign` maps the round's centroids to a frame of (key ints…,
+    * member vector) rows, assigned in-row; each task folds its rows
+    * into per-key element-wise sums, and `treeAggregate` merges the
+    * tasks' sums. Up to 5 input partitions it merges them on the driver
+    * and the job has no shuffle; beyond that it adds one executor-side
+    * tree level, a shuffle stage of per-key sums (never of vectors), so
+    * the driver only ever holds K × dim sums. The driver then builds
+    * each key's centroid: the member mean (`ArrayMean.Sums.mean`)
+    * rounded 1e-6 per component as Spark's `round(…, 6)` rounds (the
+    * oracle's `round(avg(emb[i]), 6)`), and `cnrm` = ‖mean‖ through
+    * `VectorImpls.dot` when the seeds carry it. Rows are ordered by
+    * their `keys` leading columns; a member whose cell is NULL (it met
+    * no centroid) is dropped, and a NULL member vector counts toward no
+    * component, as in `array_mean`. Jobs are described `ivfpq train <phase> round r`,
     * the seeding job being round 0. */
   private def lloyd(seeds: DataFrame, rounds: Int, keys: Int, phase: String)(
       assign: graft.functions.Centroids => DataFrame): ModelRows = {
+    import graft.functions.{Centroids, VectorImpls}
     import graft.functions.ArrayMean.Sums
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
     val spark = seeds.sparkSession
     val norms = seeds.columns.contains("cnrm")
     val seeded = described(spark, s"ivfpq train $phase round 0")(seeds.collect().toSeq)
@@ -366,14 +371,14 @@ object Similarity {
           })
       }
       sums.toSeq.sortBy(_._1).map { case ((k0, k1), s) =>
-        val mean = Option.when(s.seen)(s.sums.indices.map(i =>
-          if (s.counts(i) == 0) null
-          else Double.box(graft.functions.Centroids.round6(s.sums(i) / s.counts(i)))))
-        // ‖mean‖ as array_dot folds it: in order, a NULL component as 0.0
-        val cnrm = mean.map(m => math.sqrt(m.foldLeft(0.0)((acc, x) =>
-          if (x == null) acc else acc + x * x)))
-        Row.fromSeq((if (keys > 1) Seq(k0, k1) else Seq(k0)) ++ Seq(mean.orNull) ++
-          (if (norms) Seq(cnrm.map(Double.box).orNull) else Nil))
+        val mean = Option(s.mean).map(m => new GenericArrayData(m.array.map {
+          case x: Double => Centroids.round6(x)
+          case null => null
+        }))
+        // a NULL component reads 0.0 in the dot, as in an UnsafeArrayData
+        val cnrm = mean.map(m => Double.box(math.sqrt(VectorImpls.dot(m, m))))
+        Row.fromSeq((if (keys > 1) Seq(k0, k1) else Seq(k0)) ++
+          Seq(mean.map(_.array.toSeq).orNull) ++ (if (norms) Seq(cnrm.orNull) else Nil))
       }
     }
     (seeds.schema, trained)
@@ -1119,12 +1124,16 @@ object Similarity {
 
   /** [[subvecsAt]] over an explicit (vec_id, e) frame — s12's fold-in
     * encodes a DELTA batch, not a table scan. */
-  private[graft] def subvecsOf(e: DataFrame, m: Int): DataFrame = {
-    val subDim = 64 / m
+  private[graft] def subvecsOf(e: DataFrame, m: Int): DataFrame =
     e.select(col("vec_id"),
         explode(sequence(lit(0), lit(m - 1))).as("sub"), col("e"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("e"), col("sub") * subDim + 1, lit(subDim)).as("v"))
+      .select(col("vec_id"), col("sub"), subvec(col("e"), col("sub"), m).as("v"))
+
+  /** Subspace `sub`'s slice of a 64-dim vector split into m contiguous
+    * (64/m)-dim slices — the one slicing rule of the PQ subspaces. */
+  private def subvec(e: Column, sub: Column, m: Int): Column = {
+    val subDim = 64 / m
+    slice(e, sub * subDim + 1, lit(subDim))
   }
 
   /** Argmin-L2 codeword per (vec_id, sub) against a codebook — the PQ
@@ -1134,7 +1143,10 @@ object Similarity {
     * row_number window expresses, but as a declarative aggregate it
     * partial-aggregates map-side: each subvector's [[S07Codes]]
     * candidate rows collapse before the shuffle, so the exchange
-    * carries n·M rows, not n·M·[[S07Codes]] (the s03 max_by rationale). */
+    * carries n·M rows, not n·M·[[S07Codes]] (the s03 max_by rationale).
+    * Only the s07 search ([[s07AdcAt]], at any subquantizer count m)
+    * encodes this way; every IVF-PQ code store is built in-row by
+    * [[codeRows]], with the same argmin and tie-break. */
   private[graft] def s07Encode(sv: DataFrame, cb: DataFrame): DataFrame =
     sv.join(broadcast(cb), Seq("sub"))
       .withColumn("d2", round(l2sq(col("v"), col("cv")), 6))
@@ -1196,7 +1208,6 @@ object Similarity {
   private[graft] def codeRows(vecs: DataFrame, cc: Seq[Row], fc: Seq[Row],
       cb: Seq[Row], k2: Int): DataFrame = {
     import graft.functions.VectorFunctions.{nearest_cosine, nearest_l2}
-    val subDim = 64 / S07Subspaces
     val subs = cb.map(_.getInt(0)).distinct.sorted.filter(_ < S07Subspaces)
     vecs.select(col("vec_id"), col("e"),
         nearest_cosine(col("e"), lit(0), centroidsOf(cc, keyed = false)).as("ccid"))
@@ -1205,7 +1216,7 @@ object Similarity {
       .select(col("vec_id"), col("e"), col("cell"),
         explode(when(col("cell").isNotNull, typedLit(subs))).as("sub"))
       .select(col("vec_id"), col("sub"),
-        nearest_l2(slice(col("e"), col("sub") * subDim + 1, lit(subDim)), col("sub"),
+        nearest_l2(subvec(col("e"), col("sub"), S07Subspaces), col("sub"),
           centroidsOf(cb, keyed = true)).as("code"),
         col("cell"))
   }
@@ -1359,15 +1370,13 @@ object Similarity {
   private def s09ScoredAt(spark: SparkSession, dir: String,
       fineProbes: Int): DataFrame = {
     val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
-    val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
+    val (_, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, LloydRounds)
+    val cbRows = codebookRows(spark, dir, S07Rounds, S07Subspaces, S07Codes)
+    val (ccents, fcents, cb) = (frameOf(spark, cc), frameOf(spark, fc), frameOf(spark, cbRows))
     val sv = subvecs(spark, dir)
-    val cb = s07Codebooks(spark, dir, S07Rounds)
-    val codes = s07Encode(sv, cb)
-      .select(col("vec_id"), col("sub"), col("cid").as("code"))
-    // build-time: key the code store by composite cell (deploy form:
+    // build-time: the code store keyed by composite cell (deploy form:
     // write bucketed by cell — the d13 persisted-index pattern)
-    val codesByCell = codes.join(
-      assigned.select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
+    val codesByCell = codeRows(emb(spark, dir), cc._2, fc._2, cbRows._2, k2)
     val fprobes = probeCells(spark, dir, ccents, fcents, k2, fineProbes)
       .select(col("qid"), col("cid").as("cell"))
     val dtab = sv.filter(col("vec_id") < NumQueries)
@@ -2500,13 +2509,11 @@ object Similarity {
     import graft.functions.VectorFunctions.array_dot
     val (k1, k2) = d12FactorsAt(
       Tables.count(spark, dir, "embeddings"), cellTarget)
-    val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
+    val (_, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, LloydRounds)
+    val cbRows = codebookRows(spark, dir, S07Rounds, S07Subspaces, S07Codes)
+    val (ccents, fcents, cb) = (frameOf(spark, cc), frameOf(spark, fc), frameOf(spark, cbRows))
     val sv = subvecs(spark, dir)
-    val cb = s07Codebooks(spark, dir, S07Rounds)
-    val codes = s07Encode(sv, cb)
-      .select(col("vec_id"), col("sub"), col("cid").as("code"))
-    val codesByCell = codes.join(
-      assigned.select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
+    val codesByCell = codeRows(emb(spark, dir), cc._2, fc._2, cbRows._2, k2)
     val all = emb(spark, dir)
       .withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
     val queries = all.select(

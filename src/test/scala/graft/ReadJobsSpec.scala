@@ -67,4 +67,17 @@ class ReadJobsSpec extends AnyFunSuite {
     val (again, recount) = jobs(Tables.count(spark, dir, "t"))
     assert(again == 2L && recount > 0, s"a rewritten dir must be counted afresh: $again rows, $recount jobs")
   }
+
+  test("Tables.count does not memoize a partitioned table; a rewrite inside a partition is counted") {
+    val dir = IO.scratchDir("graft-countparts")
+    Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "p")
+      .write.partitionBy("p").parquet(s"$dir/t.parquet")
+    assert(jobs(Tables.count(spark, dir, "t"))._1 == 3L)
+    val (n, repeat) = jobs(Tables.count(spark, dir, "t"))
+    assert(n == 3L && repeat > 0, s"a partitioned table is counted on every call: $n rows, $repeat jobs")
+    // replace p=a's files only; the top-level listing may not change
+    Seq(4L).toDF("id").write.mode("overwrite").parquet(s"$dir/t.parquet/p=a")
+    assert(jobs(Tables.count(spark, dir, "t"))._1 == 2L,
+      "a rewrite inside a partition directory must be counted")
+  }
 }
