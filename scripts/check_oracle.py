@@ -6,6 +6,11 @@ Usage: python3 scripts/check_oracle.py <sfDir> <outDir>
   2. this script:   for each <outDir>/<name>/ parquet + oracle_sql.json entry,
                     run the SQL in DuckDB over <sfDir>/*.parquet and compare.
 
+Subset run: sbt "runMain graft.Verify <sfDir> <outDir> s09_,s11_,e01_" runs
+only the queries whose names start with one of the comma-separated
+prefixes, and writes an oracle_sql.json that names only them, so this
+script reports just that subset.
+
 NOT part of the shipped library (the Scala engine never imports this) —
 it exists so oracle mismatches surface locally before the driver runs.
 """

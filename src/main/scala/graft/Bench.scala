@@ -1,7 +1,7 @@
 package graft
 
 import graft.codecs.Codecs
-import graft.core.IO
+import graft.core.{IO, Session}
 import graft.gen.EventsGenerator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +22,7 @@ object Bench {
 
   /** The raw operators behind the invariant gates, timed next to the
     * SparkEntry queries (see the "raw operators" section in main).
-    * Object-level so [[graft.tools.Remeasure]] can resolve a flagged
+    * Object-level so `graft.tools.Q remeasure` can resolve a flagged
     * operator row by name in its fresh JVM. */
   private[graft] lazy val rawOperators: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "d05_simhash_op" -> (graft.operators.Dedup.d05SimHash _),
@@ -39,12 +39,12 @@ object Bench {
   )
 
   /** Spawn a FRESH JVM (same classpath + module args as this one) running
-    * [[graft.tools.Remeasure]] over the flagged query names — the
+    * `graft.tools.Q remeasure` over the flagged query names — the
     * adjudication arm of the cross-round regression gate. A flag that
     * survives in-process escalation is still ambiguous: the plan may
     * have regressed, or a contention window may have covered every
     * in-process rep equally (r8's p01, r9's st02 — both adjudicated
-    * environmental only by a HAND-run fresh-JVM TimeQ; this makes that
+    * environmental only by a HAND-run fresh-JVM timing; this makes that
     * procedure part of the artifact). Returns name → successful rep
     * seconds; empty map / missing name when the child fails — the flag
     * then stands unadjudicated rather than silently cleared. */
@@ -63,7 +63,7 @@ object Bench {
             a.startsWith("-Xrunjdwp") || a.startsWith("-Dsbt."))
       val cmd = (Seq(javaBin) ++ jvmArgs ++
         Seq("-cp", System.getProperty("java.class.path"),
-          "graft.tools.Remeasure", sfDir, reps.toString) ++ names).asJava
+          "graft.tools.Q", "remeasure", sfDir, reps.toString) ++ names).asJava
       val proc = new ProcessBuilder(cmd).redirectErrorStream(true).start()
       // watchdog: a hung child (e.g. a stuck streaming trigger) must not
       // hang the bench — kill after a generous wall bound
@@ -103,16 +103,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // JVM/codegen warmup so the first timed query doesn't absorb
     // executor startup + first-compile costs. Each heavy machinery is
@@ -724,13 +715,7 @@ object Bench {
       queryTimes.count(_._2 < 0), maxSpread, regressions, inv,
       sfDir, outFile)
     IO.deleteRecursively(java.nio.file.Paths.get(tmp)) // scratch gone before exit
-    // stop the StateStore maintenance scheduler BEFORE SparkEnv dies:
-    // otherwise its next tick fires after spark.stop() and prints an
-    // IllegalStateException stack into the artifact tail (round-14
-    // verdict item 7) — the streaming queries themselves are already
-    // stopped, only the global maintenance thread lingers
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    spark.stop() // stop BEFORE the JSON line so no shutdown logs trail it
+    Session.stop(spark) // stop BEFORE the JSON line so no shutdown logs trail it
     println(summary)
   }
 

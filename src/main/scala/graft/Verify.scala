@@ -1,4 +1,5 @@
 package graft
+import graft.core.Session
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -10,20 +11,23 @@ object Verify {
     // those queries (the driver always passes exactly two args)
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    dump(spark, sfDir, outDir, only)
+    Session.stop(spark)
+  }
+
+  /** Write each selected query's result to `<outDir>/<name>` and the
+    * oracle_sql.json / exact_twins.json manifests. `only` (name
+    * prefixes) selects a subset, and both manifests then name just the
+    * selected queries, so scripts/check_oracle.py gates exactly what
+    * ran; with `None` every query runs and the manifests are complete. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Seq[String]]): Unit = {
+    val selected = SparkEntry.queries.filter { case (name, _) =>
+      only.forall(_.exists(name.startsWith)) }
+    def ran(name: String): Boolean = only.isEmpty || selected.contains(name)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,19 +46,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => ran(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // machine-readable truth-twin manifest (SparkEntry.exactTwins): maps
     // each oracle-exact `weak`-at-scale query to its deploy-path twins
     // so artifact consumers can't mistake a truth twin for the scale form
-    val twins = SparkEntry.exactTwins.toSeq.sortBy(_._1)
+    val twins = SparkEntry.exactTwins.toSeq.filter(kv => ran(kv._1)).sortBy(_._1)
       .map { case (k, vs) => s"${q(k)}: ${vs.map(q).mkString("[", ",", "]")}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/exact_twins.json"), twins)
-    // stop the StateStore maintenance scheduler before SparkEnv dies —
-    // keeps the driver-captured tail free of post-stop stack traces
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    spark.stop()
   }
 }

@@ -26,9 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * Output is the REAL documents schema (doc_id, text, lang, source,
   * n_chars), so every gate query runs against a generated corpus
-  * unchanged. The 10×-scale fixture builder (test-scope
-  * PlantedCorpus) delegates here — the corpora the NOTES sweeps
-  * measure ARE this generator's output. */
+  * unchanged. The corpora the NOTES sweeps measure ARE this
+  * generator's output. */
 object DocsGenerator {
 
   /** word k of doc `id` — three regimes by id range (see scaladoc). */

@@ -819,7 +819,7 @@ object Dedup {
     * 1.0 by construction, not probabilistic. (The previous 4×16-bit
     * contiguous banding guaranteed only hamming ≤ 3 and caught 4-6
     * w.p. < 1: measured catch 0.84 at sf0.01 with half the misses at
-    * hamming 5-6 — graft.tools.Measure, NOTES round 7.) 7× the band
+    * hamming 5-6 — NOTES round 7.) 7× the band
     * rows of the old layout, rows stay 24 B. NOTE: simhash chunk
     * values CONCENTRATE on natural text (every doc's majority tokens
     * pull the same bits the same way), so the mode chunk-pair bucket
@@ -853,14 +853,8 @@ object Dedup {
     * ([[capBandBuckets]]): the all-zero band every short/boilerplate
     * doc shares is precisely this operator's degenerate key.
     */
-  def d05SimHash(spark: SparkSession, dir: String): DataFrame =
-    d05SimHashCapped(spark, dir, bandCap(docs(spark, dir).count()))
-
-  /** [[d05SimHash]] with an explicit band-bucket cap — the sweep seam
-    * (graft.tools.Measure sweeps the cap fraction so the published
-    * catch floor carries its sensitivity, NOTES round 7). */
-  private[graft] def d05SimHashCapped(
-      spark: SparkSession, dir: String, cap: Long): DataFrame = {
+  def d05SimHash(spark: SparkSession, dir: String): DataFrame = {
+    val cap = bandCap(docs(spark, dir).count())
     val bands = capBandBuckets(simhashBandsDf(spark, dir), Seq("band", "bh"), cap)
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
@@ -881,7 +875,7 @@ object Dedup {
     * the ACTUAL fraction of true near-dup pairs that [[d05SimHash]]
     * found. Floor 0.8 matches the ScalaTest pin and is green with
     * margin at the driver SFs (measured 0.84 at sf0.01, 0.92 at
-    * sf0.1 — graft.tools.Measure; deterministic per dataset). */
+    * sf0.1 — NOTES round 7; deterministic per dataset). */
   def d05SimHashCatch(spark: SparkSession, dir: String): DataFrame = {
     val sim = d05SimHash(spark, dir).select(col("ida"), col("idb"))
     val truth = d03NgramJaccard(spark, dir).select(col("ida"), col("idb"))
@@ -1128,9 +1122,9 @@ object Dedup {
     *    and distinct() touches only survivors. Right when candidates
     *    >> n — adversarially uniform corpora like this synthetic one,
     *    where the pair-event set (~58M at 50k vectors) dwarfs the
-    *    corpus and the per-pair join+distinct dominates. Measured by
-    *    ScaleCheck at 50.5k vectors: fused 11-65 s vs 537-622 s
-    *    unfused across runs (~10-50×) — identical output, planted
+    *    corpus and the per-pair join+distinct dominates. Measured at
+    *    50.5k vectors (NOTES, sf1 scale validation): fused 11-65 s vs
+    *    537-622 s unfused across runs (~10-50×) — identical output, planted
     *    recall 500/500 both ways.
     *    The unfused form's cost there is the 58M-row distinct plus two
     *    candidate↔corpus joins; the fused form pays vectors-through-
@@ -1184,7 +1178,7 @@ object Dedup {
     * τ-survivors. Bucket arrays are bounded by the band cap
     * ([[capBandBuckets]] runs first), so a row is at most cap·(vector
     * bytes) — the same bound the fused join's per-key build side has.
-    * Measured (DensitySweep, NOTES round 11): bucket-local ≤ fused at
+    * Measured (NOTES round 11): bucket-local ≤ fused at
     * EVERY density and the gap widens with it — 1.4 vs 3.1 s at
     * pe/n ≈ 548 (n=20k), 1.7 vs 3.2 s at pe/n ≈ 1090 (n=40k, where
     * unfused reads 23.9 s) — so the router's dense branch picks THIS
@@ -1212,10 +1206,10 @@ object Dedup {
   /** Candidate-density crossover of the d09 plan router: the dense
     * family (bucket-local since round 11; previously fused) is chosen
     * when expected pair events exceed this multiple of the corpus
-    * size. Measured (graft.tools.DensitySweep, NOTES rounds 7/11): on
+    * size. Measured (NOTES rounds 7/11): on
     * uniform 64-dim corpora the dense plans win at every measured
     * density — fused 1.5× at pe/n ≈ 55 widening to 5.4× at
-    * pe/n ≈ 1090 (10-50× at ScaleCheck's 50.5k vectors), bucket-local
+    * pe/n ≈ 1090 (10-50× at the scale check's 50.5k vectors), bucket-local
     * another ~2× past fused at the dense end — so the
     * local walls alone would route everything dense. The unfused plan
     * earns its keep on what local benches cannot show: SHUFFLE VOLUME
@@ -1238,7 +1232,7 @@ object Dedup {
     * executor-storage lifecycle management inside a lazy plan, a bad
     * deal at this cost). The DENSE branch routes BUCKET-LOCAL
     * ([[lshCosineVerifiedPairsBucketLocal]]) since round 11 — it won
-    * the DensitySweep at every measured density over the fused join
+    * the density sweep at every measured density over the fused join
     * it replaced (same vectors-ride-the-shuffle volume profile, but
     * pair events never cross a join). All three plans produce the
     * identical pair set (OperatorSpec pins set equality), so routing
@@ -1404,7 +1398,7 @@ object Dedup {
     // partitions by BYTES (advisory 64 MB), which collapses this
     // query's small-but-CPU-dense intermediates to ONE partition — the
     // q-gram explode and the banded-Levenshtein verify (O(k·n) per
-    // pair) then run serially (ProfileQ: three single-task jobs of
+    // pair) then run serially (`Q profile`: three single-task jobs of
     // 2.1-2.8 s owned d16's 6.8 s wall at sf0.1). An explicit count on
     // repartition() is exempt from AQE coalescing; defaultParallelism
     // keeps it scale-adaptive (cores of whatever cluster runs it), and
@@ -1521,7 +1515,7 @@ object Dedup {
     //
     // Round-19 job-count rewrite (guide §1.2/§5 — at the gate SFs the
     // loop is bound by per-job fixed cost, one localCheckpoint or count
-    // action each: ProfileQ measured d07's CC tail as ~27 jobs of
+    // action each: `Q profile` measured d07's CC tail as ~27 jobs of
     // 10-60 ms): the undirected edge list materializes ONCE as the
     // already-filtered supernode graph (the historical form checkpointed
     // `edges` and then `cedges` — two jobs writing almost the same

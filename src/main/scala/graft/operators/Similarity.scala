@@ -119,7 +119,7 @@ object Similarity {
     * replays the exact-top-k side in SQL and asserts `recall_ok`;
     * Spark computes the ACTUAL aggregate recall of [[s02AnnLsh]] and
     * compares against the floor. The floor is set from MEASURED values
-    * (0.22 at sf0.01, 0.36 at sf0.1 — graft.tools.Measure; re-measured
+    * (0.22 at sf0.01, 0.36 at sf0.1 — NOTES.md measured lessons; re-measured
     * identical in round 9, so 0.15 already sits 0.07 under the measured
     * minimum — TIGHTER than the 0.12-margin d05/s04 standard, hence not
     * raised): these
@@ -214,9 +214,10 @@ object Similarity {
         first(col("e")).as("e"), first(col("nrm")).as("nrm"))
   }
 
-  // 3 rounds: the r8 S04Sweep measured recall@5 per round count at all
-  // three SFs — rounds=3 is the max at every SF (0.66/0.64/0.62 vs
-  // 0.58/0.54/0.60 at 2, 0.62/0.60/0.60 at 4) for ~0.5 s extra wall;
+  // 3 rounds: the round-8 sweep (NOTES) measured recall@5 per round
+  // count at all three SFs — rounds=3 is the max at every SF
+  // (0.66/0.64/0.62 vs 0.58/0.54/0.60 at 2, 0.62/0.60/0.60 at 4) for
+  // ~0.5 s extra wall;
   // the OperatorSpec floor (0.5) sits 0.12 under the measured minimum.
   private[graft] val LloydRounds = 3
 
@@ -244,10 +245,34 @@ object Similarity {
     * GENERATED per round ([[s04OracleSql]]) — the CTE chain grows
     * mechanically with the round count, so changing [[LloydRounds]]
     * cannot desynchronize engine and oracle (round-3 judge item 6).
-    * Recall-vs-rounds on this corpus is measured by graft.tools.Measure
-    * and recorded in NOTES.md. */
-  def s04AnnIvfKmeans(spark: SparkSession, dir: String): DataFrame =
-    s04WithRounds(spark, dir, LloydRounds)
+    * Recall-vs-rounds on this corpus is recorded in NOTES.md (measured
+    * lessons). */
+  def s04AnnIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.VectorFunctions.array_dot
+    val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
+    val refined = trainedCentroids(spark, dir, LloydRounds)
+    val assigned = assignCells(all, refined)
+    val wProbe = Window.partitionBy(col("qid"))
+      .orderBy(round(col("cos_c"), 6).desc, col("cid").asc)
+    val probes = all.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
+      .crossJoin(broadcast(refined))
+      .withColumn("cos_c", array_dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")))
+      .withColumn("rk", row_number().over(wProbe))
+      .filter(col("rk") <= IvfProbes)
+      .select(col("qid"), col("qe"), col("qnrm"), col("cid"))
+    val wRank = Window.partitionBy(col("qid"))
+      .orderBy(round(col("c"), 6).desc, col("nid").asc)
+    probes.join(assigned, Seq("cid"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("nid"),
+        (array_dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("c"))
+      .withColumn("rn", row_number().over(wRank))
+      .filter(col("rn") <= K)
+      .select(col("qid").as("query_id"), col("rn").cast("long").as("rnk"),
+        col("nid").as("neighbor_id"), round(col("c"), 4).as("cos_sim"))
+      .orderBy("query_id", "rnk")
+  }
 
   /** The trained coarse quantizer — stride seeds refined by `rounds`
     * Lloyd rounds (mean member vector per cell, element-wise, rounded
@@ -391,34 +416,6 @@ object Similarity {
       if (keyed) (r.getInt(0), r.getInt(1), r.getSeq[Double](2))
       else (0, r.getInt(0), r.getSeq[Double](1))))
 
-  private[graft] def s04WithRounds(
-      spark: SparkSession, dir: String, rounds: Int): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val refined = trainedCentroids(spark, dir, rounds)
-    val assigned = assignCells(all, refined)
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(round(col("cos_c"), 6).desc, col("cid").asc)
-    val probes = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
-      .crossJoin(broadcast(refined))
-      .withColumn("cos_c", array_dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")))
-      .withColumn("rk", row_number().over(wProbe))
-      .filter(col("rk") <= IvfProbes)
-      .select(col("qid"), col("qe"), col("qnrm"), col("cid"))
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(round(col("c"), 6).desc, col("nid").asc)
-    probes.join(assigned, Seq("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (array_dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("c"))
-      .withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= K)
-      .select(col("qid").as("query_id"), col("rn").cast("long").as("rnk"),
-        col("nid").as("neighbor_id"), round(col("c"), 4).as("cos_sim"))
-      .orderBy("query_id", "rnk")
-  }
-
   /** The s04 train+index+search pipeline in DuckDB SQL, the CTE chain
     * GENERATED per Lloyd round: cent0 = stride seeds; per round r,
     * a(r-1) = argmax-cosine assignment against cent(r-1) and cent(r) =
@@ -500,7 +497,7 @@ object Similarity {
     * switches to the two-level (coarse-then-fine) quantizer — d12
     * ([[d12SemanticDedup2Level]]/[[twoLevelAssign]]), whose K is
     * corpus-relative and uncapped; the crossover is measured in
-    * NOTES.md (9-11× at K = 4096-16384, graft.tools.TwoLevelSweep). */
+    * NOTES.md (9-11× at K = 4096-16384, measured round 10). */
   private[graft] val D11CellTarget = 1024L
   private[graft] val D11MaxCells = 4096
   private[graft] def d11CellCount(n: Long): Int =
@@ -578,23 +575,14 @@ object Similarity {
   private[graft] def d12Factors(n: Long): (Int, Int) =
     d12FactorsAt(n, D11CellTarget)
 
-  /** [[d12Factors]] at an explicit cell target — the sweep seam
-    * (graft.tools.D12CellSweep measures the census-wall-vs-recall
-    * trade at 512/1024/2048 so the [[D11CellTarget]] default is
-    * defended with data, NOTES round 11). */
+  /** [[d12Factors]] at an explicit cell target — the at-scale seam (the
+    * census-wall-vs-recall trade at 512/1024/2048 that defends the
+    * [[D11CellTarget]] default is in NOTES round 11). */
   private[graft] def d12FactorsAt(n: Long, cellTarget: Long): (Int, Int) = {
     val k = math.max(16L, n / cellTarget)
     val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
     val k2 = ((k + k1 - 1) / k1).toInt
     (k1, k2)
-  }
-
-  /** The d12 census at an explicit cell target (sweep seam). */
-  private[graft] def d12CensusAt(spark: SparkSession, dir: String,
-      cellTarget: Long, rounds: Int): DataFrame = {
-    val (k1, k2) = d12FactorsAt(
-      Tables.count(spark, dir, "embeddings"), cellTarget)
-    semdedupCensus(twoLevelAssign(spark, dir, k1, k2, rounds))
   }
 
   /** Fine-level argmax-cosine assignment: each vector meets ONLY its own
@@ -625,8 +613,8 @@ object Similarity {
     * oracle replays it CTE-for-CTE ([[d12OracleSql]]). Returns
     * (vec_id, e, nrm, cid) with the composite cid = ccid·k2 + fcid. */
   private[graft] def twoLevelAssign(spark: SparkSession, dir: String,
-      k1: Int, k2: Int, rounds: Int): DataFrame =
-    twoLevelModel(spark, dir, k1, k2, rounds)._3
+      k1: Int, k2: Int): DataFrame =
+    twoLevelModel(spark, dir, k1, k2, LloydRounds)._3
 
   /** The full two-level model — (coarse centroids (cid, ce, cnrm),
     * fine centroids (ccid, fcid, ce, cnrm), assignment (vec_id, e,
@@ -708,11 +696,11 @@ object Similarity {
     * the two policies coincide in total cell count (K < 4096), so d12
     * certifies the two-level machinery's cross-engine exactness where
     * the oracle can afford to replay it; the K > 4096 regime — where
-    * only the two-level form is viable — is measured by
-    * graft.tools.TwoLevelSweep (NOTES.md datapoint). */
+    * only the two-level form is viable — is measured in NOTES.md
+    * (round 10 datapoint). */
   def d12SemanticDedup2Level(spark: SparkSession, dir: String): DataFrame = {
     val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
-    semdedupCensus(twoLevelAssign(spark, dir, k1, k2, LloydRounds))
+    semdedupCensus(twoLevelAssign(spark, dir, k1, k2))
   }
 
   private[graft] val S06CoarseProbes = 2
@@ -794,14 +782,14 @@ object Similarity {
     * Query-side cost is k1 + probes·k2 ≈ O(√K) centroid distances per
     * query instead of the flat quantizer's K — the same 2√K-vs-K win
     * the d12 dedup census measured at 9-11× for assignment
-    * (TwoLevelSweep, NOTES.md); centroids broadcast (k1·k2 rows, the
+    * (NOTES.md, round 10); centroids broadcast (k1·k2 rows, the
     * "centroids fit in RAM" IVF assumption). Every stage is
     * deterministic (rounded rank keys, id tie-breaks), so the DuckDB
     * oracle replays train+index+probe+search CTE-for-CTE
     * ([[s06OracleSql]] — a full row-for-row gate, stronger than the
     * s02-style recall invariant). Recall at K > 4096 — the regime the
-    * flat quantizer can't reach — is measured on a planted corpus by
-    * graft.tools.S06AtScale (NOTES.md round 11). */
+    * flat quantizer can't reach — is measured on a planted corpus in
+    * NOTES.md round 11. */
   def s06AnnIvf2Level(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
@@ -850,18 +838,12 @@ object Similarity {
     * (rounded rank keys, id tie-breaks, integer populations), so the
     * DuckDB oracle ([[s15OracleSql]]) replays
     * train+census+policy+search row-for-row. */
-  def s15AdaptiveProbes(spark: SparkSession, dir: String): DataFrame =
-    s15At(spark, dir, S15BudgetCells)
-
-  /** [[s15AdaptiveProbes]] at an explicit budget multiplier — the
-    * S15Sweep seam (budget-vs-recall-vs-scanned trade, NOTES). */
-  private[graft] def s15At(spark: SparkSession, dir: String,
-      budgetCells: Double): DataFrame = {
+  def s15AdaptiveProbes(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val n = Tables.count(spark, dir, "embeddings")
     val (k1, k2) = d12Factors(n)
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
-    val budget = math.ceil(budgetCells * n / (k1.toLong * k2)).toLong
+    val budget = math.ceil(S15BudgetCells * n / (k1.toLong * k2)).toLong
     val all = emb(spark, dir)
       .withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
     val queries = all.filter(col("vec_id") < NumQueries)
@@ -1115,10 +1097,9 @@ object Similarity {
   private def subvecs(spark: SparkSession, dir: String): DataFrame =
     subvecsAt(spark, dir, S07Subspaces)
 
-  /** [[subvecs]] at an explicit subquantizer count m (subDim = 64/m) —
-    * the sweep seam (graft.tools.PqSweep measures the
-    * compression-recall trade at M ∈ {4, 8, 16} so the [[S07Subspaces]]
-    * default is defended with data). */
+  /** [[subvecs]] at an explicit subquantizer count m (subDim = 64/m).
+    * The compression-recall trade at M ∈ {4, 8, 16} that defends the
+    * [[S07Subspaces]] default is in NOTES round 12. */
   private[graft] def subvecsAt(spark: SparkSession, dir: String, m: Int): DataFrame =
     subvecsOf(emb(spark, dir), m)
 
@@ -1144,9 +1125,9 @@ object Similarity {
     * partial-aggregates map-side: each subvector's [[S07Codes]]
     * candidate rows collapse before the shuffle, so the exchange
     * carries n·M rows, not n·M·[[S07Codes]] (the s03 max_by rationale).
-    * Only the s07 search ([[s07AdcAt]], at any subquantizer count m)
-    * encodes this way; every IVF-PQ code store is built in-row by
-    * [[codeRows]], with the same argmin and tie-break. */
+    * Only the s07 search ([[s07PqAdc]]) encodes this way; every IVF-PQ
+    * code store is built in-row by [[codeRows]], with the same argmin
+    * and tie-break. */
   private[graft] def s07Encode(sv: DataFrame, cb: DataFrame): DataFrame =
     sv.join(broadcast(cb), Seq("sub"))
       .withColumn("d2", round(l2sq(col("v"), col("cv")), 6))
@@ -1168,7 +1149,7 @@ object Similarity {
       spark: SparkSession, dir: String, rounds: Int): DataFrame =
     s07CodebooksAt(spark, dir, rounds, S07Subspaces, S07Codes)
 
-  /** [[s07Codebooks]] at explicit (m, nCodes) — the PqSweep seam. */
+  /** [[s07Codebooks]] at explicit (m, nCodes). */
   private[graft] def s07CodebooksAt(spark: SparkSession, dir: String,
       rounds: Int, m: Int, nCodes: Int): DataFrame =
     frameOf(spark, codebookRows(spark, dir, rounds, m, nCodes))
@@ -1288,15 +1269,9 @@ object Similarity {
       .orderBy("query_id", "rnk")
   }
 
-  def s07PqAdc(spark: SparkSession, dir: String): DataFrame =
-    s07AdcAt(spark, dir, S07Subspaces, S07Rounds)
-
-  /** [[s07PqAdc]] at an explicit subquantizer count — the PqSweep seam
-    * (compression-recall trade at M ∈ {4, 8, 16}, NOTES round 12). */
-  private[graft] def s07AdcAt(spark: SparkSession, dir: String,
-      m: Int, rounds: Int): DataFrame = {
-    val sv = subvecsAt(spark, dir, m)
-    val cb = s07CodebooksAt(spark, dir, rounds, m, S07Codes)
+  def s07PqAdc(spark: SparkSession, dir: String): DataFrame = {
+    val sv = subvecs(spark, dir)
+    val cb = s07Codebooks(spark, dir, S07Rounds)
     val codes = s07Encode(sv, cb).select(col("vec_id"), col("sub"), col("cid"))
     val dtab = sv.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
@@ -1343,16 +1318,9 @@ object Similarity {
     * blocks under one WITH — same model, same codebooks, same probe —
     * and replays train+index+probe+scan row-for-row. Recall vs the
     * exact s01 baseline on the planted corpus and the measured
-    * scan-reduction factor are recorded in NOTES.md
-    * (graft.tools.S09AtScale). */
-  def s09IvfPq(spark: SparkSession, dir: String): DataFrame =
-    s09At(spark, dir, S06FineProbes)
-
-  /** [[s09IvfPq]] at an explicit fine-probe count — the PqSweep seam
-    * (probes-vs-recall trade, NOTES round 12). */
-  private[graft] def s09At(spark: SparkSession, dir: String,
-      fineProbes: Int): DataFrame = {
-    val scored = s09ScoredAt(spark, dir, fineProbes)
+    * scan-reduction factor are recorded in NOTES.md round 12. */
+  def s09IvfPq(spark: SparkSession, dir: String): DataFrame = {
+    val scored = s09ScoredAt(spark, dir, S06FineProbes)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("adc_units").asc, col("vec_id").asc)
     scored.withColumn("rn", row_number().over(w))
@@ -2500,8 +2468,9 @@ object Similarity {
     s22ScoredAllAt(spark, dir, D11CellTarget, S06FineProbes)
 
   /** [[s22ScoredAll]] at explicit (cellTarget, fineProbes) — the
-    * S22AtScale seam: per-node candidate count is probes·cellTarget,
-    * so a single box shrinks cells to hold the per-node budget where a
+    * at-scale seam (NOTES round 15): per-node candidate count is
+    * probes·cellTarget, so a single box shrinks cells to hold the
+    * per-node budget where a
     * 1000-executor cluster would keep the defaults and spread the same
     * total work. */
   private[graft] def s22ScoredAllAt(spark: SparkSession, dir: String,
@@ -2556,7 +2525,7 @@ object Similarity {
     * d12's corpus-relative cell sizing — so the build scales linearly
     * with n. The DuckDB oracle replays train+index+probe+scan+refine
     * row-for-row ([[s22OracleSql]]); planted-neighbor recall and the
-    * at-scale wall are measured by graft.tools.S22AtScale (NOTES). */
+    * at-scale wall are measured in NOTES round 15. */
   def s22KnnGraph(spark: SparkSession, dir: String): DataFrame =
     // the stored artifact is bucket-sorted, not globally sorted — the
     // gate face re-states the output order the contract names
@@ -2606,7 +2575,7 @@ object Similarity {
   }
 
   /** [[s22KnnGraph]] at explicit (cellTarget, fineProbes, pool) — the
-    * S22AtScale seam. The first caller per (context, dir, params) pays
+    * at-scale seam (NOTES round 15). The first caller per (context, dir, params) pays
     * the build AND the store write; everyone after reads the stored
     * parquet files. */
   private[graft] def s22GraphAt(spark: SparkSession, dir: String,
@@ -2852,8 +2821,9 @@ object Similarity {
   }
 
   /** The seed over explicit probe/assignment frames — the at-scale
-    * tool seam (S25AtScale probes through ITS OWN cell-target's
-    * model, the gate through the memoized corpus-relative one). */
+    * seam (the NOTES round-15 graph datapoint probed through ITS OWN
+    * cell-target's model, the gate through the memoized corpus-relative
+    * one). */
   private[graft] def s23SeedOver(fprobes: DataFrame, assigned: DataFrame,
       beamWidth: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
@@ -2921,8 +2891,7 @@ object Similarity {
   }
 
   /** The serve half of s23 over an already-materialized edge frame and
-    * a (qid, node) seed frontier — the S22AtScale seam (build once,
-    * serve many). */
+    * a (qid, node) seed frontier (build once, serve many). */
   private[graft] def s23Serve(spark: SparkSession, all: DataFrame,
       graph: DataFrame, seed: DataFrame,
       rounds: Int, beamWidth: Int): DataFrame = {
@@ -3051,7 +3020,7 @@ object Similarity {
     }
 
   /** The prune over an explicit (already-materialized) candidate graph
-    * and vector frame — the S25AtScale seam. */
+    * and vector frame. */
   private[graft] def s24PruneOver(g: DataFrame, all: DataFrame,
       degree: Int): DataFrame = {
     def vecsAs(id: String, v: String): DataFrame =
@@ -3237,7 +3206,7 @@ object Similarity {
     s26BuildBaseAt(spark, dir, D11CellTarget, S06FineProbes)
 
   /** [[s26BuildBase]] at explicit (cellTarget, fineProbes) — the
-    * single-box at-scale seam (the S22AtScale knob rationale: one box
+    * single-box at-scale seam (the NOTES round-15 knob rationale: one box
     * shrinks cells to hold the per-node candidate budget, a
     * 1000-executor cluster keeps the gate defaults). */
   private[graft] def s26BuildBaseAt(spark: SparkSession, dir: String,

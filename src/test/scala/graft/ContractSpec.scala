@@ -17,6 +17,30 @@ class ContractSpec extends AnyFunSuite {
     qs.foreach(k => assert(k.matches("[a-z][a-z0-9_]+"), s"odd key: $k"))
   }
 
+  test("a Verify subset dump names exactly the queries it ran") {
+    val out = java.nio.file.Files.createTempDirectory("graft-verify-subset")
+    try {
+      Verify.dump(TestSpark.session, "/root/testdata/sf0.001", out.toString,
+        Some(Seq("q01_", "q18_")))
+      import scala.jdk.CollectionConverters._
+      def keys(file: String): Set[String] =
+        new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(out.resolve(file).toFile).fieldNames().asScala.toSet
+      val dirs = out.toFile.listFiles().filter(_.isDirectory).map(_.getName).toSet
+      assert(dirs == Set("q01_agg_pushdown", "q18_percentiles"), s"result dirs: $dirs")
+      assert(keys("oracle_sql.json") == dirs)
+      assert(keys("exact_twins.json") == Set("q18_percentiles"))
+    } finally graft.core.IO.deleteRecursively(out)
+  }
+
+  test("Q profile's job wall counts overlapping jobs once") {
+    // [0,10) and [5,15) overlap, [6,8) sits inside both, [20,30) is
+    // disjoint: 15 + 10 ms covered, not the 32 ms the durations sum to
+    val spans = Seq((20L, 30L), (0L, 10L), (6L, 8L), (5L, 15L))
+    assert(graft.tools.Q.coveredMs(spans) == 25L)
+    assert(graft.tools.Q.coveredMs(Nil) == 0L)
+  }
+
   test("bench summary line stays far under the driver's stdout-tail budget") {
     val inv = """{"a":true,"b":true,"c":true,"d":true,"e":false}"""
     // worst realistic case: MANY regressed queries with long names —

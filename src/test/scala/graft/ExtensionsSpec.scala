@@ -3,24 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions injection: a session built with
-  * `withExtensions(new GraftExtensions)` (≡ --conf spark.sql.extensions)
-  * can reach the whole native surface from pure SQL.
+/** GraftExtensions injection: a session built by
+  * [[graft.core.Session.local]] (`withExtensions(new GraftExtensions)`,
+  * ≡ --conf spark.sql.extensions) can reach the whole native surface
+  * from pure SQL.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
   /** getOrCreate ignores withExtensions when a session already exists,
     * so clear the active/default session (keeping the SparkContext) and
-    * build a genuinely new one with the extensions applied. */
+    * build a genuinely new one through the session factory. */
   private def extSession(): SparkSession = {
     val prior = TestSpark.session
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    try {
-      SparkSession.builder().master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions).getOrCreate()
-    } finally {
+    try graft.core.Session.local(4)
+    finally {
       SparkSession.setDefaultSession(prior)
       SparkSession.setActiveSession(prior)
     }
@@ -28,6 +26,10 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("native functions resolve from pure SQL via extensions") {
     val ext = extSession()
+    // the factory's session settings reach the new session
+    assert(ext.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(ext.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(ext.conf.get("spark.sql.shuffle.partitions") == "4")
     val row = ext.sql(
       """SELECT
         |  simhash64('a b c') AS sh,

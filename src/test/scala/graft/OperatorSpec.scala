@@ -131,7 +131,7 @@ class OperatorSpec extends AnyFunSuite {
     val ivf = pairs(Similarity.s04AnnIvfKmeans(spark, sf))
     val recall = exact.intersect(ivf).size.toDouble / exact.size
     info(s"k-means IVF recall@5 = $recall")
-    // floor from the r8 S04Sweep: measured 0.62-0.66 at LloydRounds=3
+    // floor from the round-8 sweep (NOTES): 0.62-0.66 at LloydRounds=3
     // across all SFs — 0.5 keeps a 0.12 margin (recall granularity is
     // 0.02 on the 50-pair query set)
     assert(recall >= 0.5, s"recall under the measured floor: $recall")
@@ -733,7 +733,7 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     // deterministic texts: 120-word docs from disjoint vocab ranges;
     // near-dups differ in exactly 3 word positions (shingle Jaccard
-    // ≈ 0.86, comfortably over the 0.6 bar — the PlantedCorpus shape)
+    // ≈ 0.86, comfortably over the 0.6 bar — the planted-corpus shape)
     def words(base: Int): Seq[String] = (0 until 120).map(i => s"w${base + i}")
     def text(ws: Seq[String]): String = ws.mkString(" ")
     def mutate(ws: Seq[String], tag: String): Seq[String] =
@@ -1190,7 +1190,7 @@ class OperatorSpec extends AnyFunSuite {
     // cap bites natural buckets by design — that is the k²-blowup
     // guard working — and the loss is (a) published in this census and
     // (b) measured at zero catch impact (capped == uncapped catch at
-    // both driver SFs, graft.tools.Measure: band redundancy covers the
+    // both driver SFs, NOTES round 7: band redundancy covers the
     // skipped buckets' pairs). d05's guarantee is its separately
     // tested catch gate, not bucket-skip-freedom.
     val rows = Dedup.lshBucketCensus(spark, sf)

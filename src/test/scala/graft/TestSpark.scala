@@ -5,19 +5,7 @@ import org.apache.spark.sql.{GraftShims, SparkSession}
 
 /** One shared local session for the whole test run. */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = graft.core.Session.local(4)
 
   /** `body`'s result and the descriptions of the Spark jobs it started
     * ("" for a job without one), counted once the listener bus drains. */
