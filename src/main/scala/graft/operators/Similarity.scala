@@ -147,72 +147,17 @@ object Similarity {
 
   /** s03: IVF-style ANN. Coarse quantizer = 16 deterministic seed
     * vectors (every ⌊n/16⌋-th vec_id — data-independent and replicable
-    * in SQL, standing in for trained k-means centroids); every vector
-    * is assigned to its max-cosine centroid (the inverted file), and a
-    * query scans only its nProbe=4 nearest cells. This is the layout
+    * in SQL, standing in for trained k-means centroids: the
+    * [[trainedCentroids]] seeds at rounds = 0); every vector is
+    * assigned in-row to its max-cosine centroid (the inverted file,
+    * [[cellRows]]), and a query scans only its nProbe=4 nearest cells. This is the layout
     * that scales: at 100 TB the corpus is hash-partitioned by cell id,
     * so a probe touches nProbe/K of the data — and unlike LSH the cell
     * count/probe width tune recall independently of the hash family.
     * Fully deterministic ⇒ DuckDB oracle replays the whole pipeline.
     */
-  def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val n = Tables.count(spark, dir, "embeddings") // memoized per file listing
-    val stride = math.max(1L, n / IvfCentroids)
-    val cents = all.filter(col("vec_id") % stride === 0 && col("vec_id") / stride < IvfCentroids)
-      .select((col("vec_id") / stride).cast("int").as("cid"),
-        col("e").as("ce"), col("nrm").as("cnrm"))
-    // inverted file: argmax-cosine cell per vector (broadcast 16
-    // centroids). max_by with the (rounded cos, -cid) struct is the
-    // same argmax + deterministic tie-break the oracle's row_number
-    // window expresses (cos DESC, cid ASC) — but as a declarative
-    // aggregate it gets map-side PARTIAL aggregation: each vector's 16
-    // candidate rows collapse before the shuffle, so the exchange
-    // carries n rows, not 16n (a row_number window here shuffled the
-    // full cross-join — round-2 judge finding).
-    val assigned = all.crossJoin(broadcast(cents))
-      .withColumn("cos_c", array_dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")))
-      .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("cid"), struct(round(col("cos_c"), 6).as("c"), (-col("cid")).as("nc"))).as("cid"),
-        first(col("e")).as("e"), first(col("nrm")).as("nrm"))
-      .select(col("vec_id"), col("e"), col("nrm"), col("cid"))
-    // query side: nProbe nearest cells per query
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(round(col("cos_c"), 6).desc, col("cid").asc)
-    val probes = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cos_c", array_dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")))
-      .withColumn("rk", row_number().over(wProbe))
-      .filter(col("rk") <= IvfProbes)
-      .select(col("qid"), col("qe"), col("qnrm"), col("cid"))
-    // scan only the probed cells, exact-rank within candidates
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(round(col("c"), 6).desc, col("nid").asc)
-    probes.join(assigned, Seq("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        (array_dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("c"))
-      .withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= K)
-      .select(col("qid").as("query_id"), col("rn").cast("long").as("rnk"),
-        col("nid").as("neighbor_id"), round(col("c"), 4).as("cos_sim"))
-      .orderBy("query_id", "rnk")
-  }
-
-  /** Argmax-cosine cell assignment via partial-aggregating max_by
-    * (see s03) — shared by the seed and the refined IVF passes. */
-  private[graft] def assignCells(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    vecs.crossJoin(broadcast(cents))
-      .withColumn("cos_c", array_dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")))
-      .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("cid"), struct(round(col("cos_c"), 6).as("c"), (-col("cid")).as("nc"))).as("cid"),
-        first(col("e")).as("e"), first(col("nrm")).as("nrm"))
-  }
+  def s03AnnIvf(spark: SparkSession, dir: String): DataFrame =
+    ivfSearch(spark, dir, rounds = 0)
 
   // 3 rounds: the round-8 sweep (NOTES) measured recall@5 per round
   // count at all three SFs — rounds=3 is the max at every SF
@@ -234,29 +179,39 @@ object Similarity {
     *      per-cell sums beyond: [[lloyd]]). The mean components are
     *      rounded to 1e-6 IN BOTH ENGINES so float-summation order
     *      can't flip downstream comparisons;
-    *   3. loop 1-2 per round, then re-assign the corpus to the final
-    *      centroids (the inverted file, [[assignCells]]), probe
-    *      nProbe=4 cells per query, exact-rank.
+    *   3. loop 1-2 per round, then assign the corpus to the final
+    *      centroids by the same in-row call (the inverted file,
+    *      [[cellRows]]), probe nProbe=4 cells per query, exact-rank.
     *
     * At 100 TB this is the realistic IVF shape: training is a fixed
     * number of rounds over a sample (here: the corpus), each one scan
-    * whose per-task sums merge into K rows, the index is one shuffle by cell
-    * id, and search touches nProbe/K of the data. The oracle SQL is
+    * whose per-task sums merge into K rows, the index is one map-side
+    * pass, and search touches nProbe/K of the data. The oracle SQL is
     * GENERATED per round ([[s04OracleSql]]) — the CTE chain grows
     * mechanically with the round count, so changing [[LloydRounds]]
     * cannot desynchronize engine and oracle (round-3 judge item 6).
     * Recall-vs-rounds on this corpus is recorded in NOTES.md (measured
     * lessons). */
-  def s04AnnIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
+  def s04AnnIvfKmeans(spark: SparkSession, dir: String): DataFrame =
+    ivfSearch(spark, dir, LloydRounds)
+
+  /** The flat IVF search of s03 (`rounds` = 0: the stride seeds) and
+    * s04: the [[IvfCentroids]]-cell quantizer after `rounds` Lloyd
+    * rounds ([[flatRows]]), every vector's cell in-row ([[cellRows]]),
+    * the nProbe = 4 highest-cosine cells per query (rounded cosine
+    * DESC, cid ASC — the oracle's row_number order), and the exact
+    * rank within them. */
+  private def ivfSearch(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val refined = trainedCentroids(spark, dir, LloydRounds)
-    val assigned = assignCells(all, refined)
+    val model = flatRows(spark, dir, rounds, IvfCentroids)
+    val cents = frameOf(spark, model)
+    val assigned = cellRows(all, model._2)
     val wProbe = Window.partitionBy(col("qid"))
       .orderBy(round(col("cos_c"), 6).desc, col("cid").asc)
     val probes = all.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
-      .crossJoin(broadcast(refined))
+      .crossJoin(broadcast(cents))
       .withColumn("cos_c", array_dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")))
       .withColumn("rk", row_number().over(wProbe))
       .filter(col("rk") <= IvfProbes)
@@ -276,15 +231,20 @@ object Similarity {
 
   /** The trained coarse quantizer — stride seeds refined by `rounds`
     * Lloyd rounds (mean member vector per cell, element-wise, rounded
-    * 1e-6 in both engines) — shared by s04 (k = [[IvfCentroids]]) and
-    * d11 (corpus-relative k, see [[d11CellCount]]). One Spark job per
-    * round ([[lloyd]]). A K-row local relation (cid, ce, cnrm),
-    * memoized per corpus ([[modelRows]]). */
+    * 1e-6 in both engines) — shared by s03 (rounds = 0), s04 (k =
+    * [[IvfCentroids]]) and d11 (corpus-relative k, see
+    * [[d11CellCount]]). One Spark job per round ([[lloyd]]). A K-row
+    * local relation (cid, ce, cnrm) of the memoized [[flatRows]]. */
   private[graft] def trainedCentroids(
       spark: SparkSession, dir: String, rounds: Int,
       k: Int = IvfCentroids): DataFrame =
-    frameOf(spark, modelRows(spark, dir, "flat", rounds, k)(c =>
-      Seq(trainFlat(c, Tables.count(spark, dir, "embeddings"), rounds, k)))._2.head)
+    frameOf(spark, flatRows(spark, dir, rounds, k))
+
+  /** [[trainedCentroids]]'s table as driver rows, memoized per corpus
+    * ([[modelRows]]). */
+  private def flatRows(spark: SparkSession, dir: String, rounds: Int, k: Int): ModelRows =
+    modelRows(spark, dir, "flat", rounds, k)(c =>
+      Seq(trainFlat(c, Tables.count(spark, dir, "embeddings"), rounds, k)))._2.head
 
   /** The flat quantizer's rounds over a raw embeddings frame of `n` rows. */
   private def trainFlat(corpus: DataFrame, n: Long, rounds: Int, k: Int): ModelRows = {
@@ -416,6 +376,44 @@ object Similarity {
       if (keyed) (r.getInt(0), r.getInt(1), r.getSeq[Double](2))
       else (0, r.getInt(0), r.getSeq[Double](1))))
 
+  /** Each (vec_id, e, …) row of `vecs` with its cell `cid` under a
+    * trained model's driver rows, assigned in-row: `nearest_cosine`
+    * among the coarse centroids `cc` (cid, ce, …) gives a flat
+    * quantizer's cell (an int); with `fine` = (fine centroids (ccid,
+    * fcid, ce, …), k2), `nearest_cosine` among that coarse cell's own
+    * fine centroids gives fcid, and the cell is the composite ccid·k2 +
+    * fcid (a long). Each level is a projection of the scan, the same
+    * call a Lloyd round assigns with ([[lloyd]]): the vectors cross no
+    * exchange and no per-centroid rows are made. This is the one final
+    * corpus assignment of the IVF queries (s03/s04, d11/e01, the
+    * two-level model of d12, s06, s15, s19, s23 and s28) and of
+    * [[codeRows]].
+    *
+    * Precondition: `vec_id` is unique and no vector is NULL. Under it
+    * the rows equal those of a `max_by(cid, struct(round(cos, 6),
+    * -cid))` grouped by vec_id over the vectors joined to the
+    * centroids, which collapses duplicate ids into one row and ranks a
+    * NULL vector's NULL cosines by id alone. Here every row keeps its
+    * own cell, and a vector whose cell is NULL (a NULL vector, or a
+    * coarse cell with no fine centroids) gets no row ([[nonNullRows]]). */
+  private[graft] def cellRows(vecs: DataFrame, cc: Seq[Row],
+      fine: Option[(Seq[Row], Int)] = None): DataFrame = {
+    import graft.functions.VectorFunctions.nearest_cosine
+    val flat = vecs.withColumn("cid",
+      nearest_cosine(col("e"), lit(0), centroidsOf(cc, keyed = false)))
+    fine.fold(flat) { case (fc, k2) =>
+      flat.withColumn("cid", col("cid").cast("long") * k2 +
+        nearest_cosine(col("e"), col("cid"), centroidsOf(fc, keyed = true)))
+    }.withColumn("cid", nonNullRows(col("cid")))
+  }
+
+  /** Column `c` of the rows where it is not NULL, dropping the others
+    * through a one-element explode rather than a Filter: the
+    * isnotnull(c) that a join on `c` infers then stays above the
+    * projection that computes `c`, where a Filter would be pushed below
+    * it and compute `c` (an in-row search) a second time. */
+  private def nonNullRows(c: Column): Column = explode(when(c.isNotNull, array(c)))
+
   /** The s04 train+index+search pipeline in DuckDB SQL, the CTE chain
     * GENERATED per Lloyd round: cent0 = stride seeds; per round r,
     * a(r-1) = argmax-cosine assignment against cent(r-1) and cent(r) =
@@ -495,7 +493,7 @@ object Similarity {
     * cap marks where the flat quantizer stops being the right shape:
     * past it the n·K assignment cost dominates and a production run
     * switches to the two-level (coarse-then-fine) quantizer — d12
-    * ([[d12SemanticDedup2Level]]/[[twoLevelAssign]]), whose K is
+    * ([[d12SemanticDedup2Level]]/[[twoLevelModel]]), whose K is
     * corpus-relative and uncapped; the crossover is measured in
     * NOTES.md (9-11× at K = 4096-16384, measured round 10). */
   private[graft] val D11CellTarget = 1024L
@@ -530,35 +528,27 @@ object Similarity {
     *
     * Cross-engine exactness: cell assignment reuses the s04
     * train/assign pipeline (rounded 1e-6 centroid means, rank-1
-    * argmax); the pair threshold compares the raw cosine double
-    * exactly like d06 — both engines fold the 64 components
-    * left-to-right, so the doubles are bit-identical. */
-  def d11SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val k = d11CellCount(Tables.count(spark, dir, "embeddings"))
-    // within-cell pairs only: the equi-join on cid IS the blocking;
-    // shuffle_hash because K cells ⇒ K hot build sides, never a sort
-    // (see semdedupCensus)
-    semdedupCensus(assignCells(all, trainedCentroids(spark, dir, LloydRounds, k)))
-  }
+    * argmax), with each vector's cell taken in-row by [[cellRows]] —
+    * no shuffle of the vectors before the within-cell join; the pair
+    * threshold compares the raw cosine double exactly like d06 — both
+    * engines fold the 64 components left-to-right, so the doubles are
+    * bit-identical. */
+  def d11SemanticDedup(spark: SparkSession, dir: String): DataFrame =
+    semdedupCensus(d11Cells(spark, dir))
 
   /** The SemDeDup DROP SET over a corpus dir — the distinct vec_ids
     * with a LOWER-id within-cell near-neighbor at cos ≥ [[D11Tau]]
     * (the drop side of d11's keep-one-representative rule; same
     * quantizer, same blocking, same τ). d11's census is the gated
     * face; e01's semantic stage consumes the ids themselves. */
-  private[graft] def d11DroppedIds(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
+  private[graft] def d11DroppedIds(spark: SparkSession, dir: String): DataFrame =
+    semdedupPairs(d11Cells(spark, dir)).select(col("idb").as("vec_id")).distinct()
+
+  /** d11's inverted file: each vector's cell under the memoized
+    * [[d11CellCount]]-cell quantizer, in-row. */
+  private[graft] def d11Cells(spark: SparkSession, dir: String): DataFrame = {
     val k = d11CellCount(Tables.count(spark, dir, "embeddings"))
-    val assigned = assignCells(all, trainedCentroids(spark, dir, LloydRounds, k))
-    val a = assigned.select(col("cid"), col("vec_id").as("ida"), col("e").as("ea"))
-    val b = assigned.select(col("cid"), col("vec_id").as("idb"), col("e").as("eb"))
-    a.hint("shuffle_hash").join(b, Seq("cid"))
-      .filter(col("ida") < col("idb") &&
-        Dedup.cosine(col("ea"), col("eb")) >= D11Tau)
-      .select(col("idb").as("vec_id")).distinct()
+    cellRows(emb(spark, dir), flatRows(spark, dir, LloydRounds, k)._2)
   }
 
   /** d12 cell policy — the TWO-LEVEL quantizer's answer to
@@ -572,34 +562,11 @@ object Similarity {
     * from its own scan (IEEE sqrt is correctly rounded in both engines,
     * so ⌈√K⌉ cannot desynchronize; the k2 ceiling uses the integer
     * (K + k1 - 1) div k1 form in both). */
-  private[graft] def d12Factors(n: Long): (Int, Int) =
-    d12FactorsAt(n, D11CellTarget)
-
-  /** [[d12Factors]] at an explicit cell target — the at-scale seam (the
-    * census-wall-vs-recall trade at 512/1024/2048 that defends the
-    * [[D11CellTarget]] default is in NOTES round 11). */
-  private[graft] def d12FactorsAt(n: Long, cellTarget: Long): (Int, Int) = {
-    val k = math.max(16L, n / cellTarget)
+  private[graft] def d12Factors(n: Long): (Int, Int) = {
+    val k = math.max(16L, n / D11CellTarget)
     val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
     val k2 = ((k + k1 - 1) / k1).toInt
     (k1, k2)
-  }
-
-  /** Fine-level argmax-cosine assignment: each vector meets ONLY its own
-    * coarse cell's ≤ k2 fine centroids via the equi-join on ccid — the
-    * n·k2 half of the two-level assignment cost. The centroid table
-    * (k1·k2 rows total) broadcasts: even at K = 10⁶ it is ~0.5 GB of
-    * doubles, the standard "centroids fit in RAM" IVF assumption; the
-    * max_by partial-aggregates so the shuffle carries n rows, not n·k2
-    * (same rationale as [[assignCells]]). */
-  private[graft] def assignFine(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    vecs.join(broadcast(cents), Seq("ccid"))
-      .withColumn("cos_c", array_dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")))
-      .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("fcid"), struct(round(col("cos_c"), 6).as("c"), (-col("fcid")).as("nc"))).as("fcid"),
-        first(col("ccid")).as("ccid"), first(col("e")).as("e"), first(col("nrm")).as("nrm"))
   }
 
   /** Two-level (coarse-then-fine) trained quantizer: k1 coarse cells
@@ -610,30 +577,21 @@ object Similarity {
     * rule applied per cell), and a fine Lloyd round assigns each vector
     * in-row among its own coarse cell's centroids, then averages per
     * (ccid, fcid) — the same one-job [[lloyd]] round. The DuckDB
-    * oracle replays it CTE-for-CTE ([[d12OracleSql]]). Returns
-    * (vec_id, e, nrm, cid) with the composite cid = ccid·k2 + fcid. */
-  private[graft] def twoLevelAssign(spark: SparkSession, dir: String,
-      k1: Int, k2: Int): DataFrame =
-    twoLevelModel(spark, dir, k1, k2, LloydRounds)._3
-
-  /** The full two-level model — (coarse centroids (cid, ce, cnrm),
-    * fine centroids (ccid, fcid, ce, cnrm), assignment (vec_id, e,
-    * nrm, cid)) — so the SEARCH path (s06) can probe the same
-    * centroids the dedup census (d12) assigns with. Both centroid
-    * tables are memoized local relations ([[twoLevelRows]]); the
-    * assignment is the lazy [[assignCells]]/[[assignFine]] plan. */
+    * oracle replays it CTE-for-CTE ([[d12OracleSql]]).
+    *
+    * Returns (coarse centroids (cid, ce, cnrm), fine centroids (ccid,
+    * fcid, ce, cnrm), assignment (vec_id, e, nrm, cid)), so the SEARCH
+    * path (s06) probes the same centroids the dedup census (d12)
+    * assigns with. Both centroid tables are memoized local relations
+    * ([[twoLevelRows]]); the assignment is the lazy in-row
+    * [[cellRows]] projection under the same rows, with the composite
+    * cid = ccid·k2 + fcid. */
   private[graft] def twoLevelModel(spark: SparkSession, dir: String,
       k1: Int, k2: Int, rounds: Int): (DataFrame, DataFrame, DataFrame) = {
     import graft.functions.VectorFunctions.array_dot
     val (corpus, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, rounds)
-    val (ccents, fcents) = (frameOf(spark, cc), frameOf(spark, fc))
     val all = vectors(corpus).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val coarse = assignCells(all, ccents)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("ccid"))
-    val assigned = assignFine(coarse, fcents)
-      .select(col("vec_id"), col("e"), col("nrm"),
-        (col("ccid").cast("long") * k2 + col("fcid")).as("cid"))
-    (ccents, fcents, assigned)
+    (frameOf(spark, cc), frameOf(spark, fc), cellRows(all, cc._2, Some((fc._2, k2))))
   }
 
   /** The raw corpus and the two-level model's tables as driver rows —
@@ -672,12 +630,7 @@ object Similarity {
     * (the equi-join on cid IS the blocking), drop rule = lower-id
     * near-neighbor at cos ≥ τ, output the per-cell census. */
   private def semdedupCensus(assigned: DataFrame): DataFrame = {
-    val a = assigned.select(col("cid"), col("vec_id").as("ida"), col("e").as("ea"))
-    val b = assigned.select(col("cid"), col("vec_id").as("idb"), col("e").as("eb"))
-    val pairs = a.hint("shuffle_hash").join(b, Seq("cid"))
-      .filter(col("ida") < col("idb") &&
-        Dedup.cosine(col("ea"), col("eb")) >= D11Tau)
-    val dropped = pairs.groupBy(col("cid"))
+    val dropped = semdedupPairs(assigned).groupBy(col("cid"))
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("idb")).as("n_dropped"))
     assigned.groupBy(col("cid")).agg(count(lit(1)).as("n_vecs"))
       .join(dropped, Seq("cid"), "left")
@@ -685,6 +638,18 @@ object Similarity {
       .select(col("cid").cast("long").as("cell"), col("n_vecs"),
         col("n_pairs"), col("n_dropped"))
       .orderBy("cell")
+  }
+
+  /** The within-cell near-dup pairs (cid, ida, ea, idb, eb) of an
+    * assignment: ida < idb in one cell at cos ≥ [[D11Tau]]. The
+    * equi-join on cid IS the blocking; shuffle_hash because K cells ⇒
+    * K hot build sides, never a sort. */
+  private def semdedupPairs(assigned: DataFrame): DataFrame = {
+    val a = assigned.select(col("cid"), col("vec_id").as("ida"), col("e").as("ea"))
+    val b = assigned.select(col("cid"), col("vec_id").as("idb"), col("e").as("eb"))
+    a.hint("shuffle_hash").join(b, Seq("cid"))
+      .filter(col("ida") < col("idb") &&
+        Dedup.cosine(col("ea"), col("eb")) >= D11Tau)
   }
 
   /** d12: SemDeDup over the TWO-LEVEL quantizer — the production form
@@ -700,7 +665,7 @@ object Similarity {
     * (round 10 datapoint). */
   def d12SemanticDedup2Level(spark: SparkSession, dir: String): DataFrame = {
     val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
-    semdedupCensus(twoLevelAssign(spark, dir, k1, k2))
+    semdedupCensus(twoLevelModel(spark, dir, k1, k2, LloydRounds)._3)
   }
 
   private[graft] val S06CoarseProbes = 2
@@ -714,13 +679,12 @@ object Similarity {
     * instead of the flat quantizer's K. Centroids broadcast. Returns
     * (qid, qe, qnrm, cid) — one row per (query, probed composite cell). */
   private[graft] def probeCells(spark: SparkSession, dir: String,
-      ccents: DataFrame, fcents: DataFrame, k2: Int,
-      fineProbes: Int = S06FineProbes): DataFrame = {
+      ccents: DataFrame, fcents: DataFrame, k2: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     val all = emb(spark, dir).withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
     val queries = all.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
-    probeCellsOf(queries, ccents, fcents, k2, fineProbes)
+    probeCellsOf(queries, ccents, fcents, k2)
   }
 
   /** [[probeCells]] over an explicit (qid, qe, qnrm) query frame — the
@@ -729,8 +693,7 @@ object Similarity {
     * 10-row gate set everywhere else. Same hierarchical probe, same
     * rounding/tie rules. */
   private[graft] def probeCellsOf(queries: DataFrame,
-      ccents: DataFrame, fcents: DataFrame, k2: Int,
-      fineProbes: Int): DataFrame = {
+      ccents: DataFrame, fcents: DataFrame, k2: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
     // NARROW rank rows: the 512-byte query vector never rides a rank
     // window's shuffle — scores travel as (qid, cell ids, rounded
@@ -756,7 +719,7 @@ object Similarity {
       .select(col("qid"), col("ccid"), col("fcid"),
         round(array_dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")), 6).as("f6"))
       .withColumn("rk2", row_number().over(wF))
-      .filter(col("rk2") <= fineProbes)
+      .filter(col("rk2") <= S06FineProbes)
       .select(col("qid"),
         (col("ccid").cast("long") * k2 + col("fcid")).as("cid"))
       .join(queries, Seq("qid"))
@@ -1095,16 +1058,13 @@ object Similarity {
     * [[S07Subspaces]] contiguous [[S07SubDim]]-dim slices. One narrow
     * map-side explode; no shuffle. */
   private def subvecs(spark: SparkSession, dir: String): DataFrame =
-    subvecsAt(spark, dir, S07Subspaces)
+    subvecsOf(emb(spark, dir), S07Subspaces)
 
-  /** [[subvecs]] at an explicit subquantizer count m (subDim = 64/m).
-    * The compression-recall trade at M ∈ {4, 8, 16} that defends the
-    * [[S07Subspaces]] default is in NOTES round 12. */
-  private[graft] def subvecsAt(spark: SparkSession, dir: String, m: Int): DataFrame =
-    subvecsOf(emb(spark, dir), m)
-
-  /** [[subvecsAt]] over an explicit (vec_id, e) frame — s12's fold-in
-    * encodes a DELTA batch, not a table scan. */
+  /** (vec_id, sub, v) rows of an explicit (vec_id, e) frame at m
+    * subquantizers (subDim = 64/m) — s26's fold-in encodes a DELTA
+    * batch, not a table scan. The compression-recall trade at M ∈
+    * {4, 8, 16} that defends the [[S07Subspaces]] default is in NOTES
+    * round 12. */
   private[graft] def subvecsOf(e: DataFrame, m: Int): DataFrame =
     e.select(col("vec_id"),
         explode(sequence(lit(0), lit(m - 1))).as("sub"), col("e"))
@@ -1117,53 +1077,36 @@ object Similarity {
     slice(e, sub * subDim + 1, lit(subDim))
   }
 
-  /** Argmin-L2 codeword per (vec_id, sub) against a codebook — the PQ
-    * ENCODE step. The codebook ([[S07Subspaces]]·[[S07Codes]] = 128
-    * rows) broadcasts; min_by over the (rounded d², cid) struct is the
-    * deterministic argmin + lowest-cid tie-break the oracle's
-    * row_number window expresses, but as a declarative aggregate it
-    * partial-aggregates map-side: each subvector's [[S07Codes]]
-    * candidate rows collapse before the shuffle, so the exchange
-    * carries n·M rows, not n·M·[[S07Codes]] (the s03 max_by rationale).
-    * Only the s07 search ([[s07PqAdc]]) encodes this way; every IVF-PQ
-    * code store is built in-row by [[codeRows]], with the same argmin
-    * and tie-break. */
-  private[graft] def s07Encode(sv: DataFrame, cb: DataFrame): DataFrame =
-    sv.join(broadcast(cb), Seq("sub"))
-      .withColumn("d2", round(l2sq(col("v"), col("cv")), 6))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"),
-        first(col("v")).as("v"))
+  /** The PQ ENCODE step: the code of subvector `v` of subspace `sub`,
+    * `nearest_l2` among that subspace's codewords in a codebook's
+    * driver rows (sub, cid, cv) — the lowest rounded squared distance,
+    * ties to the lowest cid, in-row. */
+  private def pqCode(v: Column, sub: Column, cb: Seq[Row]): Column =
+    graft.functions.VectorFunctions.nearest_l2(v, sub, centroidsOf(cb, keyed = true))
 
   /** Per-subspace PQ codebooks — [[S07Codes]] codewords per subspace,
     * stride seeds (the s03 data-independent rule, applied to each
     * subspace's slice of the same seed vectors) refined by `rounds`
     * Lloyd rounds. A round = encode in-row (native `nearest_l2`: the
-    * [[s07Encode]] argmin-L2 among the subvector's own subspace's
+    * [[pqCode]] argmin-L2 among the subvector's own subspace's
     * codewords) + per-(sub, cid) element-wise member mean rounded 1e-6
     * in both engines — the [[trainedCentroids]] round with `sub` as
     * the key, so all M subquantizers train in the SAME one-job round
-    * ([[lloyd]]), never M separate jobs. A memoized M·nCodes-row
-    * local relation (sub, cid, cv). */
+    * ([[lloyd]]), never M separate jobs. A memoized
+    * [[S07Subspaces]]·[[S07Codes]]-row local relation (sub, cid, cv). */
   private[graft] def s07Codebooks(
       spark: SparkSession, dir: String, rounds: Int): DataFrame =
-    s07CodebooksAt(spark, dir, rounds, S07Subspaces, S07Codes)
+    frameOf(spark, codebookRows(spark, dir, rounds))
 
-  /** [[s07Codebooks]] at explicit (m, nCodes). */
-  private[graft] def s07CodebooksAt(spark: SparkSession, dir: String,
-      rounds: Int, m: Int, nCodes: Int): DataFrame =
-    frameOf(spark, codebookRows(spark, dir, rounds, m, nCodes))
-
-  /** [[s07CodebooksAt]]'s table as driver rows, memoized per corpus
+  /** [[s07Codebooks]]'s table as driver rows, memoized per corpus
     * ([[modelRows]]). */
-  private def codebookRows(spark: SparkSession, dir: String,
-      rounds: Int, m: Int, nCodes: Int): ModelRows =
-    modelRows(spark, dir, "pq", rounds, m, nCodes) { corpus =>
+  private def codebookRows(spark: SparkSession, dir: String, rounds: Int): ModelRows =
+    modelRows(spark, dir, "pq", rounds) { corpus =>
       import graft.functions.VectorFunctions.nearest_l2
-      val sv = subvecsOf(vectors(corpus), m)
-      val stride = math.max(1L, Tables.count(spark, dir, "embeddings") / nCodes)
+      val sv = subvecsOf(vectors(corpus), S07Subspaces)
+      val stride = math.max(1L, Tables.count(spark, dir, "embeddings") / S07Codes)
       val seeds = sv
-        .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < nCodes)
+        .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < S07Codes)
         .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
           col("v").as("cv"))
       Seq(lloyd(seeds, rounds, keys = 2, "pq") { model =>
@@ -1175,30 +1118,18 @@ object Similarity {
     * under a trained model's tables — coarse `cc` (cid, ce, …), fine
     * `fc` (ccid, fcid, ce, …) and codebook `cb` (sub, cid, cv) — in the
     * code store's layout, as ONE map-side projection: no join and no
-    * shuffle. `nearest_cosine` among the coarse centroids gives ccid,
-    * among ccid's own fine centroids fcid (cell = ccid·k2 + fcid), and
-    * each [[S07Subspaces]] slice's `nearest_l2` among its subspace's
-    * codewords gives the code. These are the rules and tie-breaks of
-    * the assignment aggregates ([[assignCells]], [[assignFine]],
-    * [[s07Encode]]), so for unique vec_ids the rows equal those
-    * aggregates joined on vec_id. A vector whose cell is NULL (a NULL
-    * vector, or a coarse cell with no fine centroids) gets no rows, nor
-    * does a subspace with no codewords, as the inner joins dropped them
-    * — both through the explode, so no Filter is pushed below the
-    * projections to evaluate the searches twice. */
+    * shuffle. The two-level [[cellRows]] gives the cell (ccid·k2 +
+    * fcid), and each [[S07Subspaces]] slice's [[pqCode]] gives the
+    * code. A vector without a cell gets no rows (see [[cellRows]]),
+    * nor does a subspace with no codewords. */
   private[graft] def codeRows(vecs: DataFrame, cc: Seq[Row], fc: Seq[Row],
       cb: Seq[Row], k2: Int): DataFrame = {
-    import graft.functions.VectorFunctions.{nearest_cosine, nearest_l2}
     val subs = cb.map(_.getInt(0)).distinct.sorted.filter(_ < S07Subspaces)
-    vecs.select(col("vec_id"), col("e"),
-        nearest_cosine(col("e"), lit(0), centroidsOf(cc, keyed = false)).as("ccid"))
-      .select(col("vec_id"), col("e"), (col("ccid").cast("long") * k2 +
-        nearest_cosine(col("e"), col("ccid"), centroidsOf(fc, keyed = true))).as("cell"))
-      .select(col("vec_id"), col("e"), col("cell"),
-        explode(when(col("cell").isNotNull, typedLit(subs))).as("sub"))
+    cellRows(vecs, cc, Some((fc, k2)))
+      .select(col("vec_id"), col("e"), col("cid").as("cell"),
+        explode(typedLit(subs)).as("sub"))
       .select(col("vec_id"), col("sub"),
-        nearest_l2(subvec(col("e"), col("sub"), S07Subspaces), col("sub"),
-          centroidsOf(cb, keyed = true)).as("code"),
+        pqCode(subvec(col("e"), col("sub"), S07Subspaces), col("sub"), cb).as("code"),
         col("cell"))
   }
 
@@ -1270,15 +1201,13 @@ object Similarity {
   }
 
   def s07PqAdc(spark: SparkSession, dir: String): DataFrame = {
-    val sv = subvecs(spark, dir)
     val cb = s07Codebooks(spark, dir, S07Rounds)
-    val codes = s07Encode(sv, cb).select(col("vec_id"), col("sub"), col("cid"))
-    val dtab = sv.filter(col("vec_id") < NumQueries)
+    val dtab = subvecs(spark, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
       .join(cb, Seq("sub"))
       .select(col("qid"), col("sub"), col("cid"),
         round(l2sq(col("qv"), col("cv")) * 1e6, 0).cast("long").as("unit"))
-    val scored = codes.join(broadcast(dtab), Seq("sub", "cid"))
+    val scored = s07Codes(spark, dir).join(broadcast(dtab), Seq("sub", "cid"))
       .filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(sum(col("unit")).as("adc_units"))
@@ -1290,6 +1219,16 @@ object Similarity {
         col("vec_id").as("neighbor_id"), col("adc_units"))
       .orderBy("query_id", "rnk")
   }
+
+  /** s07's code table (vec_id, sub, cid): every subvector's
+    * [[pqCode]] under the memoized codebooks, in-row — the corpus
+    * crosses no exchange before the ADC scan. A subvector without a
+    * code (a NULL vector, or a subspace with no codewords) gets no row
+    * ([[nonNullRows]]). */
+  private[graft] def s07Codes(spark: SparkSession, dir: String): DataFrame =
+    subvecs(spark, dir).select(col("vec_id"), col("sub"),
+        pqCode(col("v"), col("sub"), codebookRows(spark, dir, S07Rounds)._2).as("cid"))
+      .withColumn("cid", nonNullRows(col("cid")))
 
   /** s09: IVF-PQ — [[s06AnnIvf2Level]]'s cell pruning composed with
     * [[s07PqAdc]]'s ADC scoring, the billion-vector standard (FAISS
@@ -1320,7 +1259,7 @@ object Similarity {
     * exact s01 baseline on the planted corpus and the measured
     * scan-reduction factor are recorded in NOTES.md round 12. */
   def s09IvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val scored = s09ScoredAt(spark, dir, S06FineProbes)
+    val scored = s09Scored(spark, dir)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("adc_units").asc, col("vec_id").asc)
     scored.withColumn("rn", row_number().over(w))
@@ -1335,17 +1274,16 @@ object Similarity {
     * codebooks/codes, cell-keyed code store, hierarchical probe,
     * cell-restricted ADC join (see [[s09IvfPq]]'s scaladoc for the
     * scale argument of each stage). */
-  private def s09ScoredAt(spark: SparkSession, dir: String,
-      fineProbes: Int): DataFrame = {
+  private def s09Scored(spark: SparkSession, dir: String): DataFrame = {
     val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val (_, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, LloydRounds)
-    val cbRows = codebookRows(spark, dir, S07Rounds, S07Subspaces, S07Codes)
+    val cbRows = codebookRows(spark, dir, S07Rounds)
     val (ccents, fcents, cb) = (frameOf(spark, cc), frameOf(spark, fc), frameOf(spark, cbRows))
     val sv = subvecs(spark, dir)
     // build-time: the code store keyed by composite cell (deploy form:
     // write bucketed by cell — the d13 persisted-index pattern)
     val codesByCell = codeRows(emb(spark, dir), cc._2, fc._2, cbRows._2, k2)
-    val fprobes = probeCells(spark, dir, ccents, fcents, k2, fineProbes)
+    val fprobes = probeCells(spark, dir, ccents, fcents, k2)
       .select(col("qid"), col("cid").as("cell"))
     val dtab = sv.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
@@ -1380,7 +1318,7 @@ object Similarity {
     * compare directly; the oracle chains s09's CTEs with the
     * nomination + exact re-rank CTEs. */
   def s10IvfPqRerank(spark: SparkSession, dir: String): DataFrame = {
-    val scored = s09ScoredAt(spark, dir, S06FineProbes)
+    val scored = s09Scored(spark, dir)
     val wAdc = Window.partitionBy(col("qid"))
       .orderBy(col("adc_units").asc, col("vec_id").asc)
     val nominated = scored.withColumn("rn", row_number().over(wAdc))
@@ -1455,7 +1393,7 @@ object Similarity {
     * OperatorSpec pins the recall relationship: SQ8 re-rank ≥ the raw
     * ADC ordering it refines, within one step of s10's exact tier. */
   def s17Sq8Rerank(spark: SparkSession, dir: String): DataFrame = {
-    val scored = s09ScoredAt(spark, dir, S06FineProbes)
+    val scored = s09Scored(spark, dir)
     val wAdc = Window.partitionBy(col("qid"))
       .orderBy(col("adc_units").asc, col("vec_id").asc)
     val nominated = scored.withColumn("rn", row_number().over(wAdc))
@@ -1527,7 +1465,7 @@ object Similarity {
         s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
       val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
       val (_, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, LloydRounds)
-      val cb = codebookRows(spark, dir, S07Rounds, S07Subspaces, S07Codes)
+      val cb = codebookRows(spark, dir, S07Rounds)
       codeRows(emb(spark, dir), cc._2, fc._2, cb._2, k2)
         .repartition(Dedup.D13Buckets, col("cell"))
         .write.mode("overwrite").format("parquet")
@@ -2446,7 +2384,7 @@ object Similarity {
     * graph). */
   private[graft] val S22Pool = 20
 
-  /** The shared s22 candidate scorer: [[s09ScoredAt]] generalized to
+  /** The shared s22 candidate scorer: [[s09Scored]] generalized to
     * CORPUS-AS-QUERIES — every vector probes its own top
     * [[S06FineProbes]] composite cells and ADC-scores the members of
     * those cells. Two deliberate departures from s09's 10-query form,
@@ -2464,22 +2402,11 @@ object Similarity {
     * Candidate generation stays cell-restricted BEFORE any distance
     * lookup (PlanSpec pins the join order) — per-node work is
     * O(probes·cell·M), never corpus×corpus. */
-  private def s22ScoredAll(spark: SparkSession, dir: String): DataFrame =
-    s22ScoredAllAt(spark, dir, D11CellTarget, S06FineProbes)
-
-  /** [[s22ScoredAll]] at explicit (cellTarget, fineProbes) — the
-    * at-scale seam (NOTES round 15): per-node candidate count is
-    * probes·cellTarget, so a single box shrinks cells to hold the
-    * per-node budget where a
-    * 1000-executor cluster would keep the defaults and spread the same
-    * total work. */
-  private[graft] def s22ScoredAllAt(spark: SparkSession, dir: String,
-      cellTarget: Long, fineProbes: Int): DataFrame = {
+  private def s22ScoredAll(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
-    val (k1, k2) = d12FactorsAt(
-      Tables.count(spark, dir, "embeddings"), cellTarget)
+    val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
     val (_, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, LloydRounds)
-    val cbRows = codebookRows(spark, dir, S07Rounds, S07Subspaces, S07Codes)
+    val cbRows = codebookRows(spark, dir, S07Rounds)
     val (ccents, fcents, cb) = (frameOf(spark, cc), frameOf(spark, fc), frameOf(spark, cbRows))
     val sv = subvecs(spark, dir)
     val codesByCell = codeRows(emb(spark, dir), cc._2, fc._2, cbRows._2, k2)
@@ -2487,7 +2414,7 @@ object Similarity {
       .withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
     val queries = all.select(
       col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
-    val fprobes = probeCellsOf(queries, ccents, fcents, k2, fineProbes)
+    val fprobes = probeCellsOf(queries, ccents, fcents, k2)
       .select(col("qid"), col("cid").as("cell"))
     val dtab = sv
       .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
@@ -2529,10 +2456,9 @@ object Similarity {
   def s22KnnGraph(spark: SparkSession, dir: String): DataFrame =
     // the stored artifact is bucket-sorted, not globally sorted — the
     // gate face re-states the output order the contract names
-    s22GraphAt(spark, dir, D11CellTarget, S06FineProbes, S22Pool)
-      .orderBy("src_id", "rnk")
+    s22Graph(spark, dir).orderBy("src_id", "rnk")
 
-  /** One PERSISTED graph store per (context, dir, params) — the
+  /** One PERSISTED graph store per (context, dir) — the
     * deploy amortization (the graph is built once and served many;
     * s23/s24/s25/s26/s27/s28/e06/e07 all consume it). The memo holds
     * only the (table, path) NAMES of a src-bucketed parquet artifact —
@@ -2555,7 +2481,7 @@ object Similarity {
     * a metastore table is just as invisible to plan matching as the
     * checkpoint was. */
   private val s22Memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Int, Int), (String, String)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]()
 
   /** Land a finished graph frame as the src-bucketed stored artifact —
     * [[Dedup.D13Buckets]] buckets on src_id, rows sorted (src_id, rnk)
@@ -2574,22 +2500,17 @@ object Similarity {
     (outT, path)
   }
 
-  /** [[s22KnnGraph]] at explicit (cellTarget, fineProbes, pool) — the
-    * at-scale seam (NOTES round 15). The first caller per (context, dir, params) pays
-    * the build AND the store write; everyone after reads the stored
-    * parquet files. */
-  private[graft] def s22GraphAt(spark: SparkSession, dir: String,
-      cellTarget: Long, fineProbes: Int, pool: Int): DataFrame =
-    spark.table(s22StoreAt(spark, dir, cellTarget, fineProbes, pool)._1)
+  /** The stored s22 graph of `dir`, unsorted. The first caller per
+    * (context, dir) pays the build AND the store write; everyone after
+    * reads the stored parquet files. */
+  private[graft] def s22Graph(spark: SparkSession, dir: String): DataFrame =
+    spark.table(s22Store(spark, dir)._1)
 
-  /** The stored artifact's (table, path) for explicit params —
-    * building it on first request. */
-  private[graft] def s22StoreAt(spark: SparkSession, dir: String,
-      cellTarget: Long, fineProbes: Int, pool: Int): (String, String) =
-    s22Memo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, cellTarget, fineProbes, pool),
-      _ => s29LandGraphStore(spark,
-        s22GraphPlanAt(spark, dir, cellTarget, fineProbes, pool)))
+  /** The stored graph artifact's (table, path) — building it on first
+    * request. */
+  private[graft] def s22Store(spark: SparkSession, dir: String): (String, String) =
+    s22Memo.computeIfAbsent((spark.sparkContext.applicationId, dir),
+      _ => s29LandGraphStore(spark, s22GraphPlan(spark, dir)))
 
   /** Release every memoized graph artifact (and the shared s26 base
     * build): drops the metastore tables and clears the memos, so a
@@ -2669,16 +2590,12 @@ object Similarity {
 
   /** The UNCACHED, UNMEMOIZED build plan — the PlanSpec seam (a cached
     * or checkpointed frame hides the join shape the spec pins). */
-  private[graft] def s22GraphPlan(spark: SparkSession, dir: String): DataFrame =
-    s22GraphPlanAt(spark, dir, D11CellTarget, S06FineProbes, S22Pool)
-
-  private[graft] def s22GraphPlanAt(spark: SparkSession, dir: String,
-      cellTarget: Long, fineProbes: Int, pool: Int): DataFrame = {
-    val scored = s22ScoredAllAt(spark, dir, cellTarget, fineProbes)
+  private[graft] def s22GraphPlan(spark: SparkSession, dir: String): DataFrame = {
+    val scored = s22ScoredAll(spark, dir)
     val wAdc = Window.partitionBy(col("qid"))
       .orderBy(col("adc_units").asc, col("vec_id").asc)
     val nominated = scored.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= pool)
+      .filter(col("rn") <= S22Pool)
       .select(col("qid"), col("vec_id"))
     val all = emb(spark, dir)
     val srcs = all.select(col("vec_id").as("qid"), col("e").as("qe"))
@@ -2792,11 +2709,6 @@ object Similarity {
     * store — the s11 serve discipline). The oracle replays the s22
     * build, the probe seed, AND every walk round CTE-for-CTE. */
   def s23GraphSearch(spark: SparkSession, dir: String): DataFrame =
-    s23At(spark, dir, S23Rounds, S23Beam)
-
-  /** [[s23GraphSearch]] at explicit (rounds, beam) — the sweep seam. */
-  private[graft] def s23At(spark: SparkSession, dir: String,
-      rounds: Int, beamWidth: Int): DataFrame =
     // the store read materializes ONCE per query (a transient
     // per-query checkpoint — the walk references the edge set every
     // round, and 4 re-scans of the parquet store cost ~0.8 s at sf0.1)
@@ -2804,7 +2716,7 @@ object Similarity {
     servedOverEdges(s22KnnGraph(spark, dir)
         .select(col("src_id"), col("dst_id"))) { graph =>
       s23Serve(spark, emb(spark, dir), graph,
-        s23SeedFrontier(spark, dir, beamWidth), rounds, beamWidth)
+        s23SeedFrontier(spark, dir, S23Beam), S23Rounds, S23Beam)
     }
 
   /** The walk's entry frontier — the top-`beamWidth` exact-ranked
@@ -2820,10 +2732,8 @@ object Similarity {
     s23SeedOver(probeCells(spark, dir, ccents, fcents, k2), assigned, beamWidth)
   }
 
-  /** The seed over explicit probe/assignment frames — the at-scale
-    * seam (the NOTES round-15 graph datapoint probed through ITS OWN
-    * cell-target's model, the gate through the memoized corpus-relative
-    * one). */
+  /** The seed over explicit probe/assignment frames — shared by the
+    * frontier above and s28's unfiltered seed track. */
   private[graft] def s23SeedOver(fprobes: DataFrame, assigned: DataFrame,
       beamWidth: Int): DataFrame = {
     import graft.functions.VectorFunctions.array_dot
@@ -3008,15 +2918,10 @@ object Similarity {
     * artifact, not a growing DAG (the e05 lesson). The oracle replays
     * the s22 build and every prune round CTE-for-CTE. */
   def s24DiverseGraph(spark: SparkSession, dir: String): DataFrame =
-    s24At(spark, dir, S24Degree)
-
-  /** [[s24DiverseGraph]] at explicit degree — the sweep/spec seam. */
-  private[graft] def s24At(spark: SparkSession, dir: String,
-      degree: Int): DataFrame =
     // one materialized read — the prune references g twice per round;
     // released once the (smaller) pruned graph lands
     servedOverEdges(s22KnnGraph(spark, dir)) { g =>
-      s24PruneOver(g, emb(spark, dir), degree)
+      s24PruneOver(g, emb(spark, dir), S24Degree)
     }
 
   /** The prune over an explicit (already-materialized) candidate graph
@@ -3121,15 +3026,10 @@ object Similarity {
     * the s22 build, the s24 prune rounds, AND every walk round —
     * the full build→prune→serve lifecycle replayed CTE-for-CTE. */
   def s25PrunedSearch(spark: SparkSession, dir: String): DataFrame =
-    s25At(spark, dir, S24Degree, S23Rounds, S23Beam)
-
-  /** [[s25PrunedSearch]] at explicit (degree, rounds, beam). */
-  private[graft] def s25At(spark: SparkSession, dir: String,
-      degree: Int, rounds: Int, beamWidth: Int): DataFrame =
-    servedOverEdges(s24At(spark, dir, degree)
+    servedOverEdges(s24DiverseGraph(spark, dir)
         .select(col("src_id"), col("dst_id"))) { pruned =>
       s23Serve(spark, emb(spark, dir), pruned,
-        s23SeedFrontier(spark, dir, beamWidth), rounds, beamWidth)
+        s23SeedFrontier(spark, dir, S23Beam), S23Rounds, S23Beam)
     }
 
   /** s25 oracle: s22 graph build + s24 prune chain + the s23 walk over
@@ -3190,7 +3090,7 @@ object Similarity {
     * substrate). */
   private[graft] case class S26Artifacts(baseDir: String, nBase: Long,
       gBase: DataFrame, cc: DataFrame, fc: DataFrame, k2: Int,
-      cb: DataFrame, codesByCell: DataFrame, probes: Int)
+      cb: DataFrame, codesByCell: DataFrame)
 
   /** One shared base build per (context, dir): s26, st18, and e07 all
     * consume the IDENTICAL deterministic artifacts (base slice, base
@@ -3199,24 +3099,14 @@ object Similarity {
     * the same way the graph consumers share [[s22Memo]] (round-16: the
     * three gates each paid a ~15 s rebuild at sf0.1 before this). */
   private val s26Memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Int), S26Artifacts]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), S26Artifacts]()
 
   private[graft] def s26BuildBase(spark: SparkSession,
       dir: String): S26Artifacts =
-    s26BuildBaseAt(spark, dir, D11CellTarget, S06FineProbes)
+    s26Memo.computeIfAbsent((spark.sparkContext.applicationId, dir),
+      _ => s26BuildBaseUncached(spark, dir))
 
-  /** [[s26BuildBase]] at explicit (cellTarget, fineProbes) — the
-    * single-box at-scale seam (the NOTES round-15 knob rationale: one box
-    * shrinks cells to hold the per-node candidate budget, a
-    * 1000-executor cluster keeps the gate defaults). */
-  private[graft] def s26BuildBaseAt(spark: SparkSession, dir: String,
-      cellTarget: Long, fineProbes: Int): S26Artifacts =
-    s26Memo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, cellTarget, fineProbes),
-      _ => s26BuildBaseUncached(spark, dir, cellTarget, fineProbes))
-
-  private def s26BuildBaseUncached(spark: SparkSession, dir: String,
-      cellTarget: Long, fineProbes: Int): S26Artifacts = {
+  private def s26BuildBaseUncached(spark: SparkSession, dir: String): S26Artifacts = {
     val n = Tables.count(spark, dir, "embeddings")
     val nBase = n * S12BaseNum / S12BaseDen
     val baseDir = graft.core.IO.scratchDir("graft-s26")
@@ -3225,15 +3115,15 @@ object Similarity {
     // base graph + FROZEN base model (memoized by the graph build)
     // materialized once: every st18 micro-batch back-link pass and the
     // s26/e07 faces re-reference the base edge set
-    val gBase = s22GraphAt(spark, baseDir, cellTarget, fineProbes, S22Pool)
+    val gBase = s22Graph(spark, baseDir)
       .select(col("src_id"), col("dst_id")).localCheckpoint()
-    val (k1, k2) = d12FactorsAt(nBase, cellTarget)
+    val (k1, k2) = d12Factors(nBase)
     val (_, Seq(cc, fc)) = twoLevelRows(spark, baseDir, k1, k2, LloydRounds)
-    val cb = codebookRows(spark, baseDir, S07Rounds, S07Subspaces, S07Codes)
-    // the stored base index: cell-keyed codes (s22ScoredAllAt's layout)
+    val cb = codebookRows(spark, baseDir, S07Rounds)
+    // the stored base index: cell-keyed codes (s22ScoredAll's layout)
     val codesByCell = codeRows(emb(spark, baseDir), cc._2, fc._2, cb._2, k2)
     S26Artifacts(baseDir, nBase, gBase, frameOf(spark, cc), frameOf(spark, fc), k2,
-      frameOf(spark, cb), codesByCell, fineProbes)
+      frameOf(spark, cb), codesByCell)
   }
 
   /** FORWARD edges for one delta slice against the frozen artifacts —
@@ -3245,7 +3135,7 @@ object Similarity {
     import graft.functions.VectorFunctions.array_dot
     val dq = delta.withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
-    val fprobes = probeCellsOf(dq, a.cc, a.fc, a.k2, a.probes)
+    val fprobes = probeCellsOf(dq, a.cc, a.fc, a.k2)
       .select(col("qid"), col("cid").as("cell"))
     val dtab = subvecsOf(delta, S07Subspaces)
       .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
@@ -3658,7 +3548,7 @@ object Similarity {
     * closed structurally). */
   def s29PersistedGraphSearch(spark: SparkSession, dir: String): DataFrame =
     s29ServeFromPath(spark, dir,
-      s22StoreAt(spark, dir, D11CellTarget, S06FineProbes, S22Pool)._2)
+      s22Store(spark, dir)._2)
 
   /** The path-only serve — what a FRESH process (new SparkSession, no
     * catalog entries, no memo) runs against an already-landed graph

@@ -22,16 +22,13 @@ class CodeStoreSpec extends AnyFunSuite {
 
   /** The replaced code-store build, kept only as the reference: coarse
     * and fine argmax through the partial-aggregated `max_by` joins, PQ
-    * codes through the `min_by` join, and the two joined on vec_id. */
+    * codes through the `min_by` join ([[AssignmentReference]]), and the
+    * two joined on vec_id. */
   private def referenceCodes(vecs: DataFrame, cc: DataFrame, fc: DataFrame,
       cb: DataFrame, k2: Int): DataFrame = {
-    import graft.functions.VectorFunctions.array_dot
-    val all = vecs.withColumn("nrm", sqrt(array_dot(col("e"), col("e"))))
-    val coarse = Similarity.assignCells(all, cc)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("ccid"))
-    val cells = Similarity.assignFine(coarse, fc)
-      .select(col("vec_id"), (col("ccid").cast("long") * k2 + col("fcid")).as("cell"))
-    Similarity.s07Encode(Similarity.subvecsOf(vecs, Similarity.S07Subspaces), cb)
+    val cells = AssignmentReference.twoLevelCells(vecs, cc, fc, k2)
+      .select(col("vec_id"), col("cid").as("cell"))
+    AssignmentReference.s07Encode(Similarity.subvecsOf(vecs, Similarity.S07Subspaces), cb)
       .select(col("vec_id"), col("sub"), col("cid").as("code"))
       .join(cells, Seq("vec_id"))
       .select(col("vec_id"), col("sub"), col("code"), col("cell"))
@@ -52,16 +49,6 @@ class CodeStoreSpec extends AnyFunSuite {
     g.size
   }
 
-  private def withConfs[T](partitions: String, aqe: String)(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(keys(0), partitions)
-      spark.conf.set(keys(1), aqe)
-      body
-    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   private def dataFiles(table: String): Int = {
     import scala.jdk.CollectionConverters._
     val loc = spark.sessionState.catalog.getTableMetadata(
@@ -76,7 +63,7 @@ class CodeStoreSpec extends AnyFunSuite {
   test("in-row codes equal the join-based code store row for row: build, fold-in, s26, across partitions and AQE") {
     val all = Similarity.emb(spark, sf)
     val n = Tables.count(spark, sf, "embeddings")
-    for (partitions <- Seq("1", "4"); aqe <- Seq("true", "false")) withConfs(partitions, aqe) {
+    for (partitions <- Seq("1", "4"); aqe <- Seq("true", "false")) TestSpark.withConfs(partitions, aqe) {
       val at = s"shuffle.partitions=$partitions, AQE=$aqe"
       val (codesT, ccT, fcT, cbT, nBase, k2) = Similarity.s12BuildBase(spark, sf)
       try {

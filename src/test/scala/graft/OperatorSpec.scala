@@ -407,8 +407,7 @@ class OperatorSpec extends AnyFunSuite {
     try {
       // force rebuilds so every store lands under the DURABLE root
       Similarity.releaseGraphStores(spark)
-      val (_, gPath) = Similarity.s22StoreAt(spark, sf,
-        Similarity.D11CellTarget, Similarity.S06FineProbes, Similarity.S22Pool)
+      val (_, gPath) = Similarity.s22Store(spark, sf)
       assert(gPath.startsWith(root),
         s"graph store must land under the durable root: $gPath")
       val expected29 = Similarity.s29PersistedGraphSearch(spark, sf)

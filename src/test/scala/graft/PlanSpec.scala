@@ -146,16 +146,39 @@ class PlanSpec extends AnyFunSuite {
     assert(!spark.catalog.tableExists("q22_customer"))
   }
 
-  test("s03 centroid assignment aggregates (max_by) — no Window over the cross-join") {
-    val df = Similarity.s03AnnIvf(spark, sf)
-    val p = plan(df)
-    // the inverted-file argmax must be a partial-aggregating max_by, not
-    // a row_number window shuffling the full n×16 assignment join; the
-    // remaining windows (probe pick + final ranking) partition by qid
-    assert(!p.contains("windowspecdefinition(vec_id"),
-      s"assignment should not rank via a per-vec_id Window:\n$p")
-    assert(p.contains("partial_max_by"),
-      s"expected partial-aggregating max_by before the shuffle:\n$p")
+  test("IVF queries assign in-row: no vec_id shuffle carries a vector, no vec_id window") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    object Aqe extends AdaptiveSparkPlanHelper
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
+      "s03" -> Similarity.s03AnnIvf, "s04" -> Similarity.s04AnnIvfKmeans,
+      "s06" -> Similarity.s06AnnIvf2Level, "s07" -> Similarity.s07PqAdc,
+      "s15" -> Similarity.s15AdaptiveProbes, "s19" -> Similarity.s19RangeSearch,
+      "d11" -> Similarity.d11SemanticDedup, "d12" -> Similarity.d12SemanticDedup2Level)
+    for ((name, query) <- queries) {
+      val executed = query(spark, sf).queryExecution.executedPlan
+      // the final cell assignment (and s07's encode) is a projection of
+      // the scan: no exchange hashes the corpus on vec_id while the rows
+      // still carry a vector (e, a subvector, or an aggregate buffer of
+      // one), as the max_by/min_by assignment aggregates did
+      val vectorShuffles = Aqe.collectWithSubqueries(executed) {
+        case x: ShuffleExchangeExec if (x.outputPartitioning match {
+            case h: HashPartitioning => h.references.exists(_.name == "vec_id")
+            case _ => false
+          }) && x.child.output.exists(_.dataType match {
+            case ArrayType(DoubleType, _) => true
+            case _ => false
+          }) => x
+      }
+      assert(vectorShuffles.isEmpty,
+        s"$name shuffles vectors on vec_id:\n${vectorShuffles.mkString("\n")}")
+      // nor ranks per vector through a window
+      val p = executed.toString
+      assert(!p.contains("windowspecdefinition(vec_id"),
+        s"$name ranks through a per-vec_id Window:\n$p")
+    }
   }
 
   test("shredded-variant write: variant_get reads a typed column scan with pushdown") {
@@ -438,23 +461,26 @@ class PlanSpec extends AnyFunSuite {
 
   test("d11 SemDeDup: within-cell pairs hash-join on the cell id, never cartesian") {
     val p = plan(Similarity.d11SemanticDedup(spark, sf))
-    // the 16-row centroid attach is a deliberate broadcast nested loop
-    // (assignCells crossJoin(broadcast)); the PAIR join must be the
-    // shuffled hash join on cid — an unkeyed product over the corpus
-    // would be the n² disaster d11 exists to avoid
-    assert(!p.contains("CartesianProduct"), s"pair join degraded to a product:\n$p")
+    // the cell of each vector is an in-row projection, so no join
+    // attaches the centroids; the PAIR join must be the shuffled hash
+    // join on cid — an unkeyed product over the corpus would be the n²
+    // disaster d11 exists to avoid
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"a join degraded to a product:\n$p")
     assert(p.contains("ShuffledHashJoin"), s"within-cell join must hash on cid:\n$p")
   }
 
-  test("d12 two-level SemDeDup: fine assignment broadcasts on ccid, pairs never cartesian") {
+  test("d12 two-level SemDeDup: fine assignment in-row on ccid, pairs never cartesian") {
     val p = plan(Similarity.d12SemanticDedup2Level(spark, sf))
-    // coarse centroid attach is the deliberate broadcast nested loop
-    // (assignCells, as in d11); the FINE assignment must be a keyed
-    // BROADCAST join on ccid (each vector meets only its own coarse
-    // cell's k2 centroids — the n·k2 half of the cost claim), and the
-    // within-cell pair join must stay the shuffled hash join on cid
-    assert(!p.contains("CartesianProduct"), s"pair join degraded to a product:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"fine assignment must broadcast on ccid:\n$p")
+    // both levels assign in-row, so no join attaches the centroids; the
+    // FINE search is keyed by the vector's coarse cell (each vector
+    // meets only its own coarse cell's k2 centroids — the n·k2 half of
+    // the cost claim), and the within-cell pair join must stay the
+    // shuffled hash join on cid
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"a join degraded to a product:\n$p")
+    assert("""nearest_cosine\(e#\d+, cid#\d+""".r.findFirstIn(p).nonEmpty,
+      s"fine assignment must search the coarse cell's centroids:\n$p")
     assert(p.contains("ShuffledHashJoin"), s"within-cell join must hash on cid:\n$p")
   }
 
@@ -464,11 +490,11 @@ class PlanSpec extends AnyFunSuite {
     // must never degrade to a product — that would be scanning the
     // corpus per query, exactly what the IVF exists to avoid; the only
     // nested-loop attaches are the deliberate k1-row coarse-centroid
-    // broadcasts (assignCells/coarse probe, as in d12)
+    // broadcasts of the query-side coarse probe
     assert(!p.contains("CartesianProduct"), s"probe join degraded to a product:\n$p")
-    // fine assignment + fine probe + candidate join are keyed
-    // broadcast joins (centroid tables and probe sets are small by
-    // construction — the "centroids fit in RAM" IVF posture)
+    // fine probe + candidate join are keyed broadcast joins (centroid
+    // tables and probe sets are small by construction — the "centroids
+    // fit in RAM" IVF posture)
     assert(p.contains("BroadcastHashJoin"), s"keyed joins must broadcast:\n$p")
     // every rank window is partitioned by qid/vec_id — a global window
     // here would serialize the corpus through one task

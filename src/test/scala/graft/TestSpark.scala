@@ -25,4 +25,16 @@ object TestSpark {
       (out, started.asScala.toSeq)
     } finally session.sparkContext.removeSparkListener(listener)
   }
+
+  /** `body` under the given shuffle partitions and AQE setting of the
+    * shared session, restoring the caller's settings afterwards. */
+  def withConfs[T](partitions: String, aqe: String)(body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> session.conf.getOption(k))
+    try {
+      session.conf.set(keys(0), partitions)
+      session.conf.set(keys(1), aqe)
+      body
+    } finally saved.foreach { case (k, v) => v.fold(session.conf.unset(k))(session.conf.set(k, _)) }
+  }
 }

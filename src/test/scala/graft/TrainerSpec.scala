@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The quantizer trainers — [[Similarity.trainedCentroids]],
-  * [[Similarity.twoLevelModel]] and [[Similarity.s07CodebooksAt]] —
+  * [[Similarity.twoLevelModel]] and [[Similarity.s07Codebooks]] —
   * against the Lloyd round they replaced, and their storage contract.
   *
   * Precondition of the equivalence: `vec_id` is unique in the corpus.
@@ -22,10 +22,12 @@ class TrainerSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   /** The replaced round, kept only as the reference: assign through the
-    * partial-aggregated `max_by`/`min_by` joins, then explode each
-    * member to one row per dimension, `avg` per (cell, dim), and
-    * reassemble with `array_sort(collect_list(struct))`. */
+    * partial-aggregated `max_by`/`min_by` joins of
+    * [[AssignmentReference]], then explode each member to one row per
+    * dimension, `avg` per (cell, dim), and reassemble with
+    * `array_sort(collect_list(struct))`. */
   private object Reference {
+    import AssignmentReference.{assignCells, assignFine, s07Encode}
     import graft.functions.VectorFunctions.array_dot
 
     private def emb(dir: String) = Similarity.emb(spark, dir)
@@ -50,7 +52,7 @@ class TrainerSpec extends AnyFunSuite {
         .select((col("vec_id") / stride).cast("int").as("cid"),
           col("e").as("ce"), col("nrm").as("cnrm"))
       for (_ <- 1 to rounds)
-        cents = withNorm(meanOf(Similarity.assignCells(all, cents), Seq("cid"), "e", "ce"))
+        cents = withNorm(meanOf(assignCells(all, cents), Seq("cid"), "e", "ce"))
       cents
     }
 
@@ -58,7 +60,7 @@ class TrainerSpec extends AnyFunSuite {
         rounds: Int): (DataFrame, DataFrame, DataFrame) = {
       val all = emb(dir)
       val ccents = trainedCentroids(dir, rounds, k1)
-      val coarse = Similarity.assignCells(all, ccents)
+      val coarse = assignCells(all, ccents)
         .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("ccid"))
       val wRank = Window.partitionBy(col("ccid")).orderBy(col("vec_id"))
       var cents = coarse
@@ -69,22 +71,20 @@ class TrainerSpec extends AnyFunSuite {
         .select(col("ccid"), expr("rk div stride").cast("int").as("fcid"),
           col("e").as("ce"), col("nrm").as("cnrm"))
       for (_ <- 1 to rounds)
-        cents = withNorm(meanOf(Similarity.assignFine(coarse, cents),
+        cents = withNorm(meanOf(assignFine(coarse, cents),
           Seq("ccid", "fcid"), "e", "ce"))
-      val assigned = Similarity.assignFine(coarse, cents)
-        .select(col("vec_id"), col("e"), col("nrm"),
-          (col("ccid").cast("long") * k2 + col("fcid")).as("cid"))
-      (ccents, cents, assigned)
+      (ccents, cents,
+        AssignmentReference.twoLevelCells(Similarity.emb(spark, dir), ccents, cents, k2))
     }
 
     def codebooks(dir: String, rounds: Int, m: Int, nCodes: Int): DataFrame = {
-      val sv = Similarity.subvecsAt(spark, dir, m)
+      val sv = Similarity.subvecsOf(Similarity.emb(spark, dir), m)
       val stride = math.max(1L, Tables(spark, dir, "embeddings").count() / nCodes)
       var cb = sv.filter(col("vec_id") % stride === 0 && col("vec_id") / stride < nCodes)
         .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
           col("v").as("cv"))
       for (_ <- 1 to rounds)
-        cb = meanOf(Similarity.s07Encode(sv, cb), Seq("sub", "cid"), "v", "cv")
+        cb = meanOf(s07Encode(sv, cb), Seq("sub", "cid"), "v", "cv")
       cb
     }
   }
@@ -97,19 +97,9 @@ class TrainerSpec extends AnyFunSuite {
       case v => v
     }).sortBy(_.takeWhile(!_.isInstanceOf[Seq[_]]).mkString("|"))
 
-  private def withConfs[T](partitions: String, aqe: String)(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(keys(0), partitions)
-      spark.conf.set(keys(1), aqe)
-      body
-    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   test("trainers equal the posexplode/avg/collect_list reference row for row, across partitions and AQE") {
     val (k1, k2) = Similarity.d12Factors(Tables(spark, sf, "embeddings").count())
-    for (partitions <- Seq("1", "4"); aqe <- Seq("true", "false")) withConfs(partitions, aqe) {
+    for (partitions <- Seq("1", "4"); aqe <- Seq("true", "false")) TestSpark.withConfs(partitions, aqe) {
       val at = s"shuffle.partitions=$partitions, AQE=$aqe"
       Similarity.clearTrainedModels()
       assert(rows(Similarity.trainedCentroids(spark, sf, Similarity.LloydRounds)) ==
@@ -120,8 +110,7 @@ class TrainerSpec extends AnyFunSuite {
       assert(rows(got._1) == rows(ref._1), s"two-level coarse centroids diverged ($at)")
       assert(rows(got._2) == rows(ref._2), s"two-level fine centroids diverged ($at)")
       assert(rows(got._3) == rows(ref._3), s"two-level assignment diverged ($at)")
-      assert(rows(Similarity.s07CodebooksAt(spark, sf, Similarity.S07Rounds,
-          Similarity.S07Subspaces, Similarity.S07Codes)) ==
+      assert(rows(Similarity.s07Codebooks(spark, sf, Similarity.S07Rounds)) ==
         rows(Reference.codebooks(sf, Similarity.S07Rounds,
           Similarity.S07Subspaces, Similarity.S07Codes)),
         s"s07 codebooks diverged ($at)")
