@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
@@ -111,11 +112,26 @@ case class Int8QuantCensus(child: Expression) extends UnaryExpression {
   *    lowest id.
   * Doubles order as Spark orders them (NaN highest, -0.0 = 0.0). Both
   * return -1 when the key has no centroids.
+  *
+  * Two searches serve IVF-PQ queries, per row, with the same formulas:
+  *  - [[probe]] is the hierarchical probe's two rank windows: the top
+  *    `coarseProbes` of these (key 0) centroids by `round(cos, 6)`
+  *    descending, NULL last, then id; then, among the fine centroids
+  *    of those coarse cells, the top `fineProbes` by `round(cos, 6)`
+  *    descending, NULL last, then coarse id, then fine id. A NULL or
+  *    zero-norm vector has NULL cosines everywhere, so it ranks by ids
+  *    alone.
+  *  - [[adcTable]] is the ADC distance table of one query over a PQ
+  *    codebook (key = subspace): entry sub·codes + cid is
+  *    `round(l2sq(qv, cv) · 1e6, 0)` as a long, qv being the query's
+  *    slice at sub·d of the codewords' length d, and l2sq the
+  *    `v·v − 2.0·v·c + c·c` of [[VectorImpls.dot]]s. An entry with no
+  *    codeword is NULL.
   */
 final class Centroids private (
-    ids: Array[Array[Int]], vecs: Array[Array[ArrayData]],
-    norms: Array[Array[Double]], squares: Array[Array[Double]]) extends Serializable {
-  import Centroids.{compare, round6}
+    private val ids: Array[Array[Int]], private val vecs: Array[Array[ArrayData]],
+    private val norms: Array[Array[Double]], squares: Array[Array[Double]]) extends Serializable {
+  import Centroids.{compare, roundHalfUp, round6}
 
   def nearestCosine(e: ArrayData, key: Int): Int = {
     if (key < 0 || key >= ids.length) return -1
@@ -160,6 +176,83 @@ final class Centroids private (
     best
   }
 
+  /** The composite cells ccid·k2 + fcid that `e` probes, in rank order:
+    * the top `coarseProbes` of these centroids (key 0), then the top
+    * `fineProbes` of `fine`'s centroids keyed by those coarse ids. */
+  def probe(e: ArrayData, fine: Centroids, k2: Int,
+      coarseProbes: Int, fineProbes: Int): ArrayData = {
+    val nrm = if (e == null) 0.0 else math.sqrt(VectorImpls.dot(e, e))
+    val coarse = if (ids.isEmpty) Array.empty[(Int, Int)] else ids(0).indices.map((0, _)).toArray
+    val top = ranked(coarse, e, nrm, coarseProbes).map(c => ids(0)(c._2))
+    val cands = top.flatMap(cc =>
+      if (cc >= fine.ids.length) Nil else fine.ids(cc).indices.map((cc, _)))
+    val cells = fine.ranked(cands, e, nrm, fineProbes).map { case (cc, j) =>
+      cc.toLong * k2 + fine.ids(cc)(j)
+    }
+    UnsafeArrayData.fromPrimitiveArray(cells)
+  }
+
+  /** The first `p` of `cands` ((key, index) of a centroid) by rounded
+    * cosine to `e` (of norm `nrm`) descending, NULL last, then key,
+    * then id: a selection pass per slot, as there are at most a few. */
+  private def ranked(cands: Array[(Int, Int)], e: ArrayData, nrm: Double,
+      p: Int): Array[(Int, Int)] = {
+    val n = cands.length
+    val isNull = new Array[Boolean](n)
+    val cos = new Array[Double](n)
+    for (i <- 0 until n) {
+      val (k, j) = cands(i)
+      val den = nrm * norms(k)(j)
+      isNull(i) = e == null || den == 0.0
+      if (!isNull(i)) cos(i) = round6(VectorImpls.dot(e, vecs(k)(j)) / den)
+    }
+    def before(a: Int, b: Int): Boolean =
+      if (isNull(a) != isNull(b)) !isNull(a)
+      else {
+        val cmp = if (isNull(a)) 0 else compare(cos(a), cos(b))
+        if (cmp != 0) cmp > 0
+        else if (cands(a)._1 != cands(b)._1) cands(a)._1 < cands(b)._1
+        else ids(cands(a)._1)(cands(a)._2) < ids(cands(b)._1)(cands(b)._2)
+      }
+    val taken = new Array[Boolean](n)
+    val out = Array.newBuilder[(Int, Int)]
+    var slot = 0
+    while (slot < math.min(p, n)) {
+      var best = -1
+      var i = 0
+      while (i < n) {
+        if (!taken(i) && (best < 0 || before(i, best))) best = i
+        i += 1
+      }
+      taken(best) = true
+      out += cands(best)
+      slot += 1
+    }
+    out.result()
+  }
+
+  /** The `m`·`codes` ADC table of query `e` over these codewords (key =
+    * subspace < m, id = code < codes); NULL where no codeword is. */
+  def adcTable(e: ArrayData, m: Int, codes: Int): ArrayData = {
+    val out = new Array[Any](m * codes)
+    for (sub <- 0 until math.min(m, ids.length); j <- ids(sub).indices if ids(sub)(j) < codes) {
+      val cv = vecs(sub)(j)
+      val off = sub * cv.numElements()
+      val n = math.max(0, math.min(cv.numElements(), e.numElements() - off))
+      var vv, vc = 0.0
+      var i = 0
+      while (i < n) {
+        val x = e.getDouble(off + i)
+        vv += x * x
+        vc += x * cv.getDouble(i)
+        i += 1
+      }
+      val d2 = vv - 2.0 * vc + squares(sub)(j)
+      out(sub * codes + ids(sub)(j)) = roundHalfUp(d2 * 1e6, 0).toLong
+    }
+    new GenericArrayData(out)
+  }
+
   override def toString: String = s"Centroids(${ids.map(_.length).sum} in ${ids.length} keys)"
 }
 
@@ -175,10 +268,13 @@ object Centroids {
     new Centroids(groups.map(_.map(_._2)), vecs, squares.map(_.map(math.sqrt)), squares)
   }
 
-  /** Spark's `round(x, 6)` on a double: HALF_UP on the decimal string. */
-  private[graft] def round6(x: Double): Double =
+  /** Spark's `round(x, 6)` on a double. */
+  private[graft] def round6(x: Double): Double = roundHalfUp(x, 6)
+
+  /** Spark's `round(x, scale)` on a double: HALF_UP on the decimal string. */
+  private def roundHalfUp(x: Double, scale: Int): Double =
     if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    else java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Spark's double ordering: NaN above everything, -0.0 equal to 0.0. */
   private def compare(a: Double, b: Double): Int =
@@ -216,6 +312,57 @@ case class NearestCentroid(vec: Expression, key: Expression,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid =
     copy(vec = newLeft, key = newRight)
+}
+
+/** The composite cells a query vector probes ([[Centroids.probe]]), as
+  * array<long> in rank order: the hierarchical probe of an IVF query as
+  * one projection of the query row, with no join to the centroids and
+  * no rank window. Never NULL: a NULL vector ranks by ids alone, as
+  * the windows rank its NULL cosines. */
+case class ProbeCells(vec: Expression, coarse: Centroids, fine: Centroids,
+    k2: Int, coarseProbes: Int, fineProbes: Int) extends UnaryExpression {
+  override def child: Expression = vec
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "probe_cells"
+
+  override def eval(input: InternalRow): Any =
+    coarse.probe(vec.eval(input).asInstanceOf[ArrayData], fine, k2, coarseProbes, fineProbes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = ctx.addReferenceObj("coarse", coarse, classOf[Centroids].getName)
+    val f = ctx.addReferenceObj("fine", fine, classOf[Centroids].getName)
+    val v = vec.genCode(ctx)
+    ev.copy(code = code"""
+      |${v.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = $c.probe(
+      |  ${v.isNull} ? null : ${v.value}, $f, $k2, $coarseProbes, $fineProbes);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ProbeCells =
+    copy(vec = newChild)
+}
+
+/** A query vector's ADC distance table over a PQ codebook
+  * ([[Centroids.adcTable]]), as array<long> of `m`·`codes` micro-unit
+  * entries: the per-query table a lookup by sub·codes + code reads,
+  * computed in the query's own row (NULL for a NULL vector). */
+case class AdcTable(vec: Expression, codebook: Centroids, m: Int, codes: Int)
+    extends UnaryExpression {
+  override def child: Expression = vec
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "adc_table"
+
+  override def nullSafeEval(v: Any): Any = codebook.adcTable(v.asInstanceOf[ArrayData], m, codes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("codebook", codebook, classOf[Centroids].getName)
+    defineCodeGen(ctx, ev, v => s"$cb.adcTable($v, $m, $codes)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): AdcTable =
+    copy(vec = newChild)
 }
 
 /** Element-wise mean of an array<double> column, as one aggregate: the
@@ -324,4 +471,16 @@ object VectorFunctions {
   /** Id of the lowest-L2 centroid among `key`'s (native, in-row). */
   def nearest_l2(v: Column, key: Column, c: Centroids): Column =
     GraftShims.column(NearestCentroid(GraftShims.expression(v), GraftShims.expression(key), c, cosine = false))
+
+  /** The composite cells ccid·k2 + fcid a query vector probes, in rank
+    * order: its top `coarseProbes` coarse cells, then the top
+    * `fineProbes` fine cells within them (native, in-row). */
+  def probe_cells(qe: Column, coarse: Centroids, fine: Centroids, k2: Int,
+      coarseProbes: Int, fineProbes: Int): Column =
+    GraftShims.column(ProbeCells(GraftShims.expression(qe), coarse, fine, k2, coarseProbes, fineProbes))
+
+  /** A query vector's `m`·`codes` ADC micro-unit table over a PQ
+    * codebook (native, in-row). */
+  def adc_table(qe: Column, cb: Centroids, m: Int, codes: Int): Column =
+    GraftShims.column(AdcTable(GraftShims.expression(qe), cb, m, codes))
 }

@@ -435,8 +435,8 @@ object StreamingOps {
     * under `maxFilesPerTrigger=1`, so the fold runs as three separate
     * micro-batch appends — each micro-batch flows through the FROZEN
     * stored model inside foreachBatch ([[graft.operators.Similarity
-    * .s12FoldIn]]: in-row assign+encode against the collected stored
-    * centroids/codebooks, bucket-compatible append, the existing code
+    * .s12FoldIn]]: in-row assign+encode against the stored
+    * centroids/codebooks' memoized driver rows, bucket-compatible append, the existing code
     * store never read). The gate then searches the stream-folded store
     * through the unchanged serve path and the ORACLE IS s12's
     * verbatim: a full-corpus index whose model trained on the base —

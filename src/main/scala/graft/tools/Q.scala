@@ -135,11 +135,9 @@ object Q {
         spark.sparkContext.removeSparkListener(listener)
         val rows = jobs.values.toSeq.sortBy(_.start)
         println(f"PROFILE $name total=$sec%.3f s  jobs=${rows.size}")
-        var cursor = t0
-        for (j <- rows) {
+        val gaps = gapsBeforeMs(t0, rows.map(j => (j.start, j.end)))
+        for ((j, gap) <- rows.zip(gaps)) {
           val dur = if (j.end > 0) j.end - j.start else -1
-          val gap = j.start - cursor
-          if (j.end > 0) cursor = math.max(cursor, j.end)
           println(f"  job=${j.id}%4d off=${(j.start - t0) / 1000.0}%7.2f gapBefore=${gap / 1000.0}%6.2f dur=${dur / 1000.0}%6.2f stages=${j.nStages}%3d tasks=${j.nTasks}%5d taskSec=${j.taskMs / 1000.0}%7.2f  ${j.desc.take(80)}")
         }
         val covered = coveredMs(rows.filter(_.end > 0).map(j => (j.start, j.end)))
@@ -157,6 +155,15 @@ object Q {
         if (end <= reach) (sum, reach)
         else (sum + end - math.max(start, reach), end)
     }._1
+
+  /** Per job of `spans` (sorted by start; end ≤ 0 for a job that did not
+    * end), the milliseconds before its start that neither an earlier
+    * job nor the time before `t0` covered: 0 when an earlier job was
+    * still running, so overlapping jobs never read as a negative gap. */
+  private[graft] def gapsBeforeMs(t0: Long, spans: Seq[(Long, Long)]): Seq[Long] =
+    spans.scanLeft((0L, t0)) { case ((_, reach), (start, end)) =>
+      (math.max(0L, start - reach), if (end > 0) math.max(reach, end) else reach)
+    }.tail.map(_._1)
 }
 
 /** Name → query fn over BOTH Bench surfaces: the SparkEntry gate map and

@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The aggregate forms of the IVF cell assignment and the PQ encode,
   * kept only as the reference the equivalence specs compare the in-row
   * `nearest_cosine`/`nearest_l2` projections against
   * ([[graft.operators.Similarity.cellRows]],
-  * [[graft.operators.Similarity.codeRows]] and the s07 codes). Each is
+  * [[graft.operators.Similarity.codeRows]] and the s07 codes), and the
+  * window form of the hierarchical probe and the join form of the ADC
+  * table the in-row `probe_cells`/`adc_table` serve path replaced. Each
+  * assignment is
   * a broadcast join to the centroids, then the argmax (argmin) as a
   * partial-aggregating `max_by` (`min_by`) grouped by the row's id —
   * the rounded score and lowest-id tie-break of the oracle's
@@ -62,4 +66,49 @@ object AssignmentReference {
       .groupBy(col("vec_id"), col("sub"))
       .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"),
         first(col("v")).as("v"))
+
+  /** The hierarchical probe as two rank windows: (qid, qe, qnrm) query
+    * rows against coarse `ccents` (cid, ce, cnrm) and fine `fcents`
+    * (ccid, fcid, ce, cnrm) centroids — the top `coarseProbes` coarse
+    * cells by round(cos, 6) descending, then ccid, and among their fine
+    * centroids the top `fineProbes` by round(cos, 6) descending, then
+    * ccid, then fcid: (qid, qe, qnrm, cid, rk2), cid = ccid·k2 + fcid
+    * and rk2 its fine rank. Ranks are narrow rows (qid, ids, rounded
+    * score); the query vector re-attaches by a qid-keyed join. */
+  def probeCellsOf(queries: DataFrame, ccents: DataFrame, fcents: DataFrame,
+      k2: Int, coarseProbes: Int, fineProbes: Int): DataFrame = {
+    val wC = Window.partitionBy(col("qid"))
+      .orderBy(col("c6").desc, col("ccid").asc)
+    val cTop = queries.crossJoin(broadcast(ccents))
+      .select(col("qid"),
+        round(array_dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")), 6).as("c6"),
+        col("cid").as("ccid"))
+      .withColumn("rk", row_number().over(wC))
+      .filter(col("rk") <= coarseProbes)
+      .select(col("qid"), col("ccid"))
+    val wF = Window.partitionBy(col("qid"))
+      .orderBy(col("f6").desc, col("ccid").asc, col("fcid").asc)
+    cTop.join(queries, Seq("qid"))
+      .join(broadcast(fcents), Seq("ccid"))
+      .select(col("qid"), col("ccid"), col("fcid"),
+        round(array_dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")), 6).as("f6"))
+      .withColumn("rk2", row_number().over(wF))
+      .filter(col("rk2") <= fineProbes)
+      .select(col("qid"), (col("ccid").cast("long") * k2 + col("fcid")).as("cid"), col("rk2"))
+      .join(queries, Seq("qid"))
+      .select(col("qid"), col("qe"), col("qnrm"), col("cid"), col("rk2"))
+  }
+
+  /** The ADC distance tables of (qid, qe) query rows as (qid, sub, code,
+    * unit) rows: each query's `m` subvectors joined to the codebook `cb`
+    * (sub, cid, cv) on sub, unit = round(‖qv − cv‖² · 1e6, 0) as a long
+    * with ‖a − b‖² = a·a − 2.0·a·b + b·b. */
+  def adcTables(queries: DataFrame, cb: DataFrame, m: Int): DataFrame =
+    graft.operators.Similarity.subvecsOf(
+        queries.select(col("qid").as("vec_id"), col("qe").as("e")), m)
+      .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
+      .join(broadcast(cb), Seq("sub"))
+      .select(col("qid"), col("sub"), col("cid").as("code"),
+        round((array_dot(col("qv"), col("qv")) - lit(2.0) * array_dot(col("qv"), col("cv")) +
+          array_dot(col("cv"), col("cv"))) * 1e6, 0).cast("long").as("unit"))
 }

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The final corpus assignment of the IVF queries — in-row through
-  * [[Similarity.cellRows]] and the s07 codes — against the aggregate
-  * forms it replaced ([[AssignmentReference]]), under the same trained
-  * models, across shuffle partitions and AQE.
+  * [[Similarity.cellRows]] and the s07 codes — and the in-row serve
+  * path of IVF-PQ — the hierarchical probe and the ADC table — against
+  * the aggregate, window and join forms they replaced
+  * ([[AssignmentReference]]), under the same trained models, across
+  * shuffle partitions and AQE.
   *
   * Precondition of the equivalence: `vec_id` is unique and no vector is
   * NULL (see [[AssignmentReference]]); the sf0.001 corpus meets it.
@@ -68,5 +70,64 @@ class AssignmentSpec extends AnyFunSuite {
             .select("vec_id", "sub", "cid"),
           s"s07 codes ($at)")
       }
+  }
+
+  test("in-row probe_cells and adc_table equal the rank windows and the dtab join row for row, across partitions and AQE") {
+    import graft.functions.VectorFunctions.{adc_table, array_dot}
+    import Similarity.{S06CoarseProbes, S06FineProbes, S07Codes, S07Subspaces}
+    val (k1, k2) = Similarity.d12Factors(Tables.count(spark, sf, "embeddings"))
+    val corpus = Similarity.emb(spark, sf).select(col("vec_id").as("qid"), col("e").as("qe"),
+      sqrt(array_dot(col("e"), col("e"))).as("qnrm"))
+    val gate = corpus.filter(col("qid") < 10)
+    val cb = Similarity.s07Codebooks(spark, sf, Similarity.S07Rounds)
+    val codebook = graft.functions.Centroids(cb.collect().toSeq.map(r =>
+      (r.getInt(0), r.getInt(1), r.getSeq[Double](2))))
+    // each query's table entries (qid, sub, code, unit), the missing
+    // codewords' NULL entries left out as the join has no row for them
+    def inRowTables(queries: DataFrame): DataFrame =
+      queries.select(col("qid"), posexplode(adc_table(col("qe"), codebook, S07Subspaces, S07Codes)))
+        .filter(col("col").isNotNull)
+        .select(col("qid"), (col("pos") / S07Codes).cast("int").as("sub"),
+          (col("pos") % S07Codes).as("code"), col("col").as("unit"))
+    for (partitions <- Seq("1", "4"); aqe <- Seq("true", "false"))
+      TestSpark.withConfs(partitions, aqe) {
+        val at = s"shuffle.partitions=$partitions, AQE=$aqe"
+        val (cc, fc, _) = Similarity.twoLevelModel(spark, sf, k1, k2, Similarity.LloydRounds)
+        val (ccRows, fcRows) = (cc.collect().toSeq, fc.collect().toSeq)
+        // s06's probe, over the gate set and over the corpus as queries (s22)
+        for ((queries, what) <- Seq(gate -> "10 queries", corpus -> "corpus as queries"))
+          assertSameRows(Similarity.probeCellsOf(queries, ccRows, fcRows, k2).select("qid", "cid"),
+            AssignmentReference.probeCellsOf(queries, cc, fc, k2, S06CoarseProbes, S06FineProbes)
+              .select("qid", "cid"),
+            s"probe, $what ($at)")
+        // s15's ranked probe: the list position is the fine window's rank
+        assertSameRows(
+          gate.select(col("qid"), posexplode(Similarity.probeCol(ccRows, fcRows, k2,
+              Similarity.S15MaxProbes)))
+            .select(col("qid"), (col("pos") + 1).as("rk2"), col("col").as("cid")),
+          AssignmentReference.probeCellsOf(gate, cc, fc, k2, S06CoarseProbes,
+            Similarity.S15MaxProbes).select("qid", "rk2", "cid"),
+          s"s15 ranked probe ($at)")
+        assertSameRows(inRowTables(gate),
+          AssignmentReference.adcTables(gate, cb, S07Subspaces), s"ADC tables ($at)")
+      }
+    // a zero-norm query: every cosine is NULL (non-ANSI division, as the
+    // windows divide; ANSI division would throw), so it probes by ids
+    // alone; its ADC table has no division at all
+    val zero = spark.createDataFrame(Seq((-1L, Seq.fill(64)(0.0), 0.0)))
+      .toDF("qid", "qe", "qnrm")
+    val (cc, fc, _) = Similarity.twoLevelModel(spark, sf, k1, k2, Similarity.LloydRounds)
+    val ansi = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(ansi)
+    spark.conf.set(ansi, "false")
+    try {
+      assertSameRows(Similarity.probeCellsOf(zero, cc.collect().toSeq, fc.collect().toSeq, k2)
+          .select("qid", "cid"),
+        AssignmentReference.probeCellsOf(zero, cc, fc, k2, S06CoarseProbes, S06FineProbes)
+          .select("qid", "cid"),
+        "probe, zero-norm query")
+      assertSameRows(inRowTables(zero), AssignmentReference.adcTables(zero, cb, S07Subspaces),
+        "ADC table, zero-norm query")
+    } finally saved.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
   }
 }

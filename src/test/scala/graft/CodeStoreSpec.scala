@@ -78,7 +78,8 @@ class CodeStoreSpec extends AnyFunSuite {
       } finally drop(codesT, ccT, fcT, cbT)
       val a = Similarity.s26BuildBase(spark, sf)
       assertSameRows(a.codesByCell,
-        referenceCodes(Similarity.emb(spark, a.baseDir), a.cc, a.fc, a.cb, a.k2),
+        referenceCodes(Similarity.emb(spark, a.baseDir), Similarity.frameOf(spark, a.cc),
+          Similarity.frameOf(spark, a.fc), Similarity.frameOf(spark, a.cb), a.k2),
         s"s26 codesByCell ($at)")
     }
   }
@@ -125,5 +126,38 @@ class CodeStoreSpec extends AnyFunSuite {
       sc.setJobDescription(null)
       drop(codesT, ccT, fcT, cbT)
     }
+  }
+
+  test("after the base build, planning the fold-in and the search starts no Spark job") {
+    val (codesT, ccT, fcT, cbT, nBase, k2) = Similarity.s12BuildBase(spark, sf)
+    try {
+      val delta = Similarity.emb(spark, sf).filter(col("vec_id") >= nBase)
+      val (_, jobs) = TestSpark.jobs {
+        Similarity.s12AssignEncode(spark, delta, ccT, fcT, cbT, k2).queryExecution.executedPlan
+        Similarity.s11Search(spark, sf, codesT, ccT, fcT, cbT, k2).queryExecution.executedPlan
+      }
+      assert(jobs.isEmpty, s"the stored model tables were read back: $jobs")
+    } finally drop(codesT, ccT, fcT, cbT)
+  }
+
+  test("a model table overwritten at its path misses the stored-model memo and serves the new rows") {
+    import scala.jdk.CollectionConverters._
+    val (codesT, ccT, fcT, cbT) = Similarity.s11BuildIndex(spark, sf)
+    try {
+      val before = Similarity.storedRows(spark, ccT)
+      assert(before.size > 1, "the coarse quantizer needs more than one cell")
+      val loc = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(ccT)).location.toString
+      // keep only the last coarse centroid, at the same path
+      spark.createDataFrame(before.takeRight(1).asJava, spark.table(ccT).schema)
+        .write.mode("overwrite").format("parquet").option("path", loc).saveAsTable(ccT)
+      val after = Similarity.storedRows(spark, ccT)
+      assert(after.map(_.getInt(0)) == Seq(before.last.getInt(0)), s"served rows $after")
+      // the fold-in assigns every vector to that one coarse cell
+      val k2 = Similarity.d12Factors(Tables.count(spark, sf, "embeddings"))._2
+      val ccids = Similarity.s12AssignEncode(spark, Similarity.emb(spark, sf), ccT, fcT, cbT, k2)
+        .select((col("cell") / k2).cast("int")).distinct().collect().map(_.getInt(0)).toSeq
+      assert(ccids == Seq(before.last.getInt(0)), s"coarse cells of the fold-in: $ccids")
+    } finally drop(codesT, ccT, fcT, cbT)
   }
 }

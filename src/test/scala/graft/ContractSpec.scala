@@ -41,6 +41,15 @@ class ContractSpec extends AnyFunSuite {
     assert(graft.tools.Q.coveredMs(Nil) == 0L)
   }
 
+  test("Q profile's gap before a job is uncovered time, never negative") {
+    // from t0 = 0: [2,10) after 2 ms idle; [5,15) starts inside it; [6,8)
+    // inside both; [20,30) after the 5 ms nothing covered; an unended
+    // job at 25 inside [20,30); [40,45) after 10 ms
+    val spans = Seq((2L, 10L), (5L, 15L), (6L, 8L), (20L, 30L), (25L, -1L), (40L, 45L))
+    assert(graft.tools.Q.gapsBeforeMs(0L, spans) == Seq(2L, 0L, 0L, 5L, 0L, 10L))
+    assert(graft.tools.Q.gapsBeforeMs(0L, Nil) == Nil)
+  }
+
   test("bench summary line stays far under the driver's stdout-tail budget") {
     val inv = """{"a":true,"b":true,"c":true,"d":true,"e":false}"""
     // worst realistic case: MANY regressed queries with long names —

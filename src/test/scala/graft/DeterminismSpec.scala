@@ -92,7 +92,11 @@ class DeterminismSpec extends AnyFunSuite {
     // the in-row cell assignment of the IVF searches: the flat seeds,
     // the budgeted probe policy over the population census, and the
     // range tail may not show partition boundaries
-    "s03_ann_ivf", "s15_adaptive_probes", "s19_range_search")
+    "s03_ann_ivf", "s15_adaptive_probes", "s19_range_search",
+    // the in-row IVF-PQ serve path: the probed cells, the per-query ADC
+    // table lookups and the unit sums — in-gate, re-ranked, persisted
+    // and folded in — may not show partition boundaries
+    "s09_ivf_pq", "s10_ivf_pq_rerank", "s11_persisted_ivf_pq", "s12_ivf_pq_foldin")
 
   /** One session per (shuffle partitions, AQE) setting, shared by every
     * pick; the first is the one the others are compared against. */

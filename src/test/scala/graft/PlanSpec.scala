@@ -484,21 +484,36 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("ShuffledHashJoin"), s"within-cell join must hash on cid:\n$p")
   }
 
-  test("s06 two-level IVF search: keyed probe joins, centroids broadcast, never cartesian") {
+  test("s06 two-level IVF search: keyed candidate join, probe in-row, never cartesian") {
     val p = plan(Similarity.s06AnnIvf2Level(spark, sf))
     // the candidate join (probes × inverted file on the composite cid)
     // must never degrade to a product — that would be scanning the
-    // corpus per query, exactly what the IVF exists to avoid; the only
-    // nested-loop attaches are the deliberate k1-row coarse-centroid
-    // broadcasts of the query-side coarse probe
-    assert(!p.contains("CartesianProduct"), s"probe join degraded to a product:\n$p")
-    // fine probe + candidate join are keyed broadcast joins (centroid
-    // tables and probe sets are small by construction — the "centroids
-    // fit in RAM" IVF posture)
+    // corpus per query, exactly what the IVF exists to avoid; both
+    // probe levels are one in-row projection of the query rows, so no
+    // join attaches the centroids and nothing nested-loops
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"a join degraded to a product:\n$p")
+    // the candidate join is a keyed broadcast join (the probe set is
+    // small by construction)
     assert(p.contains("BroadcastHashJoin"), s"keyed joins must broadcast:\n$p")
     // every rank window is partitioned by qid/vec_id — a global window
     // here would serialize the corpus through one task
     assert(!p.contains("No Partition Defined"), s"global window crept in:\n$p")
+  }
+
+  test("s15 budgeted probe: the probe is in-row, only the budget and final rank windows remain") {
+    val p = plan(Similarity.s15AdaptiveProbes(spark, sf))
+    // the ranked cells come from one probe_cells projection at
+    // S15MaxProbes, their rank from the list position — no join to the
+    // centroids and no coarse/fine rank window; the cumulative budget
+    // window over the ranked cells and the final top-k window stay
+    assert(p.contains("probe_cells("), s"s15 has no in-row probe:\n$p")
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"a join degraded to a product:\n$p")
+    assert(p.contains("windowspecdefinition(qid#") && p.contains("rk2#"),
+      s"the budget window over rk2 must stay:\n$p")
+    assert(!"windowspecdefinition\\([^)]*cos".r.findFirstIn(p).isDefined,
+      s"a rank window ordered by a centroid score remains:\n$p")
   }
 
   test("p08 z-order census: map-side interleave, only the two 1-row attaches nested-loop") {
@@ -618,23 +633,51 @@ class PlanSpec extends AnyFunSuite {
       s"label must appear in the hash-join keys:\n$p")
   }
 
-  test("s09 IVF-PQ: the code scan is cell-restricted BEFORE the ADC join") {
+  test("s09 IVF-PQ: the code scan is cell-restricted BEFORE the in-row ADC lookup") {
     val p = plan(Similarity.s09IvfPq(spark, sf))
-    // (BroadcastNestedLoop IS expected once: the probe stage's
-    // deliberate rank-all-coarse-centroids broadcast attach, k1 rows)
-    assert(!p.contains("CartesianProduct"), s"s09 join degraded to a product:\n$p")
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"s09 join degraded to a product:\n$p")
     // the operator's whole point (round-11 verdict item 1): candidates
-    // come from the codes ⋈ probed-cells join, so the distance-table
-    // join only ever sees probed cells' code rows. In the plan tree the
-    // ADC join must be the PARENT (prints first) and the cell join its
-    // descendant (prints below) — the reverse order would mean the
-    // corpus was ADC-scored first and cell-filtered after.
+    // come from the codes ⋈ probed-cells join, and each candidate looks
+    // its unit up in its query's ADC table (dtab[sub·codes + code]), so
+    // only probed cells' code rows are ever scored. In the plan tree the
+    // lookup must sit ABOVE the cell join (prints first) — the reverse
+    // order would mean the corpus was ADC-scored first and cell-filtered
+    // after — and no (qid, sub, code) join to a distance table remains.
     val cellJoin = "BroadcastHashJoin \\[cell".r.findFirstMatchIn(p)
-    val adcJoin = "BroadcastHashJoin \\[qid#\\d+L?, sub#\\d+, code#\\d+".r.findFirstMatchIn(p)
+    val lookup = "dtab#\\d+\\[".r.findFirstMatchIn(p)
     assert(cellJoin.isDefined, s"no cell-keyed probe join found:\n$p")
-    assert(adcJoin.isDefined, s"no (qid, sub, code)-keyed ADC join found:\n$p")
-    assert(adcJoin.get.start < cellJoin.get.start,
-      s"cell restriction must feed the ADC join, not follow it:\n$p")
+    assert(lookup.isDefined, s"no in-row ADC table lookup found:\n$p")
+    assert(lookup.get.start < cellJoin.get.start,
+      s"cell restriction must feed the ADC lookup, not follow it:\n$p")
+    assert("Join \\[qid#\\d+L?, sub#\\d+, code#\\d+".r.findFirstIn(p).isEmpty,
+      s"a (qid, sub, code) distance-table join remains:\n$p")
+  }
+
+  test("IVF-PQ and two-level searches probe in-row: probe_cells, no qid window below the candidate join") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
+      "s06" -> Similarity.s06AnnIvf2Level, "s09" -> Similarity.s09IvfPq,
+      "s11" -> Similarity.s11PersistedIvfPq, "s12" -> Similarity.s12IncrementalIvfPq)
+    for ((name, query) <- queries) {
+      val executed = query(spark, sf).queryExecution.executedPlan
+      assert(executed.toString.contains("probe_cells("), s"$name has no in-row probe:\n$executed")
+      // the candidate join: probed cells meet the inverted file or the
+      // code store on the cell id
+      val candidate = Aqe.collect(executed) {
+        case j: BroadcastHashJoinExec
+            if j.leftKeys.exists(_.references.exists(a => a.name == "cid" || a.name == "cell")) => j
+      }
+      assert(candidate.nonEmpty, s"$name has no cell-keyed candidate join:\n$executed")
+      // the probe's rank windows partitioned by qid are gone from below it
+      val rankWindows = candidate.flatMap(j => Aqe.collect(j) {
+        case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "qid")) => w
+      })
+      assert(rankWindows.isEmpty, s"$name ranks the probe through a qid window:\n$executed")
+    }
   }
 
   test("p18 merge-on-read read: deletes broadcast into the scan as a LeftAnti; corpus never shuffles") {
@@ -867,13 +910,13 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"no product anywhere:\n$p")
     // the mask's whole point: deleted rows are pruned BEFORE the
     // distance lookup — the LeftAnti tombstone join must be a
-    // DESCENDANT of the (qid, sub, code)-keyed ADC join (prints below
-    // it), never a post-scoring filter above it
+    // DESCENDANT of the in-row ADC table lookup (prints below it),
+    // never a post-scoring filter above it
     val anti = ", LeftAnti".r.findFirstMatchIn(p)
-    val adc = "BroadcastHashJoin \\[qid#\\d+L?, sub#\\d+, code#\\d+".r.findFirstMatchIn(p)
+    val lookup = "dtab#\\d+\\[".r.findFirstMatchIn(p)
     assert(anti.isDefined, s"no broadcast anti-join tombstone mask found:\n$p")
-    assert(adc.isDefined, s"no (qid, sub, code)-keyed ADC join found:\n$p")
-    assert(adc.get.start < anti.get.start,
+    assert(lookup.isDefined, s"no in-row ADC table lookup found:\n$p")
+    assert(lookup.get.start < anti.get.start,
       s"tombstones must prune candidates before ADC scoring, not after:\n$p")
   }
 
