@@ -241,7 +241,8 @@ object Bench {
     def repOnce(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
       val quiet = deliberateGlobalWindows.contains(name)
       if (quiet) windowExecLevel(org.apache.logging.log4j.Level.ERROR)
-      try Some(time(force(fn(spark, sfDir))))
+      // the query's release runs after `time` returns, outside the rep
+      try Some(Session.scoped(spark)(time(force(fn(spark, sfDir)))))
       catch { case _: Throwable => None }
       finally if (quiet) windowExecLevel(org.apache.logging.log4j.Level.WARN)
     }
@@ -366,7 +367,9 @@ object Bench {
     // separately here: build_sec amortizes across every future batch
     // at deploy; search_sec is the per-batch cost that must stay flat
     // round over round.
-    val phaseSplits: Seq[(String, Seq[(String, Double)])] = {
+    // one query lifetime for the splits: their tables, checkpoints and
+    // scratch dirs are released once all four are timed
+    val phaseSplits: Seq[(String, Seq[(String, Double)])] = Session.scoped(spark) {
       val sim = graft.operators.Similarity
       val s11 = try {
         val n = graft.core.Tables.count(spark, sfDir, "embeddings")

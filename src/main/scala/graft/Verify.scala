@@ -28,8 +28,8 @@ object Verify {
     def ran(name: String): Boolean = only.isEmpty || selected.contains(name)
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Session.scoped(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

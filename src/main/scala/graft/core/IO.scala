@@ -33,23 +33,17 @@ object IO {
     * Spark's inference costs one Spark job, so the schema it inferred is
     * memoized per [[listing]]: a repeat read of an unchanged path starts
     * no job, and a rewritten path is inferred afresh. */
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val key = listing(spark, path)
-    key.flatMap(k => Option(inferred.get(k))) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach(inferred.putIfAbsent(_, df.schema))
-        df
-    }
-  }
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(inferred(listing(spark, path))(spark.read.parquet(path).schema))
+      .parquet(path)
 
   /** A path's identity: the path and its one-level file listing (name,
-    * length, modification time; a subdirectory's name ends in `/`).
-    * None when the path cannot be listed — the read then fails with
-    * Spark's own error. */
-  private[graft] def listing(spark: SparkSession,
-      path: String): Option[(String, Seq[(String, Long, Long)])] = {
+    * length, modification time; a subdirectory's name ends in `/`). */
+  private[graft] type Listing = (String, Seq[(String, Long, Long)])
+
+  /** `path`'s [[Listing]]; None when the path cannot be listed — the
+    * read then fails with Spark's own error. */
+  private[graft] def listing(spark: SparkSession, path: String): Option[Listing] = {
     val p = new org.apache.hadoop.fs.Path(path)
     scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p))
       .toOption.map(fs => (path,
@@ -57,8 +51,31 @@ object IO {
           f.getLen, f.getModificationTime)).sorted))
   }
 
-  private val inferred = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)]), org.apache.spark.sql.types.StructType]()
+  /** A driver-side memo keyed by a [[Listing]] (with whatever else the
+    * value depends on): a hit starts no Spark job, and a path rewritten
+    * since has another listing, so it misses and is computed afresh. */
+  private[graft] final class ListingMemo[K, V] {
+    private val entries = new java.util.concurrent.ConcurrentHashMap[K, V]()
+
+    /** `key`'s value, computed and stored on a miss; with no key (an
+      * unlistable path) it is computed on every call. */
+    def apply(key: Option[K])(compute: => V): V = key match {
+      case Some(k) => Option(entries.get(k)).getOrElse {
+        val v = compute
+        entries.putIfAbsent(k, v)
+        v
+      }
+      case None => compute
+    }
+
+    /** Store `v` under `key`, for the writer that has just written it. */
+    def seed(key: Option[K], v: V): Unit = key.foreach(entries.put(_, v))
+
+    def size: Int = entries.size
+    def clear(): Unit = entries.clear()
+  }
+
+  private val inferred = new ListingMemo[Listing, org.apache.spark.sql.types.StructType]
 
   /** Total on-disk size in bytes of a written dataset (file or dir) —
     * powers the compression-ratio metric (reference
@@ -76,17 +93,14 @@ object IO {
     fs.getContentSummary(p).getLength
   }
 
-  /** Create a temp dir that is guaranteed gone at JVM exit. Operators
-    * that stage data through local scratch space (c07, p01, p03, Bench)
-    * hand out lazily-read paths, so eager deletion would break the
-    * returned plan — a shutdown hook is the earliest safe point.
-    * Long-lived sessions on a shared box therefore leak no dirs past
-    * JVM exit (round-2 judge finding: GBs of orphaned graft-* dirs).
-    * ONE shared hook drains a registry, so repeated calls don't
-    * accumulate a Thread per scratch dir. NOTE: dirs do accumulate on
-    * disk for the JVM's lifetime by design (the lazily-read plans may
-    * still reference them); a service calling scratch-using operators
-    * unboundedly should pass its own lifecycle-managed paths instead.
+  /** Create a scratch dir. Operators that stage data through local
+    * scratch space (c07, p01, p03, the persisted stores) hand out
+    * lazily-read paths, so the operator itself cannot delete the dir.
+    * Each dir is registered instead: the [[Session.scoped]] lifetime of
+    * the query that made it deletes it once the query's consumer is
+    * done, and ONE shared JVM-exit hook deletes whatever no scope owned
+    * (a caller outside any scope, or a [[Session.keep]] artifact never
+    * released), so no dir outlives the JVM.
     */
   def scratchDir(prefix: String): String =
     SparkSession.getActiveSession
@@ -96,12 +110,13 @@ object IO {
         // DURABLE artifact root (round-17 verdict item 5): when
         // `spark.graft.artifactRoot` is set on the active session (or
         // GRAFT_ARTIFACT_ROOT in the environment), dirs land under
-        // that root and are NOT registered for exit deletion — the
-        // seam that lets persisted stores (s29 graph, s11 codes, t18b
-        // postings, m08 media) outlive the JVM, with a NEW session
-        // serving them from the landed paths alone (spec-pinned, no
-        // catalog entry required). Lifecycle of the root is the
-        // caller's (a deployment points it at its lake path).
+        // that root and are NOT registered — no scope and no exit hook
+        // deletes them. That is the seam that lets persisted stores
+        // (s29 graph, s11 codes, t18b postings, m08 media) outlive the
+        // JVM, with a NEW session serving them from the landed paths
+        // alone (spec-pinned, no catalog entry required). Lifecycle of
+        // the root is the caller's (a deployment points it at its lake
+        // path).
         val base = java.nio.file.Paths.get(root)
         java.nio.file.Files.createDirectories(base)
         java.nio.file.Files.createTempDirectory(base, prefix).toString
@@ -111,13 +126,23 @@ object IO {
         dir.toString
     }
 
-  private lazy val scratchRegistry: java.util.Queue[java.nio.file.Path] = {
-    val q = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  /** The scratch dirs registered and not yet deleted. */
+  private[graft] def scratchDirs: Set[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    scratchRegistry.asScala.toSet
+  }
+
+  /** Delete registered scratch `dirs` and unregister them. */
+  private[graft] def deleteScratch(dirs: Iterable[java.nio.file.Path]): Unit =
+    dirs.foreach { d => deleteRecursively(d); scratchRegistry.remove(d) }
+
+  private lazy val scratchRegistry: java.util.Set[java.nio.file.Path] = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = q.poll()
-      while (p != null) { deleteRecursively(p); p = q.poll() }
+      import scala.jdk.CollectionConverters._
+      dirs.asScala.toSeq.foreach(deleteRecursively)
     }))
-    q
+    dirs
   }
 
   private[graft] def deleteRecursively(dir: java.nio.file.Path): Unit =

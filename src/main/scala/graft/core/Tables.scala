@@ -42,17 +42,10 @@ object Tables {
     * level deep, so a rewrite inside a partition directory need not
     * change it, and a partitioned table is counted on every call. */
   def count(spark: SparkSession, dir: String, name: String): Long =
-    IO.listing(spark, s"$dir/$name.parquet").filterNot(_._2.exists(_._1.endsWith("/"))) match {
-      case Some(key) => Option(counts.get(key)).map(_.longValue).getOrElse {
-        val n = apply(spark, dir, name).count()
-        counts.putIfAbsent(key, n)
-        n
-      }
-      case None => apply(spark, dir, name).count()
-    }
+    counts(IO.listing(spark, s"$dir/$name.parquet").filterNot(_._2.exists(_._1.endsWith("/"))))(
+      apply(spark, dir, name).count())
 
-  private val counts = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)]), java.lang.Long]()
+  private val counts = new IO.ListingMemo[IO.Listing, Long]
 
   def events(spark: SparkSession, dir: String): DataFrame =
     storedEvents(spark, dir) match { case (raw, ts) => contractTs(raw, ts) }

@@ -1490,7 +1490,7 @@ object Dedup {
     * would otherwise deepen by two joins per round and the 20-round
     * plan tree broke re-planning in round 1) and the superseded round
     * is explicitly unpersisted (GraftShims.unpersistLocalCheckpoint) so
-    * a long bench session leaks no executor storage. On a multi-node
+    * the loop's peak storage stays one round deep. On a multi-node
     * cluster swap localCheckpoint for reliable checkpoint(dir) —
     * same shape, executor-loss-safe.
     *
@@ -1591,8 +1591,6 @@ object Dedup {
       converged = cedges.isEmpty
       iter += 1
     }
-    if (cedges ne edges0) unpersistLocalCheckpoint(cedges)
-    unpersistLocalCheckpoint(edges0)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $CCMaxIters rounds — " +

@@ -731,7 +731,7 @@ object Pipeline {
     * generation, same census tail. */
   def e04LeakageAudit(spark: SparkSession, dir: String): DataFrame = {
     val split = e03ClusterSplit(spark, dir)
-      .select(col("doc_id"), col("split")).cache()
+      .select(col("doc_id"), col("split")).localCheckpoint(eager = false)
     val sa = split.select(col("doc_id").as("ida"), col("split").as("sa"))
     val sb = split.select(col("doc_id").as("idb"), col("split").as("sb"))
     def pairCensus(tier: String, pairs: DataFrame): DataFrame =
@@ -753,19 +753,13 @@ object Pipeline {
         sum(when(col("nsp") >= 2, 1L).otherwise(0L)).as("n_cross"))
       .select(lit("substring_grams").as("tier"), col("n_total"),
         coalesce(col("n_cross"), lit(0L)).as("n_cross"))
-    // materialize the 4-row census, then release the split cache —
-    // the d07/s18 supersession discipline (nothing from this audit
-    // stays pinned across a long session except the 4 result rows)
-    val out = pairCensus("exact_prefix", exactPairs)
+    pairCensus("exact_prefix", exactPairs)
       .unionByName(pairCensus("lexical",
         Dedup.d08NgramJaccardCapped(spark, dir).select("ida", "idb")))
       .unionByName(pairCensus("semantic",
         Dedup.d06EmbeddingNearDup(spark, dir).select("ida", "idb")))
       .unionByName(gramRow)
       .orderBy("tier")
-      .localCheckpoint()
-    split.unpersist()
-    out
   }
 
   /** e04 oracle: e03's split chain as CTEs, then each tier's pair/
@@ -844,17 +838,10 @@ object Pipeline {
       .select(col("query_id").as("qid"), col("doc_id").as("nid"), col("e"),
         expr("rrf_mu * 61 div 2").as("rel_m"))
       .localCheckpoint()
-    val sel = Similarity.mmrSelect(pool, E05K)
-    val out = sel
+    Similarity.mmrSelect(pool, E05K)
       .select(col("qid").as("query_id"), col("rnk"),
         col("nid").as("doc_id"), col("score_m").as("mmr_score_m"))
       .orderBy("query_id", "rnk")
-      .localCheckpoint()
-    // release the pool and the final round's checkpoint — only the
-    // ≤ K·queries-row page stays pinned (the s18/e04 discipline)
-    org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint(pool)
-    org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint(sel)
-    out
   }
 
   /** Edge bar for e06: the d06 near-dup threshold applied to the

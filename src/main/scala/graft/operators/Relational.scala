@@ -788,7 +788,6 @@ object Relational {
       unpersistLocalCheckpoint(rk)
       rk = next
     }
-    unpersistLocalCheckpoint(edges)
     rk
   }
 

@@ -268,8 +268,7 @@ object Similarity {
     * Spark job at all. The models are K rows each — the "centroids fit in RAM"
     * assumption their broadcasts already make — and nothing is held in
     * executor storage. */
-  private val trainedModels = new java.util.concurrent.ConcurrentHashMap[
-    ((String, Seq[(String, Long, Long)]), Seq[Any]), Seq[ModelRows]]()
+  private val trainedModels = new IO.ListingMemo[(IO.Listing, Seq[Any]), Seq[ModelRows]]
 
   /** Entries in [[trainedModels]] — the memo spec's seam. */
   private[graft] def trainedModelCount: Int = trainedModels.size
@@ -283,14 +282,8 @@ object Similarity {
   private def modelRows(spark: SparkSession, dir: String, args: Any*)(
       train: DataFrame => Seq[ModelRows]): (DataFrame, Seq[ModelRows]) = {
     val corpus = Tables(spark, dir, "embeddings")
-    (corpus, IO.listing(spark, s"$dir/embeddings.parquet").map(k => (k, args.toSeq)) match {
-      case Some(key) => Option(trainedModels.get(key)).getOrElse {
-        val trained = train(corpus)
-        trainedModels.putIfAbsent(key, trained)
-        trained
-      }
-      case None => train(corpus)
-    })
+    (corpus, trainedModels(IO.listing(spark, s"$dir/embeddings.parquet")
+      .map(k => (k, args.toSeq)))(train(corpus)))
   }
 
   /** A model table as a one-partition local relation: no storage to
@@ -828,17 +821,18 @@ object Similarity {
       .withColumn("cum_before",
         coalesce(sum(coalesce(col("pop"), lit(0L))).over(wB), lit(0L)))
       .filter(col("cum_before") < budget)
-      .select(col("qid"), col("qe"), col("qnrm"), col("cid"))
-    val np = fprobes.groupBy(col("qid")).agg(count(lit(1)).as("n_probes"))
+      // the admitted cells are a rank prefix (cum_before only grows),
+      // so the probe count is the last admitted rank
+      .select(col("qid"), col("qe"), col("qnrm"), col("cid"),
+        max(col("rk2")).over(Window.partitionBy(col("qid"))).cast("long").as("n_probes"))
     val wRank = Window.partitionBy(col("qid"))
       .orderBy(round(col("c"), 6).desc, col("nid").asc)
     fprobes.join(assigned, Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
+      .select(col("qid"), col("n_probes"), col("vec_id").as("nid"),
         (array_dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("c"))
       .withColumn("rn", row_number().over(wRank))
       .filter(col("rn") <= K)
-      .join(broadcast(np), Seq("qid"))
       .select(col("qid").as("query_id"), col("n_probes"),
         col("rn").cast("long").as("rnk"), col("nid").as("neighbor_id"),
         round(col("c"), 4).as("cos_sim"))
@@ -1481,7 +1475,7 @@ object Similarity {
       for ((model, name, t) <- Seq((cc, "cc", ccT), (fc, "fc", fcT), (cb, "cb", cbT))) {
         frameOf(spark, model).write.mode("overwrite").format("parquet")
           .option("path", s"$wh/${name}_$tag").saveAsTable(t)
-        storedKey(spark, t).foreach(storedModels.put(_, model._2))
+        storedModels.seed(storedKey(spark, t), model._2)
       }
       (codesT, ccT, fcT, cbT)
     }
@@ -1540,24 +1534,16 @@ object Similarity {
     * [[IO.readParquet]] / [[trainedModels]] pattern: [[s11BuildIndex]]
     * seeds it with the rows it wrote, and a hit starts no Spark job.
     * The tables are K rows each, as the trained models are. */
-  private val storedModels = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)]), Seq[Row]]()
+  private val storedModels = new IO.ListingMemo[IO.Listing, Seq[Row]]
 
   /** The memo key of catalog table `t`: its location's listing. */
-  private def storedKey(spark: SparkSession,
-      t: String): Option[(String, Seq[(String, Long, Long)])] =
+  private def storedKey(spark: SparkSession, t: String): Option[IO.Listing] =
     IO.listing(spark, spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(t)).location.toString)
 
   /** Catalog table `t`'s rows through [[storedModels]]. */
-  private[graft] def storedRows(spark: SparkSession, t: String): Seq[Row] = {
-    val key = storedKey(spark, t)
-    key.flatMap(k => Option(storedModels.get(k))).getOrElse {
-      val rows = spark.table(t).collect().toSeq
-      key.foreach(storedModels.putIfAbsent(_, rows))
-      rows
-    }
-  }
+  private[graft] def storedRows(spark: SparkSession, t: String): Seq[Row] =
+    storedModels(storedKey(spark, t))(spark.table(t).collect().toSeq)
 
   // ---- s12: incremental fold-in for the persisted IVF-PQ index ------
 
@@ -2067,8 +2053,8 @@ object Similarity {
     // would grow 3^k subtrees — localCheckpoint'ing the ≤10·r-row
     // round result keeps the plan linear in k, and the d07
     // round-supersession discipline (unpersist the previous round
-    // once the next is materialized) keeps a long session from
-    // accumulating superseded round storage
+    // once the next is materialized) keeps the loop's peak storage
+    // one round deep
     var selected = pool.withColumn("rk", row_number().over(wRel))
       .filter(col("rk") === 1)
       .select(col("qid"), col("nid"), col("e"), lit(1L).as("rnk"),
@@ -2123,21 +2109,11 @@ object Similarity {
       .withColumn("rn", row_number().over(wPool))
       .filter(col("rn") <= MmrPool)
       .select("qid", "nid", "e", "rel_m")
-      .cache()
-    val sel = mmrSelect(pool, K)
-    // the greedy rounds are materialized inside mmrSelect, so the
-    // final result can be pinned once and BOTH the pool cache and the
-    // last round's checkpoint released — nothing from this query
-    // accumulates across a long multi-query session except the
-    // ≤K·queries-row result itself
-    val out = sel
+      .localCheckpoint(eager = false)
+    mmrSelect(pool, K)
       .select(col("qid").as("query_id"), col("rnk"),
         col("nid").as("neighbor_id"), col("score_m").as("mmr_score_m"))
       .orderBy("query_id", "rnk")
-      .localCheckpoint()
-    pool.unpersist()
-    org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint(sel)
-    out
   }
 
   /** s18 oracle: the identical pool + k unrolled greedy rounds in
@@ -2464,28 +2440,21 @@ object Similarity {
     // gate face re-states the output order the contract names
     s22Graph(spark, dir).orderBy("src_id", "rnk")
 
-  /** One PERSISTED graph store per (context, dir) — the
-    * deploy amortization (the graph is built once and served many;
-    * s23/s24/s25/s26/s27/s28/e06/e07 all consume it). The memo holds
-    * only the (table, path) NAMES of a src-bucketed parquet artifact —
-    * round-16 closed this family's lifecycle asymmetry: every other
-    * index tier (s11 codes, s21 signatures, t18b postings, m08 media)
-    * already served from stored files, while the graph lived in a
-    * session-memoized localCheckpoint. That form had two cluster-scale
-    * defects the round-16 advice named: (a) localCheckpoint blocks are
-    * NOT recoverable after executor loss (unlike cache, which
-    * recomputes, or parquet, which re-reads), so any consumer mid-job
-    * would fail once an executor died; (b) the checkpoint pinned the
-    * full corpus-sized edge set to executor storage for the
-    * application's lifetime with no release path. The stored table
-    * pins ZERO executor storage (spec-pinned via getPersistentRDDs),
-    * survives executor loss, and [[releaseGraphStores]] drops it on
-    * demand. Earlier history, kept for the record: `.cache()` was
+  /** One PERSISTED graph store per (context, dir) — the deploy
+    * amortization: the graph is built once and served many times
+    * (s23/s24/s25/s26/s27/s28/e06/e07 all consume it). The memo holds
+    * only the (table, path) NAMES of a src-bucketed parquet artifact,
+    * as every other index tier (s11 codes, s21 signatures, t18b
+    * postings, m08 media) serves from stored files. The build runs
+    * under [[graft.core.Session.keep]], so the store outlives the
+    * [[graft.core.Session.scoped]] lifetime of the query that first
+    * asked for it, and [[releaseGraphStores]] is its one release. The
+    * stored table pins ZERO executor storage (spec-pinned via
+    * getPersistentRDDs) and survives executor loss, where the
+    * round-16 session-memoized localCheckpoint did not. `.cache()` was
     * rejected in round 15 because CacheManager SUBSTITUTES the
     * InMemoryRelation under any later identical plan — including the
-    * supposedly-uncached [[s22GraphPlan]] seam PlanSpec explains — and
-    * a metastore table is just as invisible to plan matching as the
-    * checkpoint was. */
+    * supposedly-uncached [[s22GraphPlan]] seam PlanSpec explains. */
   private val s22Memo =
     new java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]()
 
@@ -2516,82 +2485,24 @@ object Similarity {
     * request. */
   private[graft] def s22Store(spark: SparkSession, dir: String): (String, String) =
     s22Memo.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      _ => s29LandGraphStore(spark, s22GraphPlan(spark, dir)))
+      _ => graft.core.Session.keep(spark)(s29LandGraphStore(spark, s22GraphPlan(spark, dir))))
 
-  /** Release every memoized graph artifact (and the shared s26 base
-    * build): drops the metastore tables and clears the memos, so a
-    * long-lived session holds NOTHING for the graph family after its
-    * last consumer — the round-16 advice's eviction path. The parquet
-    * files live in scratch dirs that self-delete at JVM exit; a later
-    * caller simply rebuilds. */
   /** (graph-store memo entries, s26 base-build memo entries) — the
     * release spec's observability seam. */
   private[graft] def graphMemoSizes: (Int, Int) = (s22Memo.size, s26Memo.size)
 
-  /** The per-query transient edge checkpoints [[servedOverEdges]]
-    * handed out — pinned while their serve results may still be
-    * consumed (the results reference them lazily), drained by
-    * [[releaseGraphStores]]. */
-  private val transientPins =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** The transient-pin discipline for graph consumers (round-17
-    * advice): s23/s24/s25/s27/s28 each materialize the stored graph
-    * ONCE per query as a localCheckpoint the walk/prune references
-    * every round. Left alone those corpus-sized edge pins accumulate
-    * executor storage across a long session until the ContextCleaner
-    * happens to GC them. Every such checkpoint is therefore
-    * REGISTERED here and [[releaseGraphStores]] — the family's
-    * eviction verb — unpersists them deterministically. (Releasing
-    * eagerly per query would require materializing the serve result
-    * inside the operator, which would collapse the serve plan the
-    * PlanSpecs pin; the registry keeps the plan intact and the release
-    * explicit.) */
-  private def servedOverEdges(edges: DataFrame)
-      (serve: DataFrame => DataFrame): DataFrame = {
-    val g = edges.localCheckpoint()
-    transientPins.add(g)
-    serve(g)
-  }
-
-  /** Pins currently registered — the release spec's seam. */
-  private[graft] def transientPinCount: Int = transientPins.size
-
-  /** Release every graph artifact THIS application holds: drop the
-    * memoized graph-store tables, unpersist the s26 base builds'
-    * checkpointed edge sets, and drain the transient serve pins — so a
-    * long-lived session holds NOTHING for the graph family after its
-    * last consumer (the round-16 advice's eviction path, completed per
-    * round-17 advice: gBase was abandoned still-pinned, and other
-    * applications' memo entries were dropped without their tables).
-    * Entries keyed by OTHER applicationIds stay memoized — their
-    * owners release them. The parquet files live in scratch dirs that
-    * self-delete at JVM exit; a later caller simply rebuilds. */
+  /** Release every graph artifact THIS application holds — the graph
+    * stores and the s26 base builds, which are everything
+    * [[graft.core.Session.keep]] exempted: their RDDs are unpersisted,
+    * their tables dropped and their scratch dirs deleted — and forget
+    * this application's memo entries, so a later caller rebuilds.
+    * Entries keyed by OTHER applicationIds stay memoized; their owners
+    * release them. */
   private[graft] def releaseGraphStores(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint
     val app = spark.sparkContext.applicationId
-    val sIt = s22Memo.entrySet().iterator()
-    while (sIt.hasNext) {
-      val e = sIt.next()
-      if (e.getKey._1 == app) {
-        spark.sql(s"DROP TABLE IF EXISTS ${e.getValue._1}")
-        sIt.remove()
-      }
-    }
-    val aIt = s26Memo.entrySet().iterator()
-    while (aIt.hasNext) {
-      val e = aIt.next()
-      if (e.getKey._1 == app) {
-        unpersistLocalCheckpoint(e.getValue.gBase)
-        aIt.remove()
-      }
-    }
-    var p = transientPins.poll()
-    while (p != null) {
-      try unpersistLocalCheckpoint(p)
-      catch { case _: IllegalStateException => () } // owner context gone
-      p = transientPins.poll()
-    }
+    graft.core.Session.releaseKept(spark)
+    s22Memo.keySet().removeIf(_._1 == app)
+    s26Memo.keySet().removeIf(_._1 == app)
   }
 
   /** The UNCACHED, UNMEMOIZED build plan — the PlanSpec seam (a cached
@@ -2714,16 +2625,15 @@ object Similarity {
     * tiny frontier into the edge table (at deploy, an src-keyed edge
     * store — the s11 serve discipline). The oracle replays the s22
     * build, the probe seed, AND every walk round CTE-for-CTE. */
-  def s23GraphSearch(spark: SparkSession, dir: String): DataFrame =
-    // the store read materializes ONCE per query (a transient
-    // per-query checkpoint — the walk references the edge set every
-    // round, and 4 re-scans of the parquet store cost ~0.8 s at sf0.1)
-    // and is RELEASED once the result lands ([[servedOverEdges]])
-    servedOverEdges(s22KnnGraph(spark, dir)
-        .select(col("src_id"), col("dst_id"))) { graph =>
-      s23Serve(spark, emb(spark, dir), graph,
-        s23SeedFrontier(spark, dir, S23Beam), S23Rounds, S23Beam)
-    }
+  def s23GraphSearch(spark: SparkSession, dir: String): DataFrame = {
+    // the store read materializes ONCE per query (a per-query
+    // checkpoint — the walk references the edge set every round, and 4
+    // re-scans of the parquet store cost ~0.8 s at sf0.1)
+    val graph = s22KnnGraph(spark, dir)
+      .select(col("src_id"), col("dst_id")).localCheckpoint()
+    s23Serve(spark, emb(spark, dir), graph,
+      s23SeedFrontier(spark, dir, S23Beam), S23Rounds, S23Beam)
+  }
 
   /** The walk's entry frontier — the top-`beamWidth` exact-ranked
     * members of the query's probed IVF cells (s06's scan, the
@@ -2923,11 +2833,8 @@ object Similarity {
     * artifact, not a growing DAG (the e05 lesson). The oracle replays
     * the s22 build and every prune round CTE-for-CTE. */
   def s24DiverseGraph(spark: SparkSession, dir: String): DataFrame =
-    // one materialized read — the prune references g twice per round;
-    // released once the (smaller) pruned graph lands
-    servedOverEdges(s22KnnGraph(spark, dir)) { g =>
-      s24PruneOver(g, emb(spark, dir), S24Degree)
-    }
+    // one materialized read — the prune references g twice per round
+    s24PruneOver(s22KnnGraph(spark, dir).localCheckpoint(), emb(spark, dir), S24Degree)
 
   /** The prune over an explicit (already-materialized) candidate graph
     * and vector frame. */
@@ -3031,11 +2938,9 @@ object Similarity {
     * the s22 build, the s24 prune rounds, AND every walk round —
     * the full build→prune→serve lifecycle replayed CTE-for-CTE. */
   def s25PrunedSearch(spark: SparkSession, dir: String): DataFrame =
-    servedOverEdges(s24DiverseGraph(spark, dir)
-        .select(col("src_id"), col("dst_id"))) { pruned =>
-      s23Serve(spark, emb(spark, dir), pruned,
-        s23SeedFrontier(spark, dir, S23Beam), S23Rounds, S23Beam)
-    }
+    s23Serve(spark, emb(spark, dir),
+      s24DiverseGraph(spark, dir).select(col("src_id"), col("dst_id")).localCheckpoint(),
+      s23SeedFrontier(spark, dir, S23Beam), S23Rounds, S23Beam)
 
   /** s25 oracle: s22 graph build + s24 prune chain + the s23 walk over
     * the pruned edge set `k<degree>`. */
@@ -3102,14 +3007,16 @@ object Similarity {
     * graph, frozen model, cell-keyed codes) — at deploy there is ONE
     * stored index that every verb reads, so the gates share one build
     * the same way the graph consumers share [[s22Memo]] (round-16: the
-    * three gates each paid a ~15 s rebuild at sf0.1 before this). */
+    * three gates each paid a ~15 s rebuild at sf0.1 before this). Built
+    * under [[graft.core.Session.keep]] like the graph store, and
+    * released with it by [[releaseGraphStores]]. */
   private val s26Memo =
     new java.util.concurrent.ConcurrentHashMap[(String, String), S26Artifacts]()
 
   private[graft] def s26BuildBase(spark: SparkSession,
       dir: String): S26Artifacts =
     s26Memo.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      _ => s26BuildBaseUncached(spark, dir))
+      _ => graft.core.Session.keep(spark)(s26BuildBaseUncached(spark, dir)))
 
   private def s26BuildBaseUncached(spark: SparkSession, dir: String): S26Artifacts = {
     val n = Tables.count(spark, dir, "embeddings")
@@ -3297,10 +3204,8 @@ object Similarity {
     * graph build → tombstones → re-link pool → exact re-rank
     * CTE-for-CTE. */
   def s27GraphDelete(spark: SparkSession, dir: String): DataFrame =
-    servedOverEdges(s22KnnGraph(spark, dir)) { g =>
-      s27ConsolidateOver(g, emb(spark, dir),
-        s16Tombstones(spark, dir), S22Degree)
-    }
+    s27ConsolidateOver(s22KnnGraph(spark, dir).localCheckpoint(), emb(spark, dir),
+      s16Tombstones(spark, dir), S22Degree)
 
   /** The consolidate over explicit (graph, vectors, tombstones) frames
     * — the spec seam (the planted re-link fixture builds its own tiny
@@ -3401,9 +3306,9 @@ object Similarity {
     * materialized graph, doubled frontier, plus broadcast label joins
     * — the corpus never shuffles on label. The oracle replays build +
     * both seed tracks + every two-beam round CTE-for-CTE. */
-  def s28FilteredGraphSearch(spark: SparkSession, dir: String): DataFrame =
-    servedOverEdges(s22KnnGraph(spark, dir)
-        .select(col("src_id"), col("dst_id"))) { graph =>
+  def s28FilteredGraphSearch(spark: SparkSession, dir: String): DataFrame = {
+    val graph = s22KnnGraph(spark, dir)
+      .select(col("src_id"), col("dst_id")).localCheckpoint()
     val all = emb(spark, dir)
     val lbl = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label").cast("long").as("label"))

@@ -287,9 +287,6 @@ object TextOps {
     * order is fixed (email, ip, phone) so both engines transform
     * identical intermediates. Map-only until the gate sort — the same
     * single-scan shape as t01/t02. */
-  def t11PiiCensus(spark: SparkSession, dir: String): DataFrame =
-    piiCensus(docs(spark, dir))
-
   private[graft] def piiCensus(corpus: DataFrame): DataFrame = {
     val redacted =
       regexp_replace(regexp_replace(regexp_replace(col("text"),
@@ -788,7 +785,8 @@ object TextOps {
   def t17QualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     val feats = t17Feats(spark, dir)
     val train = feats.filter(pmod(col("doc_id"), lit(T17TrainMod)) === 0)
-      .cache() // scanned once per GD round — the training-set cache
+      // scanned once per GD round; the first round's pass materializes it
+      .localCheckpoint(eager = false)
     def z(w: Array[Long]) =
       (lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2") +
         lit(w(3)) * col("x3")) / lit(1e6)
@@ -811,7 +809,6 @@ object TextOps {
       w = Array.tabulate(4)(j =>
         w(j) + T17Lr * math.floor(g.getLong(j).toDouble / n).toLong)
     }
-    train.unpersist()
     withSigmoid(feats, z(w))
       .select(col("doc_id"), col("label").cast("long").as("label"),
         floor(col("p") * 1e6).as("score_micro"),
@@ -876,14 +873,13 @@ object TextOps {
   private[graft] def t06bAt(spark: SparkSession, dir: String,
       merges: Int): DataFrame = {
     import spark.implicits._
-    val (rows, vocab) = t06bTrain(spark, dir, merges)
-    vocab.unpersist()
+    val (rows, _) = t06bTrain(spark, dir, merges)
     rows.toDF("round", "pair", "pair_n", "corpus_pieces").orderBy("round")
   }
 
   /** The t06b training loop proper, returning both the per-round model
-    * rows and the final (w, n, seq) VOCABULARY (cached — the caller
-    * unpersists): t06b reads the rows, t06c encodes through the vocab.
+    * rows and the final (w, n, seq) VOCABULARY (checkpointed): t06b
+    * reads the rows, t06c encodes through the vocab.
     * The word column rides along untouched so the trained segmentation
     * stays addressable by word. */
   private[graft] def t06bTrain(spark: SparkSession, dir: String,
@@ -901,7 +897,8 @@ object TextOps {
     * (w, n, seq) vocabulary frame; only the alphabet differs. */
   private[graft] def t06TrainLoop(seq0: DataFrame,
       merges: Int): (Seq[(Long, String, Long, Long)], DataFrame) = {
-    var seqDf = seq0.cache()
+    import org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint
+    var seqDf = seq0.localCheckpoint(eager = false)
     val pairsOf = expr(
       "transform(sequence(1, size(split(trim(seq), '  ')) - 1), " +
         "i -> concat(element_at(split(trim(seq), '  '), i), ' ', " +
@@ -920,11 +917,11 @@ object TextOps {
       val next = seqDf.select(col("w"), col("n"),
         replace(col("seq"), lit(" " + pair.replace(" ", "  ") + " "),
           lit(" " + pair.replace(" ", "") + " ")).as("seq"))
-        .cache()
+        .localCheckpoint(eager = false)
       val pieces = next
         .agg(sum(col("n") * size(split(trim(col("seq")), "  "))).cast("long"))
         .head().getLong(0)
-      seqDf.unpersist()
+      unpersistLocalCheckpoint(seqDf)
       seqDf = next
       (r.toLong, pair, pn, pieces)
     }
@@ -950,7 +947,7 @@ object TextOps {
     val (_, vocab) = t06bTrain(spark, dir, T06bMerges)
     val np = vocab.select(col("w"),
       size(split(trim(col("seq")), "  ")).cast("long").as("np"))
-    val out = docs(spark, dir)
+    docs(spark, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .join(broadcast(np), Seq("w"))
       .groupBy("doc_id")
@@ -958,10 +955,6 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"), col("n_pieces"),
         expr("n_pieces * 10000 div n_tokens").as("pieces_per_token_bp"))
       .orderBy("doc_id")
-    val materialized = out.cache()
-    materialized.count()
-    vocab.unpersist()
-    materialized
   }
 
   /** The t06b trainer in DuckDB — per-round CTEs GENERATED in lockstep
@@ -1053,8 +1046,7 @@ object TextOps {
     * segments through the trained table without any fallback path). */
   def t06dByteBpe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (rows, vocab) = t06dTrain(spark, dir, T06bMerges)
-    vocab.unpersist()
+    val (rows, _) = t06dTrain(spark, dir, T06bMerges)
     rows.toDF("round", "pair", "pair_n", "corpus_pieces").orderBy("round")
   }
 
@@ -1841,7 +1833,7 @@ object TextOps {
   private[graft] def t23TrainOver(spark: SparkSession, words0: DataFrame,
       rounds: Int): DataFrame = {
     import spark.implicits._
-    val words = words0.cache()
+    val words = words0.localCheckpoint(eager = false)
     val subs = words.select(col("n"), explode(expr(
         "flatten(transform(sequence(1, length(w)), i -> " +
           s"transform(sequence(1, least($T23MaxPiece, length(w) - i + 1)), " +
@@ -1875,7 +1867,6 @@ object TextOps {
       model = renorm(sing ++ kept)
       out ++= model.map(m => (r.toLong, m._1, m._2, m._3))
     }
-    words.unpersist()
     out.toSeq.toDF("round", "piece", "cnt", "cost_e4")
       .orderBy("round", "piece")
   }

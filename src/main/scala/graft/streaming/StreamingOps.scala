@@ -1190,16 +1190,8 @@ object StreamingOps {
     val tfAll = spark.table(ctfT)
     val dlAll = (spark.table(dlT) +: deltas("dl")).reduce(_ unionByName _)
     val dfFolded = spark.read.parquet(s"$wh/df_b${latest.get()}")
-    // the serve result is query-bounded — materialize it, then DROP
-    // the per-run compaction table so repeated gate runs in a
-    // long-lived session leak neither catalog entries nor files
-    // (round-17 advice; the t18b base tables stay — they're the
-    // memoized persisted index, released by t18b's own lifecycle)
     val out = TextOps.t18bServeFrames(spark, tfAll, dlAll, dfFolded,
-      spark.read.parquet(s"$wh/st_b${latest.get()}")).localCheckpoint()
-    spark.sql(s"DROP TABLE IF EXISTS $ctfT")
-    graft.core.IO.deleteRecursively(
-      java.nio.file.Paths.get(s"$wh/tf_compact_$ctag"))
+      spark.read.parquet(s"$wh/st_b${latest.get()}"))
     // retention (st20 discipline): df/st versions are CUMULATIVE, so
     // everything below the latest is superseded — mark + vacuum them.
     // The tf/dl delta dirs are NOT superseded (they are live

@@ -48,9 +48,10 @@ object Q {
     try run(spark) finally Session.stop(spark)
   }
 
-  /** Wall seconds of one full execution of `fn` through the noop sink. */
+  /** Wall seconds of one full execution of `fn` through the noop sink,
+    * in its own query lifetime (released after the clock stops). */
   private def once(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => DataFrame): Double = {
+      fn: (SparkSession, String) => DataFrame): Double = Session.scoped(spark) {
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
@@ -62,8 +63,8 @@ object Q {
     for (name <- names) SparkEntryLookup.resolve(name) match {
       case Some(fn) =>
         try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val plan = Session.scoped(spark)(fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
           println(s"EXPLAIN $name ok (${plan.length} chars)")

@@ -23,9 +23,10 @@ object GraftShims {
     *
     * `Dataset.unpersist()` only talks to the CacheManager, so the
     * MEMORY_AND_DISK blocks a localCheckpoint pins (its LogicalRDD)
-    * would otherwise live until the ContextCleaner happens to GC them —
-    * a leak across a long multi-query session. Iterative operators
-    * (Dedup.d07) call this on each superseded round.
+    * would otherwise live until the query's `Session.scoped` lifetime
+    * ends. Iterative operators (Dedup.d07, Similarity.mmrSelect) call
+    * this on each superseded round, so a loop's peak storage stays one
+    * round deep.
     */
   def unpersistLocalCheckpoint(ds: Dataset[_]): Unit = ds match {
     case c: org.apache.spark.sql.classic.Dataset[_] =>
@@ -39,11 +40,19 @@ object GraftShims {
         case o => o
       }
       strip(c.queryExecution.analyzed) match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+        case l: org.apache.spark.sql.execution.LogicalRDD => unpersistRdd(l.rdd.sparkContext, l.rdd.id)
         case _ => ()
       }
     case _ => ()
   }
+
+  /** Release the blocks of persisted RDD `id` and forget it. Unlike
+    * `RDD.unpersist`, this logs no warning per localCheckpoint that its
+    * lineage cannot be recomputed: the callers release only a
+    * superseded round or what a finished query made, which nothing
+    * reads again. */
+  def unpersistRdd(sc: org.apache.spark.SparkContext, id: Int): Unit =
+    sc.unpersistRDD(id, blocking = false)
 
   /** Re-root a checkpointed Dataset on its materialized RDD with FRESH
     * default statistics.

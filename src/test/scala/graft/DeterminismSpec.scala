@@ -109,8 +109,8 @@ class DeterminismSpec extends AnyFunSuite {
     }
 
   for (name <- picks) test(s"$name is invariant to shuffle partitions and AQE") {
-    val Seq(a, b, c) = sessions.map(s =>
-      SparkEntry.queries(name)(s, sf).collect().map(_.toSeq).toSeq)
+    val Seq(a, b, c) = sessions.map(s => graft.core.Session.scoped(s)(
+      SparkEntry.queries(name)(s, sf).collect().map(_.toSeq).toSeq))
     assert(a == b, s"$name diverged between 4 and 13 shuffle partitions")
     assert(a == c, s"$name diverged with AQE off")
   }

@@ -458,20 +458,20 @@ class OperatorSpec extends AnyFunSuite {
     Similarity.s22KnnGraph(spark, sf).count()
     assert(spark.sparkContext.getPersistentRDDs.size == before,
       "a graph-store read must not persist any RDD")
-    // ---- the release path: after releaseGraphStores the session
-    // holds nothing for the graph family, and a rebuild still serves
+    // ---- the release path: a scoped serve consumer leaves no RDD
+    // (its per-query edge checkpoint and walk rounds end with the
+    // query); after releaseGraphStores the session holds nothing for
+    // the graph family, and a rebuild still serves
     val pre = Similarity.s22KnnGraph(spark, sf).collect().toSeq
-    // a serve consumer leaves its transient edge checkpoint REGISTERED
-    // (round-17 advice: these used to linger until GC); release drains
-    // it together with the memos
-    Similarity.s23GraphSearch(spark, sf).count()
-    assert(Similarity.transientPinCount > 0,
-      "a graph serve must register its transient edge checkpoint")
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    assert(graft.core.Session.scoped(spark)(Similarity.s23GraphSearch(spark, sf).count()) > 0)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty,
+      "a scoped graph serve must leave no persisted RDD")
     Similarity.releaseGraphStores(spark)
     assert(Similarity.graphMemoSizes == ((0, 0)),
       "release must clear both graph-family memos")
-    assert(Similarity.transientPinCount == 0,
-      "release must drain the transient serve pins")
+    assert(graft.core.Session.keptBy(spark) == graft.core.Session.Held.empty,
+      "release must release everything the graph builds kept")
     val post = Similarity.s22KnnGraph(spark, sf).collect().toSeq
     assert(pre == post, "rebuild after release must reproduce the store")
     // ---- s30 compaction: base + one fold → exactly one sorted file

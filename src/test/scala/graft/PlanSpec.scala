@@ -501,13 +501,15 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("No Partition Defined"), s"global window crept in:\n$p")
   }
 
-  test("s15 budgeted probe: the probe is in-row, only the budget and final rank windows remain") {
+  test("s15 budgeted probe: one in-row probe and one budget window, no centroid rank window") {
     val p = plan(Similarity.s15AdaptiveProbes(spark, sf))
     // the ranked cells come from one probe_cells projection at
     // S15MaxProbes, their rank from the list position — no join to the
     // centroids and no coarse/fine rank window; the cumulative budget
-    // window over the ranked cells and the final top-k window stay
-    assert(p.contains("probe_cells("), s"s15 has no in-row probe:\n$p")
+    // window runs once, and n_probes is read off its admitted rows
+    assert("probe_cells\\(".r.findAllIn(p).size == 1, s"s15 must probe once, in-row:\n$p")
+    assert("unboundedpreceding\\$\\(\\), -1\\)".r.findAllIn(p).size == 1,
+      s"s15 must run its budget window once:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"a join degraded to a product:\n$p")
     assert(p.contains("windowspecdefinition(qid#") && p.contains("rk2#"),
