@@ -371,15 +371,22 @@ object Bench {
     // scratch dirs are released once all four are timed
     val phaseSplits: Seq[(String, Seq[(String, Double)])] = Session.scoped(spark) {
       val sim = graft.operators.Similarity
-      val s11 = try {
+      // a split that throws reads -1.0 in every timing, and says why
+      def split(name: String, keys: String*)(
+          timings: => Seq[(String, Double)]): Seq[(String, Double)] =
+        try timings catch { case e: Throwable =>
+          System.err.println(s"[bench] phase split $name failed: $e")
+          keys.map(_ -> -1.0)
+        }
+      val s11 = split("s11", "build_sec", "search_sec") {
         val n = graft.core.Tables.count(spark, sfDir, "embeddings")
         val (_, k2) = sim.d12Factors(n)
         var t: (String, String, String, String) = null
         val b = time { t = sim.s11BuildIndex(spark, sfDir) }
         val s = time(force(sim.s11Search(spark, sfDir, t._1, t._2, t._3, t._4, k2)))
         Seq("build_sec" -> b, "search_sec" -> s)
-      } catch { case _: Throwable => Seq("build_sec" -> -1.0, "search_sec" -> -1.0) }
-      val s12 = try {
+      }
+      val s12 = split("s12", "build_sec", "fold_sec", "search_sec") {
         var t: (String, String, String, String, Long, Int) = null
         val b = time { t = sim.s12BuildBase(spark, sfDir) }
         val delta = graft.core.Tables(spark, sfDir, "embeddings")
@@ -388,20 +395,19 @@ object Bench {
         val f = time(sim.s12FoldIn(spark, delta, t._1, t._2, t._3, t._4, t._6))
         val s = time(force(sim.s11Search(spark, sfDir, t._1, t._2, t._3, t._4, t._6)))
         Seq("build_sec" -> b, "fold_sec" -> f, "search_sec" -> s)
-      } catch { case _: Throwable =>
-        Seq("build_sec" -> -1.0, "fold_sec" -> -1.0, "search_sec" -> -1.0) }
+      }
       // s21: same conflation on the binary tier — the one-time
       // signature-store build vs the 16 B/row Hamming serve
-      val s21 = try {
+      val s21 = split("s21", "build_sec", "search_sec") {
         var p: String = null
         val b = time { p = sim.s21BuildSigStore(spark, sfDir) }
         val s = time(force(sim.s21Search(spark, sfDir, p)))
         Seq("build_sec" -> b, "search_sec" -> s)
-      } catch { case _: Throwable => Seq("build_sec" -> -1.0, "search_sec" -> -1.0) }
+      }
       // s23: the graph-serve gate builds the s22 graph in-query (the
       // gate must prove serve-over-the-graph semantics end to end) —
       // split the one-time graph build from the per-query-batch walk
-      val s23 = try {
+      val s23 = split("s23", "build_sec", "walk_sec") {
         var g: org.apache.spark.sql.DataFrame = null
         var seed: org.apache.spark.sql.DataFrame = null
         val b = time {
@@ -414,7 +420,7 @@ object Bench {
             .select(col("vec_id"), col("embedding").cast("array<double>").as("e")),
           g, seed, sim.S23Rounds, sim.S23Beam)))
         Seq("build_sec" -> b, "walk_sec" -> s)
-      } catch { case _: Throwable => Seq("build_sec" -> -1.0, "walk_sec" -> -1.0) }
+      }
       Seq("s11_persisted_ivf_pq" -> s11, "s12_ivf_pq_foldin" -> s12,
         "s21_persisted_binary" -> s21, "s23_graph_search" -> s23)
     }

@@ -52,10 +52,14 @@ object IO {
   }
 
   /** A driver-side memo keyed by a [[Listing]] (with whatever else the
-    * value depends on): a hit starts no Spark job, and a path rewritten
-    * since has another listing, so it misses and is computed afresh. */
-  private[graft] final class ListingMemo[K, V] {
+    * value depends on; `pathOf` names the key's listed path): a hit
+    * starts no Spark job, and a path rewritten since has another
+    * listing, so it misses and is computed afresh. An entry whose path
+    * lies under a scratch dir goes when [[deleteScratch]] deletes the
+    * dir, as no later listing can match it. */
+  private[graft] final class ListingMemo[K, V](pathOf: K => String) {
     private val entries = new java.util.concurrent.ConcurrentHashMap[K, V]()
+    ListingMemo.all.add(this)
 
     /** `key`'s value, computed and stored on a miss; with no key (an
       * unlistable path) it is computed on every call. */
@@ -73,9 +77,36 @@ object IO {
 
     def size: Int = entries.size
     def clear(): Unit = entries.clear()
+
+    private def evictUnder(dirs: Iterable[java.nio.file.Path]): Unit =
+      entries.keySet.removeIf(k => ListingMemo.localPath(pathOf(k)).exists(p => dirs.exists(p.startsWith)))
   }
 
-  private val inferred = new ListingMemo[Listing, org.apache.spark.sql.types.StructType]
+  private[graft] object ListingMemo {
+    private val all = new java.util.concurrent.ConcurrentLinkedQueue[ListingMemo[_, _]]()
+
+    /** The entry count of every memo, in the order they were made. */
+    def sizes: Seq[Int] = {
+      import scala.jdk.CollectionConverters._
+      all.asScala.toSeq.map(_.size)
+    }
+
+    /** Drop every memo's entries whose path lies under one of `dirs`. */
+    def evictUnder(dirs: Iterable[java.nio.file.Path]): Unit = {
+      val roots = dirs.map(_.toAbsolutePath.normalize)
+      if (roots.nonEmpty) all.forEach(_.evictUnder(roots))
+    }
+
+    /** `path` as an absolute local path; None on another file system. */
+    private def localPath(path: String): Option[java.nio.file.Path] = {
+      val uri = new org.apache.hadoop.fs.Path(path).toUri
+      if (uri.getScheme != null && uri.getScheme != "file") None
+      else Some(java.nio.file.Paths.get(uri.getPath).toAbsolutePath.normalize)
+    }
+  }
+
+  private val inferred =
+    new ListingMemo[Listing, org.apache.spark.sql.types.StructType](_._1)
 
   /** Total on-disk size in bytes of a written dataset (file or dir) —
     * powers the compression-ratio metric (reference
@@ -132,9 +163,12 @@ object IO {
     scratchRegistry.asScala.toSet
   }
 
-  /** Delete registered scratch `dirs` and unregister them. */
-  private[graft] def deleteScratch(dirs: Iterable[java.nio.file.Path]): Unit =
+  /** Delete registered scratch `dirs`, unregister them and evict the
+    * memo entries listed under them. */
+  private[graft] def deleteScratch(dirs: Iterable[java.nio.file.Path]): Unit = {
     dirs.foreach { d => deleteRecursively(d); scratchRegistry.remove(d) }
+    ListingMemo.evictUnder(dirs)
+  }
 
   private lazy val scratchRegistry: java.util.Set[java.nio.file.Path] = {
     val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()

@@ -45,7 +45,7 @@ object Tables {
     counts(IO.listing(spark, s"$dir/$name.parquet").filterNot(_._2.exists(_._1.endsWith("/"))))(
       apply(spark, dir, name).count())
 
-  private val counts = new IO.ListingMemo[IO.Listing, Long]
+  private val counts = new IO.ListingMemo[IO.Listing, Long](_._1)
 
   def events(spark: SparkSession, dir: String): DataFrame =
     storedEvents(spark, dir) match { case (raw, ts) => contractTs(raw, ts) }

@@ -271,8 +271,35 @@ object Centroids {
   /** Spark's `round(x, 6)` on a double. */
   private[graft] def round6(x: Double): Double = roundHalfUp(x, 6)
 
+  private val Pow10 = Array.iterate(1.0, 7)(_ * 10)
+
+  /** Spark's `round(x, scale)` on a double, `scale` in 0..6: HALF_UP on
+    * the decimal string ([[roundHalfUpDecimal]]), without the
+    * BigDecimal. y = |x|·10^scale carries less than 4e-7 of error, from
+    * the product and from the decimal string's distance to x, below
+    * 1e9. So floor(y), plus one when its fraction exceeds .5, is the
+    * string's rounded digits whenever that fraction is more than 1e-6
+    * from .5; the digits over 10^scale is the one IEEE division
+    * `BigDecimal.doubleValue` makes of a compact value, and a zero is
+    * +0.0 as there. A near-tie, |y| ≥ 1e9, NaN and ±Inf take the
+    * BigDecimal path. */
+  private[graft] def roundHalfUp(x: Double, scale: Int): Double = {
+    val p = Pow10(scale)
+    val y = math.abs(x) * p
+    if (!(y < 1e9)) roundHalfUpDecimal(x, scale)
+    else {
+      val f = math.floor(y)
+      val frac = y - f
+      if (math.abs(frac - 0.5) <= 1e-6) roundHalfUpDecimal(x, scale)
+      else {
+        val r = if (frac > 0.5) f + 1 else f
+        if (r == 0) 0.0 else math.copySign(r / p, x)
+      }
+    }
+  }
+
   /** Spark's `round(x, scale)` on a double: HALF_UP on the decimal string. */
-  private def roundHalfUp(x: Double, scale: Int): Double =
+  private[graft] def roundHalfUpDecimal(x: Double, scale: Int): Double =
     if (x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 

@@ -268,7 +268,7 @@ object Similarity {
     * Spark job at all. The models are K rows each — the "centroids fit in RAM"
     * assumption their broadcasts already make — and nothing is held in
     * executor storage. */
-  private val trainedModels = new IO.ListingMemo[(IO.Listing, Seq[Any]), Seq[ModelRows]]
+  private val trainedModels = new IO.ListingMemo[(IO.Listing, Seq[Any]), Seq[ModelRows]](_._1._1)
 
   /** Entries in [[trainedModels]] — the memo spec's seam. */
   private[graft] def trainedModelCount: Int = trainedModels.size
@@ -609,10 +609,16 @@ object Similarity {
     * per corpus ([[modelRows]]). */
   private def twoLevelRows(spark: SparkSession, dir: String,
       k1: Int, k2: Int, rounds: Int): (DataFrame, Seq[ModelRows]) =
-    modelRows(spark, dir, "two-level", k1, k2, rounds) { c =>
-      val coarse = trainFlat(c, Tables.count(spark, dir, "embeddings"), rounds, k1)
-      Seq(coarse, trainFine(vectors(c), centroidsOf(coarse._2, keyed = false), k2, rounds))
-    }
+    modelRows(spark, dir, "two-level", k1, k2, rounds)(
+      trainTwoLevel(_, Tables.count(spark, dir, "embeddings"), k1, k2, rounds))
+
+  /** The two-level quantizer's coarse and fine tables over a raw
+    * embeddings frame of `n` rows. */
+  private def trainTwoLevel(corpus: DataFrame, n: Long, k1: Int, k2: Int,
+      rounds: Int): Seq[ModelRows] = {
+    val coarse = trainFlat(corpus, n, rounds, k1)
+    Seq(coarse, trainFine(vectors(corpus), centroidsOf(coarse._2, keyed = false), k2, rounds))
+  }
 
   /** The fine level of [[twoLevelModel]]: stride seeds within each coarse
     * cell of `coarseModel`, refined by `rounds` keyed Lloyd rounds. */
@@ -1087,18 +1093,22 @@ object Similarity {
   /** [[s07Codebooks]]'s table as driver rows, memoized per corpus
     * ([[modelRows]]). */
   private def codebookRows(spark: SparkSession, dir: String, rounds: Int): ModelRows =
-    modelRows(spark, dir, "pq", rounds) { corpus =>
-      import graft.functions.VectorFunctions.nearest_l2
-      val sv = subvecsOf(vectors(corpus), S07Subspaces)
-      val stride = math.max(1L, Tables.count(spark, dir, "embeddings") / S07Codes)
-      val seeds = sv
-        .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < S07Codes)
-        .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
-          col("v").as("cv"))
-      Seq(lloyd(seeds, rounds, keys = 2, "pq") { model =>
-        sv.select(col("sub"), nearest_l2(col("v"), col("sub"), model).as("cid"), col("v"))
-      })
-    }._2.head
+    modelRows(spark, dir, "pq", rounds)(c =>
+      Seq(trainPq(c, Tables.count(spark, dir, "embeddings"), rounds)))._2.head
+
+  /** The PQ codebooks' rounds over a raw embeddings frame of `n` rows. */
+  private def trainPq(corpus: DataFrame, n: Long, rounds: Int): ModelRows = {
+    import graft.functions.VectorFunctions.nearest_l2
+    val sv = subvecsOf(vectors(corpus), S07Subspaces)
+    val stride = math.max(1L, n / S07Codes)
+    val seeds = sv
+      .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < S07Codes)
+      .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
+        col("v").as("cv"))
+    lloyd(seeds, rounds, keys = 2, "pq") { model =>
+      sv.select(col("sub"), nearest_l2(col("v"), col("sub"), model).as("cid"), col("v"))
+    }
+  }
 
   /** The IVF-PQ code rows (vec_id, sub, code, cell) of (vec_id, e) rows
     * under a trained model's tables — coarse `cc` (cid, ce, …), fine
@@ -1447,38 +1457,58 @@ object Similarity {
   /** Build the PERSISTED IVF-PQ index over the corpus — the
     * train-once / serve-many deploy lifecycle s09's in-gate training
     * only sketches (the d13 persisted-index pattern applied to MODELS):
-    * coarse + fine centroid tables (k1 + k1·k2 rows — tiny), the PQ
-    * codebooks (M·16 rows), and the cell-keyed code store BUCKETED by
-    * cell and sorted within buckets, so a query batch's probe join
-    * reads the codes co-located with ZERO corpus-side exchange and the
-    * corpus is scanned/encoded EXACTLY once, at ingest. The codes are
-    * [[codeRows]] of the corpus under the memoized model rows (no job
-    * to fetch them), hash-partitioned on cell into one partition per
-    * bucket, so each writing task writes exactly one bucket file. Each
-    * model table's rows seed the stored-model memo ([[storedRows]]), so
-    * the fold-in and the search that follow read none of them back. */
+    * the memoized two-level quantizer and PQ codebooks of `dir`
+    * ([[twoLevelRows]], [[codebookRows]]), stored by [[persistIndex]]. */
   private[graft] def s11BuildIndex(
       spark: SparkSession, dir: String): (String, String, String, String) =
     described(spark, "ivfpq build codes") {
-      val wh = graft.core.IO.scratchDir("graft-s11")
-      val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val (codesT, ccT, fcT, cbT) = (s"graft_s11_codes_$tag", s"graft_s11_cc_$tag",
-        s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
       val (k1, k2) = d12Factors(Tables.count(spark, dir, "embeddings"))
       val (_, Seq(cc, fc)) = twoLevelRows(spark, dir, k1, k2, LloydRounds)
-      val cb = codebookRows(spark, dir, S07Rounds)
-      codeRows(emb(spark, dir), cc._2, fc._2, cb._2, k2)
-        .repartition(Dedup.D13Buckets, col("cell"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
-        .option("path", s"$wh/codes_$tag").saveAsTable(codesT)
-      for ((model, name, t) <- Seq((cc, "cc", ccT), (fc, "fc", fcT), (cb, "cb", cbT))) {
-        frameOf(spark, model).write.mode("overwrite").format("parquet")
-          .option("path", s"$wh/${name}_$tag").saveAsTable(t)
-        storedModels.seed(storedKey(spark, t), model._2)
-      }
-      (codesT, ccT, fcT, cbT)
+      persistIndex(spark, emb(spark, dir), cc, fc, codebookRows(spark, dir, S07Rounds), k2)
     }
+
+  /** Persist an IVF-PQ index of (vec_id, e) rows `vecs` under trained
+    * model tables: coarse + fine centroid tables (k1 + k1·k2 rows —
+    * tiny), the PQ codebooks (M·16 rows), and the cell-keyed code store
+    * BUCKETED by cell and sorted within buckets, so a query batch's
+    * probe join reads the codes co-located with ZERO corpus-side
+    * exchange and the corpus is scanned/encoded EXACTLY once, at
+    * ingest. The codes are [[codeRows]] of `vecs` (no job to fetch the
+    * model), written whole bucket by whole bucket ([[bucketedCodes]]).
+    * Each model table's rows seed the stored-model memo
+    * ([[storedRows]]), so the fold-in and the search that follow read
+    * none of them back. Returns the (codes, coarse, fine, codebook)
+    * table names. */
+  private def persistIndex(spark: SparkSession, vecs: DataFrame, cc: ModelRows,
+      fc: ModelRows, cb: ModelRows, k2: Int): (String, String, String, String) = {
+    val wh = graft.core.IO.scratchDir("graft-s11")
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+    val (codesT, ccT, fcT, cbT) = (s"graft_s11_codes_$tag", s"graft_s11_cc_$tag",
+      s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
+    bucketedCodes(codeRows(vecs, cc._2, fc._2, cb._2, k2)).mode("overwrite")
+      .option("path", s"$wh/codes_$tag").saveAsTable(codesT)
+    for ((model, name, t) <- Seq((cc, "cc", ccT), (fc, "fc", fcT), (cb, "cb", cbT))) {
+      frameOf(spark, model).write.mode("overwrite").format("parquet")
+        .option("path", s"$wh/${name}_$tag").saveAsTable(t)
+      storedModels.seed(storedKey(spark, t), model._2)
+    }
+    (codesT, ccT, fcT, cbT)
+  }
+
+  /** The writer of code rows into the store's layout: [[Dedup.D13Buckets]]
+    * buckets on cell, sorted by cell, from gcd([[Dedup.D13Buckets]],
+    * shuffle partitions) tasks hash-partitioned on cell — 4 under
+    * `local[4]`, 16 at 32 cores. Spark's bucket id and its hash
+    * partition are the same `pmod(murmur3(cell), ·)` and the task count
+    * divides the bucket count, so every bucket lies in one task: each
+    * write lands exactly one file per non-empty bucket, without a task
+    * per bucket. */
+  private def bucketedCodes(codes: DataFrame) = {
+    val tasks = BigInt(Dedup.D13Buckets)
+      .gcd(codes.sparkSession.sessionState.conf.numShufflePartitions).toInt
+    codes.repartition(tasks, col("cell")).write.format("parquet")
+      .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
+  }
 
   /** s11: IVF-PQ search against the PERSISTED index — the serving face
     * of s09. s09 certifies the composition's semantics but retrains
@@ -1534,7 +1564,7 @@ object Similarity {
     * [[IO.readParquet]] / [[trainedModels]] pattern: [[s11BuildIndex]]
     * seeds it with the rows it wrote, and a hit starts no Spark job.
     * The tables are K rows each, as the trained models are. */
-  private val storedModels = new IO.ListingMemo[IO.Listing, Seq[Row]]
+  private val storedModels = new IO.ListingMemo[IO.Listing, Seq[Row]](_._1)
 
   /** The memo key of catalog table `t`: its location's listing. */
   private def storedKey(spark: SparkSession, t: String): Option[IO.Listing] =
@@ -1573,8 +1603,9 @@ object Similarity {
     * the retrieval-side ingest cycle and d13/m08's fold-in discipline
     * applied to the code store (round-12 verdict item 1): the delta's
     * cell-keyed codes append with the IDENTICAL cell bucketing (Spark
-    * validates the spec against the catalog), one partition per bucket
-    * so the append adds at most one file per bucket, and the next query
+    * validates the spec against the catalog), whole buckets per write
+    * task ([[bucketedCodes]]), so the append adds exactly one file per
+    * bucket it touches, and the next query
     * batch searches corpus ∪ delta with zero recompute of either; the
     * bucketed serve path ([[s11Search]]) keeps its zero-exchange
     * property over the folded store. The stored centroids/codebooks
@@ -1584,31 +1615,30 @@ object Similarity {
   private[graft] def s12FoldIn(spark: SparkSession, delta: DataFrame,
       codesT: String, ccT: String, fcT: String, cbT: String, k2: Int): Unit =
     described(spark, "ivfpq fold-in") {
-      s12AssignEncode(spark, delta, ccT, fcT, cbT, k2)
-        .repartition(Dedup.D13Buckets, col("cell"))
-        .write.mode("append").format("parquet")
-        .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
-        .saveAsTable(codesT)
+      bucketedCodes(s12AssignEncode(spark, delta, ccT, fcT, cbT, k2))
+        .mode("append").saveAsTable(codesT)
     }
 
   /** The BUILD half of the s12 gate: persist the IVF-PQ index over the
-    * BASE slice (vec_id < n·[[S12BaseNum]]/[[S12BaseDen]]) — the base
-    * lands as a scratch corpus dir so [[s11BuildIndex]]'s train+persist
-    * machinery runs on it verbatim. Returns the stored table names plus
-    * (nBase, k2) — the frozen geometry every later fold/search reuses. */
+    * BASE slice (vec_id < nBase = n·[[S12BaseNum]]/[[S12BaseDen]]). The
+    * two-level quantizer and the PQ codebooks train in place on the
+    * filtered corpus scan with n = nBase (the slice's row count, vec_id
+    * being 0 until n) — no copy of the slice is written or read back —
+    * and [[persistIndex]] stores them as [[s11BuildIndex]] does. The
+    * slice's models train on every call and take no memo entry. Returns
+    * the stored table names plus (nBase, k2) — the frozen geometry every
+    * later fold/search reuses. */
   private[graft] def s12BuildBase(spark: SparkSession,
-      dir: String): (String, String, String, String, Long, Int) = {
-    val n = Tables.count(spark, dir, "embeddings")
-    val nBase = n * S12BaseNum / S12BaseDen
-    val baseDir = graft.core.IO.scratchDir("graft-s12")
-    described(spark, "ivfpq build base slice") {
-      Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
-        .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
+      dir: String): (String, String, String, String, Long, Int) =
+    described(spark, "ivfpq build codes") {
+      val nBase = Tables.count(spark, dir, "embeddings") * S12BaseNum / S12BaseDen
+      val (k1, k2) = d12Factors(nBase)
+      val base = Tables(spark, dir, "embeddings").filter(col("vec_id") < nBase)
+      val Seq(cc, fc) = trainTwoLevel(base, nBase, k1, k2, LloydRounds)
+      val (codesT, ccT, fcT, cbT) =
+        persistIndex(spark, vectors(base), cc, fc, trainPq(base, nBase, S07Rounds), k2)
+      (codesT, ccT, fcT, cbT, nBase, k2)
     }
-    val (codesT, ccT, fcT, cbT) = s11BuildIndex(spark, baseDir)
-    val (_, k2) = d12Factors(nBase)
-    (codesT, ccT, fcT, cbT, nBase, k2)
-  }
 
   /** s12: INCREMENTAL fold-in for the persisted IVF-PQ index — the
     * last lifecycle gap on the retrieval side (round-12 verdict item
@@ -1640,9 +1670,8 @@ object Similarity {
 
   /** COMPACT the folded code store into a fresh table with the
     * IDENTICAL bucket spec — the maintenance op every fold-in index
-    * eventually needs: each [[s12FoldIn]] append lands its own files
-    * into every bucket (and the base build itself writes one file per
-    * writing task per bucket), so after many ingest cycles a bucket is
+    * eventually needs: each [[s12FoldIn]] append lands one more file
+    * into every bucket it touches, so after many ingest cycles a bucket is
     * a pile of slivers and the serve scan's open/seek overhead grows
     * with ingest COUNT rather than data size. Compaction reads each
     * bucket back as ONE partition (the bucketed scan is forced on via

@@ -49,13 +49,22 @@ class CodeStoreSpec extends AnyFunSuite {
     g.size
   }
 
-  private def dataFiles(table: String): Int = {
+  /** The data files of catalog table `table`: name → bucket id, read
+    * from the `_000NN` suffix Spark gives a bucket's file. */
+  private def fileBuckets(table: String): Map[String, Int] = {
     import scala.jdk.CollectionConverters._
     val loc = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table)).location
+    val suffix = """.*_(\d{5})\..*\.parquet""".r
     java.nio.file.Files.list(java.nio.file.Paths.get(loc)).iterator().asScala
-      .count(_.getFileName.toString.endsWith(".parquet"))
+      .map(_.getFileName.toString).collect { case f @ suffix(id) => f -> id.toInt }.toMap
   }
+
+  /** The bucket ids `codes`' rows fall in: Spark's bucket id of a cell
+    * is pmod(murmur3(cell), buckets), which `hash` computes. */
+  private def bucketsOf(codes: DataFrame): Seq[Int] =
+    codes.select(pmod(hash(col("cell")), lit(Dedup.D13Buckets))).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
 
   private def drop(tables: String*): Unit =
     tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -100,31 +109,47 @@ class CodeStoreSpec extends AnyFunSuite {
   }
 
   test("the code store gets one file per bucket from the build and from each fold-in; every job names its phase") {
+    // exactly one file per non-empty bucket id, at 1, 4, 13 and 32 shuffle partitions
     // a four-file corpus: four scan tasks, each of which would write its
     // own file into every bucket it holds without the partitioning on cell
     val dir = IO.scratchDir("graft-codefiles")
     Tables(spark, sf, "embeddings").repartition(4).write.parquet(s"$dir/embeddings.parquet")
     val all = Similarity.emb(spark, dir)
     assert(all.rdd.getNumPartitions > 1, "the corpus must scan as several tasks")
+    val k2 = Similarity.d12Factors(Tables.count(spark, dir, "embeddings"))._2
+    // a delta over every cell, and one of ten vectors, which leaves buckets empty
+    val deltas = Seq(
+      "whole-corpus" -> all.withColumn("vec_id", col("vec_id") + 1000000L),
+      "ten-row" -> all.filter(col("vec_id") < 10).withColumn("vec_id", col("vec_id") + 2000000L))
     val sc = spark.sparkContext
-    sc.setJobDescription("caller")
-    val ((codesT, ccT, fcT, cbT), build) = TestSpark.jobs(Similarity.s11BuildIndex(spark, dir))
-    try {
-      assert(dataFiles(codesT) <= Dedup.D13Buckets, s"${dataFiles(codesT)} files after the build")
-      val k2 = Similarity.d12Factors(Tables.count(spark, dir, "embeddings"))._2
-      val n = spark.table(codesT).count()
-      val (_, fold) = TestSpark.jobs(Similarity.s12FoldIn(spark,
-        all.withColumn("vec_id", col("vec_id") + 1000000L), codesT, ccT, fcT, cbT, k2))
-      assert(spark.table(codesT).count() == 2 * n, "the fold-in appends a code row per delta row")
-      assert(dataFiles(codesT) <= 2 * Dedup.D13Buckets, s"${dataFiles(codesT)} files after one fold-in")
-      assert(sc.getLocalProperty("spark.job.description") == "caller",
-        "the caller's job description must be restored")
-      val unnamed = (build ++ fold).filterNot(_.startsWith("ivfpq "))
-      assert(unnamed.isEmpty, s"jobs without an ivfpq phase: $unnamed")
-      assert(fold.nonEmpty && fold.forall(_ == "ivfpq fold-in"), s"fold-in jobs: $fold")
-    } finally {
-      sc.setJobDescription(null)
-      drop(codesT, ccT, fcT, cbT)
+    for (partitions <- Seq("1", "4", "13", "32")) TestSpark.withConfs(partitions, "true") {
+      val at = s"shuffle.partitions=$partitions"
+      sc.setJobDescription("caller")
+      val ((codesT, ccT, fcT, cbT), build) = TestSpark.jobs(Similarity.s11BuildIndex(spark, dir))
+      try {
+        var files = fileBuckets(codesT)
+        assert(files.values.toSeq.sorted == bucketsOf(spark.table(codesT)),
+          s"bucket ids of the build's files ($at): ${files.values.toSeq.sorted}")
+        val n = spark.table(codesT).count()
+        for ((what, delta) <- deltas) {
+          val (_, fold) = TestSpark.jobs(Similarity.s12FoldIn(spark, delta, codesT, ccT, fcT, cbT, k2))
+          val now = fileBuckets(codesT)
+          val added = (now -- files.keySet).values.toSeq.sorted
+          assert(added == bucketsOf(Similarity.s12AssignEncode(spark, delta, ccT, fcT, cbT, k2)),
+            s"bucket ids of the $what fold-in's files ($at): $added")
+          assert(fold.nonEmpty && fold.forall(_ == "ivfpq fold-in"), s"$what fold-in jobs ($at): $fold")
+          files = now
+        }
+        assert(spark.table(codesT).count() == 2 * n + 10 * Similarity.S07Subspaces,
+          s"the fold-ins append a code row per delta row and subspace ($at)")
+        assert(sc.getLocalProperty("spark.job.description") == "caller",
+          "the caller's job description must be restored")
+        val unnamed = build.filterNot(_.startsWith("ivfpq "))
+        assert(unnamed.isEmpty, s"build jobs without an ivfpq phase ($at): $unnamed")
+      } finally {
+        sc.setJobDescription(null)
+        drop(codesT, ccT, fcT, cbT)
+      }
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Session
+import graft.core.{IO, Session}
 import graft.operators.Similarity
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,6 +32,22 @@ class LeakSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(left == Session.Held.empty, s"$name left $left")
       assert(spark.streams.active.map(_.id).toSet == streams, s"$name left a stream running")
     }
+
+  test("a second scoped pass of the IVF and pipeline queries leaves every listing memo as the first did") {
+    // each pass lists fresh scratch dirs (persisted stores, staged
+    // corpora); their memo entries must go with the dirs
+    val families = Seq("s03_", "s04_", "s06_", "s09_", "s10_", "s11_", "s12_", "s13_", "s15_",
+      "s16_", "s17_", "s19_", "d11_", "d12_", "st10_", "e0")
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => families.exists(n.startsWith))
+    def pass(): Seq[Int] = {
+      for (name <- names) Session.scoped(spark)(
+        SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save())
+      IO.ListingMemo.sizes
+    }
+    val first = pass()
+    val second = pass()
+    assert(second == first, s"memo sizes after pass 1 $first, after pass 2 $second, over $names")
+  }
 
   test("the queries left out are gate queries") {
     assert(leftOut.keySet.subsetOf(SparkEntry.queries.keySet))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{IO, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, GraftShims, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -114,6 +114,31 @@ class TrainerSpec extends AnyFunSuite {
         rows(Reference.codebooks(sf, Similarity.S07Rounds,
           Similarity.S07Subspaces, Similarity.S07Codes)),
         s"s07 codebooks diverged ($at)")
+    }
+  }
+
+  test("s12's base build stores the models trained over a written copy of the base slice, with no memo entry and no graft-s12 dir") {
+    val nBase = Tables.count(spark, sf, "embeddings") * Similarity.S12BaseNum / Similarity.S12BaseDen
+    val copy = IO.scratchDir("graft-s12copy")
+    Tables(spark, sf, "embeddings").filter(col("vec_id") < nBase)
+      .write.parquet(s"$copy/embeddings.parquet")
+    val (k1, k2) = Similarity.d12Factors(nBase)
+    for (partitions <- Seq("1", "4"); aqe <- Seq("true", "false")) TestSpark.withConfs(partitions, aqe) {
+      val at = s"shuffle.partitions=$partitions, AQE=$aqe"
+      Similarity.clearTrainedModels()
+      val dirs = IO.scratchDirs
+      val (codesT, ccT, fcT, cbT, builtBase, builtK2) = Similarity.s12BuildBase(spark, sf)
+      try {
+        assert(Similarity.trainedModelCount == 0, s"the base build took a memo entry ($at)")
+        val made = (IO.scratchDirs -- dirs).map(_.getFileName.toString)
+        assert(!made.exists(_.startsWith("graft-s12")), s"the base build made a slice dir ($at): $made")
+        assert((builtBase, builtK2) == (nBase, k2), s"base geometry ($at)")
+        val (cc, fc, _) = Similarity.twoLevelModel(spark, copy, k1, k2, Similarity.LloydRounds)
+        assert(rows(spark.table(ccT)) == rows(cc), s"stored coarse centroids diverged ($at)")
+        assert(rows(spark.table(fcT)) == rows(fc), s"stored fine centroids diverged ($at)")
+        assert(rows(spark.table(cbT)) == rows(Similarity.s07Codebooks(spark, copy, Similarity.S07Rounds)),
+          s"stored codebooks diverged ($at)")
+      } finally Seq(codesT, ccT, fcT, cbT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
